@@ -3,9 +3,10 @@
 Reference parity: ``opteryx/cursor.py:39-66,175-239`` (Cursor extends a
 DataFrame with execute/fetchone/description/rowcount) and
 ``opteryx/__init__.py:150-264`` (``query``, ``query_to_arrow``).  Here the
-cursor is a thin wrapper: the plan lives in Spark; fetches pull through
-``toLocalIterator``/Arrow so the driver never materializes more than the
-caller asks for.
+cursor is a thin wrapper: the plan lives in Spark, and the first fetch of a
+statement materializes its whole result in the Python process once, as one
+Arrow table (``df.toArrow()``), which every fetch method, ``rowcount`` and
+``arrow()`` then read — as the reference cursor holds its result.
 """
 
 from __future__ import annotations
@@ -15,7 +16,7 @@ from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 
-from opteryx_spark import rewriter
+from opteryx_spark import results, rewriter
 from opteryx_spark.session import get_session
 from opteryx_spark.sources import registry as _registry_mod
 from opteryx_spark.sources.registry import SourceRegistry, read_any
@@ -226,8 +227,12 @@ class Cursor:
     def __init__(self, connection: Connection):
         self._conn = connection
         self._df: DataFrame | None = None
-        self._iter = None
-        self._rowcount: int | None = None
+        self._clear_result()
+
+    def _clear_result(self) -> None:
+        self._table = None  # the statement's result, fetched once
+        self._rows: list[tuple] | None = None  # the same rows as tuples
+        self._pos = 0  # PEP-249 fetch position in _rows
 
     # -- execution ----------------------------------------------------------
 
@@ -257,8 +262,7 @@ class Cursor:
                 ):
                     raise errors.wrap_spark_error(exc) from exc
                 raise
-        self._iter = None
-        self._rowcount = None
+        self._clear_result()
         return self
 
     def _execute_one(self, spark: SparkSession, stmt: str, params) -> DataFrame | None:
@@ -605,48 +609,53 @@ class Cursor:
             for f in self._df.schema.fields
         ]
 
+    def _all_rows(self) -> list[tuple]:
+        """The result as tuples, converted from the Arrow table unless a
+        column's type needs the ``collect`` fallback."""
+        if self._rows is None:
+            if results.arrow_convertible(self.df.schema):
+                binary = results.binary_type(self._conn.spark)
+                self._rows = results.table_rows(self.arrow(), binary)
+            else:
+                self._rows = results.collect_rows(self.df)
+        return self._rows
+
     @property
     def rowcount(self) -> int:
-        if self._rowcount is None:
-            self._rowcount = self.df.count()
-        return self._rowcount
+        if self._rows is None and results.arrow_convertible(self.df.schema):
+            return self.arrow().num_rows
+        return len(self._all_rows())
+
+    def _advance(self, n: int | None) -> list[tuple]:
+        """The next ``n`` rows (all that remain for None); moves the position."""
+        rows = self._all_rows()
+        start = self._pos
+        self._pos = len(rows) if n is None else min(start + n, len(rows))
+        return rows[start : self._pos]
 
     def fetchone(self):
-        if self._iter is None:
-            self._iter = self.df.toLocalIterator()
-        try:
-            return tuple(next(self._iter))
-        except StopIteration:
-            return None
+        row = self._advance(1)
+        return row[0] if row else None
 
     def fetchmany(self, size: int | None = None):
-        size = size or self.arraysize
-        out = []
-        for _ in range(size):
-            row = self.fetchone()
-            if row is None:
-                break
-            out.append(row)
-        return out
+        return self._advance(size or self.arraysize)
 
     def fetchall(self):
-        return [tuple(r) for r in self.df.collect()]
+        return self._advance(None)
 
     def arrow(self):
-        """Results as a pyarrow.Table (reference ``execute_to_arrow``)."""
-        df = self.df
-        if hasattr(df, "toArrow"):
-            return df.toArrow()
-        import pyarrow as pa
-
-        return pa.Table.from_pandas(df.toPandas())
+        """Results as a pyarrow.Table (reference ``execute_to_arrow``): the
+        statement's buffered result, so fetching rows too runs it once."""
+        if self._table is None:
+            self._table = self.df.toArrow()
+        return self._table
 
     def pandas(self):
         return self.df.toPandas()
 
     def close(self) -> None:
         self._df = None
-        self._iter = None
+        self._clear_result()
 
 
 import re as _re2

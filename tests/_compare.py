@@ -3,7 +3,8 @@ comparison between a Spark DataFrame and a DuckDB oracle result.
 
 Values are compared exactly (order-insensitive, columns sorted by name) —
 the same bar the driver's value-hash sets, so a pass here predicts a pass
-in CORRECTNESS_r{N}.json.
+in CORRECTNESS_r{N}.json.  ``same_values`` is the stricter bar for two
+Spark result paths: equal values of the same Python type, all the way down.
 """
 
 from __future__ import annotations
@@ -11,6 +12,32 @@ from __future__ import annotations
 import datetime
 import math
 from decimal import Decimal
+
+from pyspark.sql.types import VariantVal
+
+
+def same_values(a, b) -> bool:
+    """``a == b`` with equal Python types at every level; NaN equals NaN,
+    a ``Row`` also carries its field names and a variant compares its
+    bytes (``VariantVal`` has no ``__eq__``)."""
+    if type(a) is not type(b):
+        return False
+    if isinstance(a, float) and math.isnan(a):
+        return math.isnan(b)
+    if isinstance(a, (tuple, list)):
+        return (
+            len(a) == len(b)
+            and getattr(a, "__fields__", None) == getattr(b, "__fields__", None)
+            and all(same_values(x, y) for x, y in zip(a, b))
+        )
+    if isinstance(a, dict):  # order not compared: collect's is a Java HashMap's
+        keys = sorted(a, key=repr)
+        return same_values(keys, sorted(b, key=repr)) and all(
+            same_values(a[k], b[k]) for k in keys
+        )
+    if isinstance(a, VariantVal):
+        return (a.value, a.metadata) == (b.value, b.metadata)
+    return a == b
 
 
 def _canon_value(v):

@@ -2,10 +2,15 @@
 
 from __future__ import annotations
 
+import os
+import time
+
 import pytest
 
 import opteryx_spark as ox
+from opteryx_spark import results
 from opteryx_spark.catalog import register_sf_dir
+from tests._compare import same_values
 
 
 @pytest.fixture(scope="module")
@@ -22,10 +27,16 @@ def test_basic_query(conn):
 
 
 def test_fetch_protocol(conn):
+    """PEP-249: fetchone, fetchmany and fetchall share one position."""
     cur = conn.cursor().execute("SELECT n_nationkey FROM nation ORDER BY 1")
     assert cur.fetchone() == (0,)
     assert cur.fetchmany(2) == [(1,), (2,)]
+    assert cur.fetchall() == [(k,) for k in range(3, 25)]
+    assert cur.fetchone() is None
+    assert cur.fetchmany(5) == [] and cur.fetchall() == []
     assert cur.rowcount == 25
+    cur.execute("SELECT n_nationkey FROM nation ORDER BY 1")  # resets it
+    assert len(cur.fetchall()) == 25
 
 
 def test_arrow_and_pandas(conn):
@@ -33,6 +44,110 @@ def test_arrow_and_pandas(conn):
     tbl = cur.arrow()
     assert tbl.num_rows == 3
     assert cur.pandas().shape == (3, 1)
+
+
+def _jobs(spark, group, action) -> int:
+    """Spark jobs ``action`` starts, counted under its own job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        action()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_rowcount_and_arrow_reuse_the_fetched_result(conn, spark):
+    sql = "SELECT n_regionkey, COUNT(*) AS n FROM nation GROUP BY 1"
+    cur = conn.cursor().execute(sql)
+    assert cur.rowcount == len(cur.fetchall()) == 5
+    cur = conn.cursor().execute(sql)
+    assert len(cur.fetchall()) == cur.rowcount == 5
+
+    def fetch_only():
+        conn.cursor().execute(sql).fetchall()
+
+    def fetch_then_reuse():
+        cur = conn.cursor().execute(sql)
+        rows = cur.fetchall()
+        assert cur.rowcount == len(rows) and cur.arrow().num_rows == len(rows)
+        assert cur.arrow() is cur.arrow()
+
+    alone = _jobs(spark, "cursor-fetch-only", fetch_only)
+    assert alone > 0
+    assert _jobs(spark, "cursor-fetch-reuse", fetch_then_reuse) <= alone
+
+
+# (name, SQL, whether the Arrow path carries it); every case must fetch
+# exactly what tuple(row) from .collect() holds, value and Python type
+FETCH_CASES = [
+    ("decimal", "SELECT CAST(x AS DECIMAL(28,4)) d FROM VALUES (1.5), (NULL), (0), "
+     "(-123456789012.1234) t(x)", True),
+    ("timestamp", "SELECT TIMESTAMP'2024-03-10 02:30:00' a, TIMESTAMP'1900-01-01 "
+     "00:00:00.123456' b, CAST(NULL AS TIMESTAMP) c", True),
+    ("timestamp_ntz", "SELECT TIMESTAMP_NTZ'2024-03-10 02:30:00.5' a, "
+     "CAST(NULL AS TIMESTAMP_NTZ) b UNION ALL SELECT TIMESTAMP_NTZ'1901-12-31 "
+     "23:59:59.999999', TIMESTAMP_NTZ'2000-01-01 00:00:00'", True),
+    ("date", "SELECT DATE'2024-02-29' d, CAST(NULL AS DATE) n "
+     "UNION ALL SELECT DATE'0001-01-01', DATE'9999-12-31'", True),
+    ("binary", "SELECT X'00FF10' b, CAST(NULL AS BINARY) n, array(X'01') a, "
+     "map('k', X'02') m", True),
+    ("array_int_null", "SELECT array(1, NULL, 3) a, CAST(NULL AS ARRAY<INT>) n", True),
+    ("struct", "SELECT named_struct('x', id, 'y', CAST(id AS STRING)) s, "
+     "IF(id = 0, NULL, named_struct('x', IF(id = 1, NULL, id))) n FROM range(3)", True),
+    ("map", "SELECT map('a', 1, 'b', NULL) m UNION ALL SELECT NULL", True),
+    ("array_struct", "SELECT array(named_struct('x', id, 't', DATE'2020-01-01'), "
+     "named_struct('x', id + 1, 't', DATE'2020-01-02')) a FROM range(2)", True),
+    ("map_string_array_int", "SELECT map('k', array(1, NULL), 'j', "
+     "CAST(NULL AS ARRAY<INT>)) m UNION ALL SELECT map('e', array())", True),
+    ("all_null", "SELECT NULL AS n, CAST(NULL AS INT) i, CAST(NULL AS STRING) s "
+     "FROM range(3)", True),
+    ("nan_inf", "SELECT CAST(x AS DOUBLE) d FROM VALUES ('NaN'), ('Infinity'), "
+     "('-Infinity'), ('-0.0'), (NULL) t(x)", True),
+    ("float32", "SELECT CAST(x AS FLOAT) f, CAST(x AS FLOAT) + 0 g FROM VALUES "
+     "('0.1'), ('NaN'), ('3.4e38') t(x)", True),
+    ("day_time_interval", "SELECT INTERVAL '1 02:03:04.5' DAY TO SECOND i, "
+     "-INTERVAL '3' HOUR j", True),
+    ("year_month_interval", "SELECT INTERVAL '5-6' YEAR TO MONTH ym", True),
+    ("empty", "SELECT id, CAST(id AS STRING) s, array(id) a FROM range(0)", True),
+    ("variant", "SELECT parse_json('{\"a\": [1, null]}') v, 1 AS i", False),
+    ("null_struct_not_null_field", "SELECT IF(id = 0, NULL, named_struct('x', id)) s "
+     "FROM range(2)", False),
+]
+
+
+@pytest.mark.parametrize("session_tz", ["UTC", "America/New_York"])
+@pytest.mark.parametrize("name,sql,arrow", FETCH_CASES, ids=[c[0] for c in FETCH_CASES])
+def test_fetch_types_match_collect(conn, spark, name, sql, arrow, session_tz):
+    """The New York leg also changes what the conversion reads: the process-
+    local zone (TIMESTAMP is naive in it) and binaryAsBytes (bytearray)."""
+    prev_tz, prev_local = spark.conf.get("spark.sql.session.timeZone"), os.environ.get("TZ")
+    spark.conf.set("spark.sql.session.timeZone", session_tz)
+    if session_tz != "UTC":
+        spark.conf.set("spark.sql.execution.pyspark.binaryAsBytes", "false")
+        os.environ["TZ"] = "Asia/Kolkata"
+        time.tzset()
+    try:
+        cur = conn.cursor().execute(sql)
+        assert results.arrow_convertible(cur.df.schema) is arrow
+        want = [tuple(r) for r in cur.df.collect()]
+        got = cur.fetchall()
+        assert len(got) == len(want) and all(map(same_values, want, got)), (want, got)
+        cur.execute(sql)
+        first = cur.fetchone()
+        got = ([] if first is None else [first]) + cur.fetchmany(2) + cur.fetchall()
+        assert len(got) == len(want) and all(map(same_values, want, got)), (want, got)
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", prev_tz)
+        spark.conf.unset("spark.sql.execution.pyspark.binaryAsBytes")
+        if prev_local is None:
+            os.environ.pop("TZ", None)
+        else:
+            os.environ["TZ"] = prev_local
+        time.tzset()
+    if name == "struct":
+        assert [r[0].x for r in got] == [0, 1, 2]
 
 
 def test_json_operator_sql(conn):
