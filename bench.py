@@ -266,7 +266,6 @@ def _split_defs(spark, sf_dir, work):
         curate.curate_rewrite_corpus(base.unionByName(copies)).write.mode(
             "overwrite"
         ).parquet(f"{work}/curate_rewritten")
-        D.release_text_group_caches()
 
     def cur_probe():
         return curate.curate_gate_outcomes(
@@ -295,15 +294,18 @@ def _time_split(spark, sf_dir, names, runs):
     step down slightly in r11 and carried no spread).  A probe may
     assume warm: (a) the artifact parquet written above (page cache),
     (b) JVM/codegen from the build and its own untimed warmup rep, and
-    (c) the operator-internal `_track_persist` caches its FIRST
-    invocation populated (repeated identical persists alias one cache
-    entry — the r10 registry fix).  A probe may NOT assume any cache
-    populated by a different entry; builds start from the suite tables
+    (c) the operator-internal `cache.persist` caches its untimed warmup
+    rep populated (one `cache_scope()` spans an entry's runs, and repeated
+    identical persists alias one cache entry).  A probe may NOT assume any
+    cache populated by a different entry (each entry's scope is released
+    before the next one starts); builds start from the suite tables
     only."""
     import shutil
     import statistics
     import tempfile
     import types as _types
+
+    from opteryx_spark.cache import cache_scope
 
     work = tempfile.mkdtemp(prefix="bench_artifacts_")
     try:
@@ -314,40 +316,41 @@ def _time_split(spark, sf_dir, names, runs):
         probe_reg = {}
         for name in names:
             build, probe = defs[name]
-            if runs > 1:
-                build()  # untimed warmup: page-cache fill + codegen
-            bsamples = []
-            for _ in range(max(1, runs)):
-                start = time.perf_counter()
-                build()
-                bsamples.append(time.perf_counter() - start)
-            bmed = statistics.median(bsamples)
-            if runs > 1:
-                # same spread-escalation idea as _time_queries, capped at
-                # 7 reps (builds are the most expensive timed units); if
-                # still noisy, record the quietest contiguous 3-rep window
-                for extra in (2, 2):
-                    if not bmed or _spread(bsamples, bmed) <= 0.35:
-                        break
-                    for _ in range(extra):
-                        start = time.perf_counter()
-                        build()
-                        bsamples.append(time.perf_counter() - start)
-                    bmed = statistics.median(bsamples)
-                if bmed and _spread(bsamples, bmed) > 0.35 and len(bsamples) >= 5:
-                    best = None
-                    for i in range(len(bsamples) - 2):
-                        win = bsamples[i : i + 3]
-                        wmed = statistics.median(win)
-                        wsp = _spread(win, wmed)
-                        if best is None or wsp < best[1]:
-                            best = (wmed, wsp)
-                    bmed = best[0]
-                    b_spreads[name] = best[1]
+            with cache_scope():  # shared by the build's runs, released after
+                if runs > 1:
+                    build()  # untimed warmup: page-cache fill + codegen
+                bsamples = []
+                for _ in range(max(1, runs)):
+                    start = time.perf_counter()
+                    build()
+                    bsamples.append(time.perf_counter() - start)
+                bmed = statistics.median(bsamples)
+                if runs > 1:
+                    # same spread-escalation idea as _time_queries, capped at
+                    # 7 reps (builds are the most expensive timed units); if
+                    # still noisy, record the quietest contiguous 3-rep window
+                    for extra in (2, 2):
+                        if not bmed or _spread(bsamples, bmed) <= 0.35:
+                            break
+                        for _ in range(extra):
+                            start = time.perf_counter()
+                            build()
+                            bsamples.append(time.perf_counter() - start)
+                        bmed = statistics.median(bsamples)
+                    if bmed and _spread(bsamples, bmed) > 0.35 and len(bsamples) >= 5:
+                        best = None
+                        for i in range(len(bsamples) - 2):
+                            win = bsamples[i : i + 3]
+                            wmed = statistics.median(win)
+                            wsp = _spread(win, wmed)
+                            if best is None or wsp < best[1]:
+                                best = (wmed, wsp)
+                        bmed = best[0]
+                        b_spreads[name] = best[1]
+                    else:
+                        b_spreads[name] = _spread(bsamples, bmed)
                 else:
                     b_spreads[name] = _spread(bsamples, bmed)
-            else:
-                b_spreads[name] = _spread(bsamples, bmed)
             builds[name] = round(bmed, 3)
             b_ns[name] = len(bsamples)
             probe_reg[name] = _types.SimpleNamespace(
@@ -384,18 +387,21 @@ def _batched_total(spark, reg, sf_dir, names, workers=3):
     import tempfile
     from concurrent.futures import ThreadPoolExecutor
 
+    from opteryx_spark.cache import cache_scope
+
     work = tempfile.mkdtemp(prefix="bench_batch_artifacts_")
     try:
         defs = _split_defs(spark, sf_dir, work)
 
         def run_one(name):
             spark.sparkContext.setJobDescription(f"batched: {name}")
-            if name in defs:
-                build, probe = defs[name]
-                build()
-                probe().collect()
-            else:
-                reg[name].spark(spark, sf_dir).collect()
+            with cache_scope():
+                if name in defs:
+                    build, probe = defs[name]
+                    build()
+                    probe().collect()
+                else:
+                    reg[name].spark(spark, sf_dir).collect()
 
         start = time.perf_counter()
         with ThreadPoolExecutor(max_workers=workers) as pool:
@@ -431,71 +437,75 @@ def _time_queries(reg, spark, sf_dir, names, runs):
     entry sitting above 0.35 spread without escalation)."""
     import statistics
 
+    from opteryx_spark.cache import cache_scope
+
     timings: dict[str, float] = {}
     spreads: dict[str, float] = {}
     n_samples: dict[str, int] = {}
     for name in names:
         if name not in reg:
             continue
-        # one untimed warmup pays the per-query codegen compile, so the
-        # timed samples measure steady-state execution and the recorded
-        # spread reflects real run-to-run variance, not compilation
-        reg[name].spark(spark, sf_dir).collect()
-        samples = []
-        for _ in range(runs):
-            start = time.perf_counter()
+        with cache_scope():  # shared by the entry's runs, released after
+            # one untimed warmup pays the per-query codegen compile, so the
+            # timed samples measure steady-state execution and the recorded
+            # spread reflects real run-to-run variance, not compilation
             reg[name].spark(spark, sf_dir).collect()
-            samples.append(time.perf_counter() - start)
-        med = statistics.median(samples)
-        if runs > 1:
-            for extra in (2, 4):  # escalate to 5, then 9 samples
-                if not med or _spread(samples, med) <= 0.35:
-                    break
-                for _ in range(extra):
-                    start = time.perf_counter()
-                    reg[name].spark(spark, sf_dir).collect()
-                    samples.append(time.perf_counter() - start)
-                med = statistics.median(samples)
-        if len(samples) >= 9 and med and _spread(samples, med) > 0.35:
-            # high spread that survives 9 samples is JIT warm-up drift, not
-            # noise (measured: monotonic 0.94s -> 0.44s on q1) — the number
-            # that predicts production is the steady-state tail, so record
-            # median/spread over the LAST 5 samples (documented protocol;
-            # n_samples still reports the full count)
-            tail = samples[-5:]
-            med = statistics.median(tail)
-            sp = _spread(tail, med)
-            if sp > 0.35:
-                # FINAL stage (VERDICT r7 #3: cdc_snapshot_diff recorded
-                # 0.841 because 5 tail samples still admit two extremes on
-                # a sub-second query under co-tenant load): take 6 more
-                # samples (15 total) and record the QUIETEST CONTIGUOUS
-                # 5-run window — co-tenant load arrives in waves, so the
-                # tightest consecutive stretch is the least-contended
-                # steady state (every sample is a real run; a tail or
-                # symmetric trim still straddles a load wave, measured
-                # 0.835 trimmed spread during one)
-                for _ in range(6):
-                    start = time.perf_counter()
-                    reg[name].spark(spark, sf_dir).collect()
-                    samples.append(time.perf_counter() - start)
-                best_med, best_sp = med, sp
-                for i in range(len(samples) - 4):
-                    win = samples[i : i + 5]
-                    wmed = statistics.median(win)
-                    wsp = _spread(win, wmed)
-                    if wsp < best_sp:
-                        best_med, best_sp = wmed, wsp
-                med, sp = best_med, best_sp
-            spreads[name] = sp
-        else:
-            spreads[name] = _spread(samples, med)
-        timings[name] = round(med, 3)
-        n_samples[name] = len(samples)
+            samples = []
+            for _ in range(runs):
+                start = time.perf_counter()
+                reg[name].spark(spark, sf_dir).collect()
+                samples.append(time.perf_counter() - start)
+            med = statistics.median(samples)
+            if runs > 1:
+                for extra in (2, 4):  # escalate to 5, then 9 samples
+                    if not med or _spread(samples, med) <= 0.35:
+                        break
+                    for _ in range(extra):
+                        start = time.perf_counter()
+                        reg[name].spark(spark, sf_dir).collect()
+                        samples.append(time.perf_counter() - start)
+                    med = statistics.median(samples)
+            if len(samples) >= 9 and med and _spread(samples, med) > 0.35:
+                # high spread that survives 9 samples is JIT warm-up drift, not
+                # noise (measured: monotonic 0.94s -> 0.44s on q1) — the number
+                # that predicts production is the steady-state tail, so record
+                # median/spread over the LAST 5 samples (documented protocol;
+                # n_samples still reports the full count)
+                tail = samples[-5:]
+                med = statistics.median(tail)
+                sp = _spread(tail, med)
+                if sp > 0.35:
+                    # FINAL stage (VERDICT r7 #3: cdc_snapshot_diff recorded
+                    # 0.841 because 5 tail samples still admit two extremes on
+                    # a sub-second query under co-tenant load): take 6 more
+                    # samples (15 total) and record the QUIETEST CONTIGUOUS
+                    # 5-run window — co-tenant load arrives in waves, so the
+                    # tightest consecutive stretch is the least-contended
+                    # steady state (every sample is a real run; a tail or
+                    # symmetric trim still straddles a load wave, measured
+                    # 0.835 trimmed spread during one)
+                    for _ in range(6):
+                        start = time.perf_counter()
+                        reg[name].spark(spark, sf_dir).collect()
+                        samples.append(time.perf_counter() - start)
+                    best_med, best_sp = med, sp
+                    for i in range(len(samples) - 4):
+                        win = samples[i : i + 5]
+                        wmed = statistics.median(win)
+                        wsp = _spread(win, wmed)
+                        if wsp < best_sp:
+                            best_med, best_sp = wmed, wsp
+                    med, sp = best_med, best_sp
+                spreads[name] = sp
+            else:
+                spreads[name] = _spread(samples, med)
+            timings[name] = round(med, 3)
+            n_samples[name] = len(samples)
     return timings, spreads, n_samples
 
 
 def main() -> None:
+    from opteryx_spark.cache import cache_scope
     from opteryx_spark.session import get_session
     from opteryx_spark.suite import load_all
 
@@ -607,7 +617,7 @@ def main() -> None:
         "protocol": (
             "median_of_3_escalate_15_quietwin5_thresh35_splitbuild_warm3_"
             "headline9_spotlight1_sf1med3_value_batched3wall_serialsum_kept_"
-            "arrow3added"
+            "arrow3added_cachescope1perentry"
         ),
         "spread": spreads,
         "n_samples": n_samples,
@@ -675,12 +685,13 @@ def main() -> None:
             "feat_hashed_tokens",
             "events_rolling_window",
         ):
-            reg[name].spark(spark, SF1_DIR).toArrow()  # untimed warmup
-            _samples = []
-            for _ in range(3):
-                start = time.perf_counter()
-                reg[name].spark(spark, SF1_DIR).toArrow()
-                _samples.append(time.perf_counter() - start)
+            with cache_scope():
+                reg[name].spark(spark, SF1_DIR).toArrow()  # untimed warmup
+                _samples = []
+                for _ in range(3):
+                    start = time.perf_counter()
+                    reg[name].spark(spark, SF1_DIR).toArrow()
+                    _samples.append(time.perf_counter() - start)
             arrow_t[name] = round(_stats.median(_samples), 3)
         out["sf1"] = {
             "total": round(sum(sf1_t.values()), 3),

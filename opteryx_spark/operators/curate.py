@@ -12,6 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from opteryx_spark import cache
 from opteryx_spark.operators import dedup, text
 
 
@@ -262,10 +263,9 @@ def curate_rewrite_corpus(
     # COMPOSING them without a barrier multiplies upstream re-derivation —
     # measured 48 input scans / 104 exchanges in the unpersisted plan,
     # which at 100 TB means re-reading the corpus ~48x.  Persisting the
-    # two stage outputs cuts this to one derivation per stage; tracked via
-    # dedup._track_persist (recompute-safe, released by
-    # release_text_group_caches()).
-    s1 = dedup._track_persist(
+    # two stage outputs cuts this to one derivation per stage; see
+    # ``opteryx_spark.cache.cache_scope`` for their lifetime.
+    s1 = cache.persist(
         filtering.remove_boilerplate_lines(
             docs.withColumn(
                 "_n_tokens_raw", F.when(nn, F.size(raw_tokens)).cast("long")
@@ -279,7 +279,7 @@ def curate_rewrite_corpus(
             F.regexp_replace(F.col("cleaned_text"), "\n", " ").alias("_t1"),
         )
     )
-    return dedup._track_persist(
+    return cache.persist(
         dedup.remove_duplicate_chunks(
             s1, id_col, "_t1", chunk_tokens=chunk_tokens,
             min_chunk_tokens=min_chunk_tokens,
@@ -412,8 +412,8 @@ def curate_incremental(
     # without a persist the composed plan re-reads the new-crawl source
     # once per branch (6 delta scans in the r12 plan audit).  The delta is
     # the small side by construction, so persisting the slim (id, text)
-    # projection is bounded; LRU-tracked and recomputable.
-    slim = _dedup._track_persist(new_docs.select(id_col, text_col))
+    # projection is bounded and recomputable.
+    slim = cache.persist(new_docs.select(id_col, text_col))
 
     # 1. byte-exact membership (token-set fingerprint, the
     # dedup_against_corpus "fingerprint" key)

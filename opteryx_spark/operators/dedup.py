@@ -21,17 +21,13 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from opteryx_spark import cache
 from opteryx_spark.operators.text import shingles, tokens
 
 # --- exact-dedup prefilter for the similarity joins --------------------------
 #
 # Web-scale corpora are dominated by *exact* duplicates (mirrors, templated
 # pages, re-crawls).  Every similarity join below therefore supports
-# Session-cache note for every ``unique_texts=True`` operator below: the
-# exemplar table is persisted (bounded at one across calls); long-lived
-# sessions should call ``release_text_group_caches()`` after materializing
-# the output.
-#
 # ``unique_texts=True``: collapse byte-identical texts to one exemplar,
 # run the pair computation on distinct texts only, then expand the result
 # back through the copy groups — intra-group pairs get the algorithm's
@@ -44,222 +40,11 @@ from opteryx_spark.operators.text import shingles, tokens
 # instead of once per copy.
 
 
-# Persisted intermediates (exemplar tables, encoded shingle sets) from
-# dedup operator calls.  Bounded per call: each new ``unique_texts=True``
-# call releases every cache from prior calls, and
-# ``release_text_group_caches()`` drops the rest — a long-lived session
-# (``ox.connect()``) holds at most one call's caches, never a leak per
-# call.  Unpersisting never breaks correctness (Spark recomputes), it only
-# costs a re-shuffle if a stale lazy result is re-evaluated later.
-#
-# r12: the registry is PER DRIVER THREAD.  Spark's scheduler happily runs
-# several jobs at once (guide §2.6 — independent queries submitted from a
-# thread pool back-fill each other's scheduling tails), but a process-
-# global LRU meant one pipeline's entry-release or cap-eviction could
-# unpersist a frame a CONCURRENT pipeline was mid-way through consuming,
-# recomputing its multi-branch plan once per branch (measured: the
-# 3-worker batched bench pass ran 1.4x SLOWER than serial).  Each thread
-# now tracks (and entry-releases) only its own persists; the LRU cap is
-# per thread, so the bound is 6 frames per concurrent pipeline.
-# ``release_text_group_caches()`` still drains EVERY thread's leftovers
-# (call it from the owning/main thread once worker results are
-# materialized).
-import threading as _threading
-
-_CACHES_LOCK = _threading.RLock()
-# thread ident -> [(frame, semanticHash), ...]
-_CACHED_REPS_BY_THREAD: dict[int, list[tuple[DataFrame, int | None]]] = {}
-# localCheckpoint handles: unbounded (never cap-evicted — released frames
-# cannot be recomputed), drained only by release_text_group_caches();
-# global on purpose (a checkpoint's blocks must survive until the owning
-# session explicitly releases, regardless of which thread made it)
-_CHECKPOINT_HANDLES: list = []
-
-
-def _thread_reps() -> list[tuple[DataFrame, int | None]]:
-    with _CACHES_LOCK:
-        return _CACHED_REPS_BY_THREAD.setdefault(_threading.get_ident(), [])
-
-
-def __getattr__(name):  # PEP 562: keep the historical module attribute
-    if name == "_CACHED_REPS":
-        # the CALLING thread's live registry (tests and diagnostics read
-        # and mutate this; in single-threaded use it is exactly the old
-        # module-global list)
-        return _thread_reps()
-    raise AttributeError(f"module {__name__!r} has no attribute {name!r}")
-
-
-# Hard bound on concurrently-persisted dedup intermediates: one call
-# chain persists at most ~4 frames (exemplars, encoded sets, bucketed
-# signatures), so evicting beyond 6 can only touch a *previous* call's
-# caches — eviction is always safe (Spark recomputes), never a leak.
-_MAX_CACHED = 6
-
-
-class _CheckpointHandle:
-    """unpersist()-able handle over the RDD blocks a ``localCheckpoint``
-    pinned.  ``DataFrame.unpersist()`` does not release checkpoint RDDs
-    (they are internal, not the cached plan), so we diff the context's
-    persistent-RDD map around the checkpoint call and release by id.
-
-    NOTE: localCheckpoint frames are UNRELIABLE — once released the frame
-    cannot be recomputed.  Consumers must materialize results before
-    ``release_text_group_caches()`` (the registry's documented contract).
-    """
-
-    def __init__(self, sc, rdd_ids):
-        self._sc, self._ids = sc, list(rdd_ids)
-
-    def unpersist(self) -> None:
-        try:
-            jmap = self._sc._jsc.getPersistentRDDs()
-            for rid in self._ids:
-                if jmap.containsKey(rid):
-                    jmap.get(rid).unpersist()
-        except Exception:
-            pass  # context stopped — nothing left to release
-
-
-def _checkpoint_tracked(df: DataFrame) -> tuple[DataFrame, _CheckpointHandle]:
-    """``localCheckpoint()`` + a handle that can release its RDD blocks.
-
-    The pinned RDD id is read off the returned frame's own plan (a
-    ``LogicalRDD`` wrapping exactly the checkpointed RDD), not a
-    before/after diff of the context-wide persistent-RDD map — a global
-    diff would swallow concurrent persists from other driver threads and
-    wrongly unpersist them on release.
-    """
-    sc = df.sparkSession.sparkContext
-    out = df.localCheckpoint()
-    try:
-        ids = [out._jdf.queryExecution().analyzed().rdd().id()]
-    except Exception:  # plan shape changed across Spark versions — leak,
-        ids = []  # never release someone else's blocks
-    return out, _CheckpointHandle(sc, ids)
-
-
-def _track_release(obj) -> None:
-    """Register anything with ``.unpersist()`` for bounded-lifetime release.
-
-    Persisted frames go through the LRU cap — eviction is safe because
-    Spark recomputes them on demand.  ``_CheckpointHandle``s do NOT: a
-    released localCheckpoint frame is unrecoverable, so evicting one from
-    a capped list would make any later action on a not-yet-materialized
-    result fail with a missing-block error.  They are tracked in a
-    separate unbounded list drained only by ``release_text_group_caches()``
-    (the documented materialize-before-release contract).
-    """
-    if isinstance(obj, _CheckpointHandle):
-        with _CACHES_LOCK:
-            _CHECKPOINT_HANDLES.append(obj)
-        return
-    _CACHED_REPS = _thread_reps()  # this thread's registry only
-    # Alias dedup (BENCH r9 anomaly): repeated calls of the same operator
-    # re-persist a semantically IDENTICAL frame, and Spark's CacheManager
-    # keeps ONE entry for all of them (persist on an already-cached plan
-    # is a no-op).  Every tracked handle of that plan therefore aliases
-    # the same entry — LRU-evicting an older alias would unpersist the
-    # entry out from under the newest call, whose multi-branch plan then
-    # recomputes the shared input once PER BRANCH (measured: the simhash
-    # self-join degrading 2.4 s -> 7.0 s from the 7th call on).  Drop
-    # aliasing handles from the list WITHOUT unpersisting; the list then
-    # holds one handle per distinct plan and eviction only ever releases
-    # caches no live handle aliases.  Cost discipline: canonicalize the
-    # NEW frame once (``semanticHash``) and compare cached ints; the full
-    # ``sameSemantics`` plan walk runs only on a hash match — a per-call
-    # ``sameSemantics`` scan re-canonicalized up to 6 big plans on every
-    # persist, visible on iterative operators.
-    new_hash = None
-    if hasattr(obj, "semanticHash"):
-        try:
-            new_hash = obj.semanticHash()
-        except Exception:
-            new_hash = None
-    if hasattr(obj, "sameSemantics"):
-        # When either side's semanticHash is unavailable (new_hash None,
-        # or an entry stored fh None), fall back to the sameSemantics
-        # plan walk alone — otherwise an aliasing older handle survives
-        # in the list and cap-eviction re-triggers the exact
-        # unpersist-under-alias regression this dedup exists to prevent
-        # (ADVICE r10).  The int pre-filter is only a cost optimization.
-        kept = []
-        for f, fh in _CACHED_REPS:
-            try:
-                if new_hash is not None and fh is not None:
-                    dup = fh == new_hash and obj.sameSemantics(f)
-                else:
-                    dup = obj.sameSemantics(f)
-            except Exception:
-                dup = False
-            if not dup:
-                kept.append((f, fh))
-        _CACHED_REPS[:] = kept
-    while len(_CACHED_REPS) >= _MAX_CACHED:
-        try:
-            _CACHED_REPS.pop(0)[0].unpersist()
-        except Exception:
-            pass
-    _CACHED_REPS.append((obj, new_hash))
-
-
-def _track_persist(df: DataFrame) -> DataFrame:
-    """persist() + register for bounded-lifetime release (LRU-capped)."""
-    df = df.persist()
-    _track_release(df)
-    return df
-
-
-def release_persisted_caches() -> None:
-    """Unpersist ONLY the LRU-capped persisted frames (``_CACHED_REPS``).
-
-    The implicit release operators perform at entry (the ``unique_texts``
-    exemplar family, ``similarity.lsh_cosine_pairs``) must use THIS, not
-    :func:`release_text_group_caches`: persisted frames are always safe to
-    drop (Spark recomputes them), but localCheckpoint-backed frames are
-    unrecoverable once released, so draining ``_CHECKPOINT_HANDLES`` from
-    inside an unrelated operator would break any earlier
-    not-yet-materialized checkpointed result (e.g. connected-components
-    labels) with missing-block errors (ADVICE r11).  Checkpoint handles
-    stay until the caller's explicit ``release_text_group_caches()``.
-
-    Scope: the CALLING THREAD's persists only — a concurrent pipeline on
-    another driver thread keeps its caches (r12 concurrency fix above).
-    """
-    reps = _thread_reps()
-    while reps:
-        try:
-            reps.pop()[0].unpersist()
-        except Exception:
-            pass
-
-
-def release_text_group_caches() -> None:
-    """Unpersist caches left by dedup operators (exemplar tables, encoded
-    sets) AND drain localCheckpoint handles.  Call after materializing an
-    operator's output in a long-lived session; fresh-session pipelines
-    (bench, driver) need not bother.  Only call once every earlier result
-    that rides a localCheckpoint has been materialized (the documented
-    materialize-before-release contract).
-
-    Scope: EVERY thread's persists (the session-wide cleanup) — worker
-    threads' leftovers from concurrent pipelines are drained here too.
-    """
-    with _CACHES_LOCK:
-        all_reps = [
-            e for lst in _CACHED_REPS_BY_THREAD.values() for e in lst
-        ]
-        _CACHED_REPS_BY_THREAD.clear()
-    for frame, _ in all_reps:
-        try:
-            frame.unpersist()
-        except Exception:
-            pass
-    while _CHECKPOINT_HANDLES:
-        try:
-            _CHECKPOINT_HANDLES.pop().unpersist()
-        except Exception:
-            pass
+# Persisted intermediates and checkpoints live in the caller's
+# ``opteryx_spark.cache.cache_scope()``.  This is the one public drain: it
+# releases the caller's current scope, or the shared fallback when no
+# scope is open.
+release_text_group_caches = cache.drain
 
 
 def _resolve_unique_texts(df: DataFrame, text_col: str, unique_texts) -> bool:
@@ -301,13 +86,8 @@ def _text_groups(df: DataFrame, id_col: str, text_col: str) -> tuple[DataFrame, 
     ).select("gid", F.col("gid").alias("id"), text_col, "n_copies")
     # reps feeds several plan branches (the inner pair computation and the
     # active-group filter); without persist the corpus-wide text shuffle
-    # would re-execute once per branch (measured ~12% at sf0.01).  The
-    # cache is bounded: prior calls' PERSISTED caches are released here
-    # (checkpoint handles are left to the explicit release contract —
-    # ADVICE r11: an implicit drain would break unmaterialized
-    # checkpointed results from other operators).
-    release_persisted_caches()
-    reps = _track_persist(reps)
+    # would re-execute once per branch (measured ~12% at sf0.01).
+    reps = cache.persist(reps)
     return reps, g.select("gid", "id")
 
 
@@ -582,7 +362,7 @@ def ngram_jaccard_pairs(
         # naive full inverted-index self-join (correctness baseline)
         sets_df = sets_df.withColumn("n", F.size("arr"))
         if persist_sets:
-            sets_df = _track_persist(sets_df)
+            sets_df = cache.persist(sets_df)
         sh = sets_df.select("id", F.explode("arr").alias("s"))
         sa = sets_df.select(F.col("id").alias("id1"), F.col("n").alias("na"))
         sb = sets_df.select(F.col("id").alias("id2"), F.col("n").alias("nb"))
@@ -624,7 +404,7 @@ def ngram_jaccard_pairs(
     )
     if persist_sets:
         # enc feeds three plan branches (prefix index, both verify sides)
-        enc = _track_persist(enc)
+        enc = cache.persist(enc)
     # exact rational threshold arithmetic: float ceil() rounds ABOVE the
     # true ceiling for many (threshold, size) combos (e.g. t=0.16,
     # na+nb=29 -> float alpha 5 vs true 4), silently over-pruning pairs
@@ -882,10 +662,10 @@ def minhash_lsh_pairs(
     # both sides of the candidate self-join otherwise each recompute the
     # full signature pipeline (three times total — no automatic exchange
     # reuse through aliases).  Signatures are ~bands x 16 bytes per doc,
-    # trivial next to the corpus; bounded via the tracked-release
-    # registry.  Same persist-the-signature-table step any production
+    # trivial next to the corpus; released with the caller's cache
+    # scope.  Same persist-the-signature-table step any production
     # LSH deployment performs.
-    buckets = _track_persist(buckets)
+    buckets = cache.persist(buckets)
     if max_bucket is not None:
         # hot-bucket cap as a window count over (band, bh): the window's
         # hash partitioning is exactly the candidate join's distribution,
@@ -1118,9 +898,8 @@ def simhash_dedup_pairs(
     # recomputes the whole signature pipeline on BOTH sides (no automatic
     # exchange reuse through the alias) — measured 2.3x on sf0.1.  At
     # scale this is the standard "persist the signature table" step:
-    # 8 bytes+block keys per doc, trivial next to the corpus. Bounded via
-    # the tracked-release registry.
-    blocked = _track_persist(blocked)
+    # 8 bytes+block keys per doc, trivial next to the corpus.
+    blocked = cache.persist(blocked)
     a, b = blocked.alias("a"), blocked.alias("b")
     # popcount before the pair dedup: the dedup shuffle carries one int
     # per candidate instead of two signatures, and the hamming filter
@@ -1172,7 +951,7 @@ def winnow_pairs(
     # aggregate and both sides of the self-join otherwise re-run the
     # rolling-hash fingerprint pipeline (three times total — the
     # minhash_lsh_pairs persist precedent)
-    fps = _track_persist(
+    fps = cache.persist(
         _spread(df).select(
             F.col(id_col).alias("id"),
             F.explode(winnow_fingerprints(text_col, k, window)).alias("fp"),
@@ -1208,14 +987,11 @@ def connected_components(
     its neighbours; converges in O(diameter) rounds.  Near-dup clusters
     are shallow (mirrors of one page), so ``max_iter=20`` is far beyond
     any real diameter; iteration stops early on convergence.  Each round
-    materializes via tracked ``localCheckpoint`` to keep lineage flat —
-    the loop is driver-controlled but all data movement is joins/groupBys.
-    Superseded rounds' checkpoint blocks are released inside the loop
-    (only the latest round stays pinned); the survivors (edges while
-    iterating, the final labels at return) are registered for
-    ``release_text_group_caches()``, so a long-lived session holds at most
-    one call's blocks.  Materialize the result before releasing —
-    localCheckpoint frames cannot be recomputed after release.
+    materializes via ``cache.checkpoint`` to keep lineage flat — the loop
+    is driver-controlled but all data movement is joins/groupBys.
+    Superseded rounds are released inside the loop, so only the final
+    labels stay pinned.  Materialize the result inside the caller's
+    ``cache_scope()``.
 
     The convergence check rides the round's own materialization: the
     label-update join already sees both the old label and the neighbour
@@ -1224,10 +1000,10 @@ def connected_components(
     old-vs-new shuffle join per round.
     """
     edges = pairs.select(F.col(id1).alias("a"), F.col(id2).alias("b"))
-    edges, edges_h = _checkpoint_tracked(
+    edges = cache.checkpoint(
         edges.unionByName(edges.select(F.col("b").alias("a"), F.col("a").alias("b"))).distinct()
     )
-    labels, labels_h = _checkpoint_tracked(
+    pinned = labels = cache.checkpoint(
         edges.select("a").distinct().select(
             F.col("a").alias("node"), F.col("a").alias("comp")
         )
@@ -1239,7 +1015,7 @@ def connected_components(
             .groupBy("a")
             .agg(F.min("comp").alias("ncomp"))
         )
-        new, new_h = _checkpoint_tracked(
+        new = cache.checkpoint(
             labels.join(neigh, labels["node"] == neigh["a"], "left")
             .select(
                 "node",
@@ -1251,23 +1027,21 @@ def connected_components(
             )
         )
         changed = new.filter(F.col("_chg")).limit(1).count()
-        labels_h.unpersist()  # superseded round — keep only the latest
-        labels, labels_h = new.select("node", "comp"), new_h
+        cache.release(pinned)  # superseded round — keep only the latest
+        pinned, labels = new, new.select("node", "comp")
         if changed == 0:
             break
-    edges_h.unpersist()  # final labels are checkpointed; edges no longer needed
+    cache.release(edges)  # final labels are checkpointed; edges no longer needed
     if changed != 0:
         # min-label propagation advances one hop per round, so a cluster
         # whose diameter exceeds max_iter would otherwise return STALE
         # labels — multiple keepers per cluster downstream, silently.
         # Near-dup graphs are shallow; hitting this means the graph is
         # chain-shaped (or max_iter was lowered) and the caller must say so.
-        _track_release(labels_h)
         raise RuntimeError(
             f"connected_components did not converge within max_iter={max_iter} "
             "rounds (a component's diameter exceeds it); raise max_iter"
         )
-    _track_release(labels_h)
     return labels
 
 
@@ -1458,7 +1232,7 @@ def remove_duplicate_chunks(
     # key-slim at any corpus size) cuts that to 2 (slim fill + rebuild).
     # Local sf0.1 wall-clock is neutral (1.43 vs 1.46 s interleaved); the
     # win is the removed corpus pass at scale.
-    slim = _track_persist(
+    slim = cache.persist(
         ch.filter(F.col("n_chunk_tokens") >= min_chunk_tokens)
         .select("_did", "chunk_idx", F.md5("chunk_text").alias("_ck"))
         .withColumn("_okey", okey)
@@ -1674,8 +1448,8 @@ def fuzzy_dedup(
     the route (and therefore which edge semantics apply) is picked by the
     measured duplicate ratio; pass ``unique_texts`` explicitly when
     over-cap copy groups are possible and the distinction matters.  No driver
-    collect; checkpoint blocks are released via
-    :func:`release_text_group_caches`.
+    collect; checkpoint blocks are released with the caller's
+    ``cache_scope()``.
     """
     unique_texts = _resolve_unique_texts(df, text_col, unique_texts)
     if unique_texts:
@@ -1991,7 +1765,7 @@ def containment_pairs(
     # materialize the exploded shingles once (r11): sizes, the df-cap
     # aggregate and both self-join sides otherwise re-run the shingle
     # explode four times (the minhash_lsh_pairs persist precedent)
-    sh = _track_persist(
+    sh = cache.persist(
         _spread(df).select(
             F.col(id_col).alias("id"), F.explode(shingles(text_col, k)).alias("sh")
         )

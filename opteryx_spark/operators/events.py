@@ -28,6 +28,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from opteryx_spark import cache
+
 __all__ = [
     "assign_sessions",
     "sessionize",
@@ -318,9 +320,7 @@ def gap_fill_series(
     # the aggregate feeds both the spine bounds and the fill join —
     # persist the (bucket-cardinality-sized) frame instead of scanning
     # the event stream twice
-    from opteryx_spark.operators.dedup import _track_persist
-
-    actual = _track_persist(actual)
+    actual = cache.persist(actual)
     spine = (
         actual.groupBy(group_col)
         .agg(F.min("bucket_start").alias("_lo"), F.max("bucket_start").alias("_hi"))
@@ -842,9 +842,8 @@ def dau_wau_stickiness(
         F.col(user_col).alias("_u"),
         F.to_date(F.col(ts_col).cast("timestamp")).alias("_d"),
     ).distinct()
-    from opteryx_spark.operators.dedup import _track_persist
 
-    ud = _track_persist(ud)
+    ud = cache.persist(ud)
     dau = ud.groupBy(F.col("_d").alias("day")).agg(
         F.count(F.lit(1)).alias("dau")
     )
@@ -1056,9 +1055,8 @@ def new_vs_returning(
     ``new_share_ppm`` (BIGINT, of that day's actives).
     """
     base = events.filter(F.col(user_col).isNotNull() & F.col(ts_col).isNotNull())
-    from opteryx_spark.operators.dedup import _track_persist
 
-    ud = _track_persist(
+    ud = cache.persist(
         base.select(
             F.col(user_col).alias("_u"),
             F.to_date(F.col(ts_col).cast("timestamp")).alias("_d"),
@@ -1718,8 +1716,6 @@ def removal_effect_attribution(
     )
     counts = pairs.groupBy("fi", "tj").agg(F.count(F.lit(1)).alias("c"))
 
-    from opteryx_spark.operators.dedup import _checkpoint_tracked, _track_release
-
     # Everything below the counts aggregate is arithmetic on the transition
     # matrix, whose size is O(|channel vocabulary|^2) rows no matter how big
     # the corpus is.  Collect it ONCE and run the exact integer scenario
@@ -1729,10 +1725,10 @@ def removal_effect_attribution(
     # vocabulary (beyond the cap) falls back to the all-scenarios-at-once
     # distributed loop, which is also the equivalence witness
     # (tests/test_removal_equivalence.py).
-    counts, c_h = _checkpoint_tracked(counts)
+    counts = cache.checkpoint(counts)
     head = counts.limit(_RE_MAX_DRIVER_TRANSITIONS + 1).collect()
     if len(head) <= _RE_MAX_DRIVER_TRANSITIONS:
-        _track_release(c_h)
+        cache.release(counts)  # the driver route never reads it again
         rows = _removal_effect_exact(
             [(r["fi"], r["tj"], int(r["c"])) for r in head], rounds, PPM
         )
@@ -1741,9 +1737,7 @@ def removal_effect_attribution(
             "channel string, p_full_ppm long, p_removed_ppm long, "
             "removal_effect_ppm long, share_ppm long",
         )
-    out = _removal_effect_spark_loop(counts, rounds, PPM)
-    _track_release(c_h)
-    return out
+    return _removal_effect_spark_loop(counts, rounds, PPM)
 
 
 # Transition-matrix cap for the driver-exact route: ~40 channels' worth of
@@ -1852,20 +1846,21 @@ def _removal_effect_spark_loop(
             "p_ppm"
         ),
     )
-    from opteryx_spark.operators.dedup import _checkpoint_tracked, _track_release
 
-    p, p_h = _checkpoint_tracked(p)
+    p = cache.checkpoint(p)
     # v(state) = P(absorb in CONV within remaining rounds), per scenario
-    v = p.select("removed", F.col("tj").alias("state")).unionAll(
-        p.select("removed", F.col("fi").alias("state"))
-    ).distinct().select(
-        "removed",
-        "state",
-        F.when(F.col("state") == "CONV", F.lit(PPM).cast("long"))
-        .otherwise(F.lit(0).cast("long"))
-        .alias("v"),
+    v = cache.checkpoint(
+        p.select("removed", F.col("tj").alias("state"))
+        .unionAll(p.select("removed", F.col("fi").alias("state")))
+        .distinct()
+        .select(
+            "removed",
+            "state",
+            F.when(F.col("state") == "CONV", F.lit(PPM).cast("long"))
+            .otherwise(F.lit(0).cast("long"))
+            .alias("v"),
+        )
     )
-    v, handle = _checkpoint_tracked(v)
     for _ in range(rounds):
         stepped = (
             p.join(
@@ -1889,9 +1884,8 @@ def _removal_effect_spark_loop(
                 .alias("v"),
             )
         )
-        nxt, h = _checkpoint_tracked(nxt)
-        handle.unpersist()  # superseded round (localCheckpoint is eager)
-        handle = h
+        nxt = cache.checkpoint(nxt)
+        cache.release(v)  # superseded round (localCheckpoint is eager)
         v = nxt
     starts = v.filter(F.col("state") == "START").select(
         "removed", F.col("v").alias("p_ppm")
@@ -1916,7 +1910,7 @@ def _removal_effect_spark_loop(
     tot = F.broadcast(
         eff.agg(F.sum("removal_effect_ppm").alias("_tot"))
     )
-    out = eff.crossJoin(tot).select(
+    return eff.crossJoin(tot).select(
         "channel",
         "p_full_ppm",
         "p_removed_ppm",
@@ -1926,9 +1920,6 @@ def _removal_effect_spark_loop(
             F.expr(f"(removal_effect_ppm * {PPM}) div _tot"),
         ).alias("share_ppm"),
     )
-    _track_release(handle)
-    _track_release(p_h)
-    return out
 
 
 def cohort_ltv(

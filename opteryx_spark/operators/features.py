@@ -34,6 +34,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from opteryx_spark import cache
 from opteryx_spark.operators.dedup import _portable_hash_expr
 
 __all__ = [
@@ -167,13 +168,12 @@ def target_encode(
     """
     if m < 0:
         raise ValueError("m must be >= 0")
-    from opteryx_spark.operators.dedup import _track_persist
 
     tgt = F.col(target_col).cast("decimal(25,8)")
     # ONE corpus pass: the global mean is derived from the per-category
     # aggregate (DECIMAL sums are exact, so Σ of category sums == the
     # global sum bit-for-bit), not from a second scan
-    per = _track_persist(
+    per = cache.persist(
         df.groupBy(cat_col).agg(
             F.count(target_col).alias("n"),
             F.coalesce(F.sum(tgt), F.lit(0).cast("decimal(25,8)")).alias("_sd"),
@@ -243,13 +243,11 @@ def psi_drift(
             .agg(F.count(F.lit(1)).alias(out))
         )
 
-    from opteryx_spark.operators.dedup import _track_persist
-
     bins = spark.range(n_bins).select(F.col("id").alias("bin"))
     # bins-sized; persisted because both the totals and the share
     # computation read it — without this each branch replays the two
     # corpus-side scans
-    counts = _track_persist(
+    counts = cache.persist(
         bins.join(side(ref, "_nr"), "bin", "left")
         .join(side(cur, "_nc"), "bin", "left")
         .select(
@@ -380,9 +378,8 @@ def market_basket_rules(
     """
     if min_support_ppm < 0:
         raise ValueError("min_support_ppm must be >= 0")
-    from opteryx_spark.operators.dedup import _track_persist
 
-    bi = _track_persist(
+    bi = cache.persist(
         df.filter(F.col(basket_col).isNotNull() & F.col(item_col).isNotNull())
         .select(F.col(basket_col).alias("_b"), F.col(item_col).alias("_i"))
         .distinct()

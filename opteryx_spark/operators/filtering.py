@@ -18,6 +18,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from opteryx_spark import cache
 from opteryx_spark.operators import text
 
 
@@ -379,8 +380,8 @@ def boilerplate_ngram_fraction(
     tiny by construction (only grams above ``max_df``), so the join
     broadcasts; per-doc reduce is keyed by id.  No all-pairs anywhere.
 
-    The exploded ``(_bid, _gram)`` frame is persisted (bounded-lifetime
-    cache, ``dedup._track_persist``) and feeds BOTH the hot-set
+    The exploded ``(_bid, _gram)`` frame is persisted (``cache.persist``,
+    released with the caller's scope) and feeds BOTH the hot-set
     document-frequency aggregate and the per-doc join: the old form ran
     the shingle derivation (tokenize + k-gram transform + distinct) over
     the corpus twice — once here and once inside :func:`hot_ngrams`.
@@ -388,9 +389,7 @@ def boilerplate_ngram_fraction(
     gram over this frame IS the document frequency ``hot_ngrams``
     computes (the winnow/containment persist precedent).
     """
-    from opteryx_spark.operators.dedup import _track_persist
-
-    grams = _track_persist(
+    grams = cache.persist(
         df.select(
             F.col(id_col).alias("_bid"),
             F.explode(text.shingles(text_col, k)).alias("_gram"),
@@ -973,9 +972,9 @@ def bigram_perplexity(
         F.col(id_col).alias("_pid"), F.explode(pairs_arr).alias("_p")
     ).select("_pid", F.col("_p._w1").alias("_w1"), F.col("_p._w2").alias("_w2"))
 
-    from opteryx_spark.operators.dedup import _maybe_broadcast, _track_persist
+    from opteryx_spark.operators.dedup import _maybe_broadcast
 
-    trans = _track_persist(trans)
+    trans = cache.persist(trans)
     big = trans.groupBy("_w1", "_w2").agg(F.count(F.lit(1)).alias("_c12"))
     ctx = trans.groupBy("_w1").agg(F.count(F.lit(1)).alias("_c1"))
     vterms = F.broadcast(

@@ -34,6 +34,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from opteryx_spark import cache
+
 MEDIA_SCHEMA = StructType(
     [
         StructField("media_id", LongType(), False),
@@ -373,9 +375,8 @@ def phash_near_dup_pairs(
     """
     if not (0 <= max_hamming <= 64):
         raise ValueError("max_hamming in [0, 64]")
-    from opteryx_spark.operators.dedup import _track_persist
 
-    bands = _track_persist(dhash_bands(df, content_col, id_col).filter(
+    bands = cache.persist(dhash_bands(df, content_col, id_col).filter(
         F.col("b0").isNotNull()
     ))
     sig = bands.select(

@@ -16,6 +16,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from opteryx_spark import cache
+
 
 def _render(c: Column, dtype: str) -> Column:
     """Render an aggregated min/max as a string deterministically across
@@ -390,14 +392,12 @@ def cms_token_counts(
     def _bucket(hcol, row: int):
         return cms_bucket(hcol, row, w)
 
-    from opteryx_spark.operators.dedup import _track_persist
-
     # vocab-sized token counts FIRST (map-side combine on the only
     # corpus-wide pass), then fan out d cells per *distinct* token with
     # the count as a weight — the d× explode touches |vocab| rows, not
     # |corpus tokens|, and the exact-audit branch reuses the same
     # persisted aggregate instead of re-tokenizing the corpus.
-    tok_counts = _track_persist(
+    tok_counts = cache.persist(
         df.select(F.explode(_text.tokens(text_col)).alias("_tk"))
         .groupBy("_tk")
         .agg(F.count(F.lit(1)).alias("_n"))
@@ -670,11 +670,10 @@ def kmv_distinct_ops(
             )
         )
     )
-    from opteryx_spark.operators.dedup import _track_persist
 
     # max-flags, not a tag sum: inputs are NOT pre-distinct, so a value
     # appearing many times on one side must still flag that side exactly once
-    hashes = _track_persist(
+    hashes = cache.persist(
         tagged.groupBy("_h").agg(
             F.max(F.when(F.col("_m") == 1, 1).otherwise(0)).alias("_ina"),
             F.max(F.when(F.col("_m") == 2, 1).otherwise(0)).alias("_inb"),

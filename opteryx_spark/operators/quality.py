@@ -19,6 +19,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from opteryx_spark import cache
+
 __all__ = [
     "row_checks",
     "unique_check",
@@ -188,9 +190,7 @@ def benford_audit(
     # rows at any corpus size, persisted) now feeds both: n_total is the
     # sum over every group, _n_digits the sum over real digits — exact
     # integer counts, identical values.
-    from opteryx_spark.operators.dedup import _track_persist
-
-    counts_all = _track_persist(
+    counts_all = cache.persist(
         base.groupBy("_d").agg(F.count(F.lit(1)).alias("n"))
     )
     counts = counts_all.filter(F.col("_d").isNotNull())

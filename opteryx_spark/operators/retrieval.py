@@ -28,6 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from opteryx_spark import cache
 from opteryx_spark.operators import text
 
 __all__ = ["bm25_scores", "bm25_topk", "mmr_rerank"]
@@ -70,14 +71,12 @@ def bm25_scores(
         F.count(F.lit(1)).alias("_N"), F.sum("_dl").alias("_sumdl")
     )
 
-    from opteryx_spark.operators.dedup import _track_persist
-
     # persisted: the query-filtered postings are tiny but feed TWO branches
     # (dfreq and the scoring join) — without the persist each branch
     # re-tokenizes the whole corpus (Catalyst does not reuse exchanges
-    # across them; the minhash_lsh_pairs precedent).  Released via
-    # dedup.release_text_group_caches().
-    postings = _track_persist(
+    # across them; the minhash_lsh_pairs precedent).  Lifetime: the
+    # caller's ``cache_scope()``.
+    postings = cache.persist(
         base.select("_id", "_dl", F.explode("_toks").alias("_tk"))
         .filter(F.col("_tk").isin(terms))
         .groupBy("_id", "_dl", "_tk")
@@ -157,18 +156,16 @@ def collocations(
     1-row broadcast products.  Nothing corpus-sized shuffles after the
     counts.
     """
-    from opteryx_spark.operators.dedup import _track_persist
-
     toks = df.select(text.ngram_occurrences(text_col, 2).alias("_grams"))
     # both count tables are vocabulary-sized and feed 2-3 branches each
     # (totals + probability joins) — persisted so the corpus explodes run
-    # once, not per branch; released via dedup.release_text_group_caches()
-    bic = _track_persist(
+    # once, not per branch; lifetime: the caller's ``cache_scope()``
+    bic = cache.persist(
         toks.select(F.explode("_grams").alias("_s"))
         .groupBy("_s")
         .agg(F.count(F.lit(1)).alias("cxy"))
     )
-    uni = _track_persist(
+    uni = cache.persist(
         df.select(F.explode(text.tokens(text_col)).alias("_tk"))
         .groupBy("_tk")
         .agg(F.count(F.lit(1)).alias("_c"))
@@ -305,13 +302,12 @@ def bm25_search(
             .agg(F.first("dl").alias("_dl"))
             .agg(F.count(F.lit(1)).alias("_N"), F.sum("_dl").alias("_sumdl"))
         )
-    from opteryx_spark.operators.dedup import _track_persist
 
     # the index is filtered to the query's terms ONCE and persisted (tiny:
     # |matching postings|); dfreq and the scoring join both read the cache
-    # instead of each re-scanning the full index.  Released via
-    # dedup.release_text_group_caches().
-    filtered = _track_persist(
+    # instead of each re-scanning the full index.  Lifetime: the caller's
+    # ``cache_scope()``.
+    filtered = cache.persist(
         index.join(F.broadcast(qterms.select("term").distinct()), "term")
     )
     dfreq = filtered.groupBy("term").agg(F.count(F.lit(1)).alias("_df"))

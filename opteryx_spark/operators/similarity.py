@@ -20,6 +20,7 @@ import random
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from opteryx_spark import cache
 from opteryx_spark.operators.dedup import _spread
 
 def _dot(a: Column, b: Column) -> Column:
@@ -160,14 +161,7 @@ def lsh_cosine_pairs(
     # is one dot fold + a multiply/divide instead of three folds (norms
     # were re-folded per candidate pair — measured 4x on the sf0.1 entry:
     # 11.4 s -> 2.8 s, bit-identical since sqrt(dot(v,v)) is the same
-    # IEEE expression either way).  Release-at-start keeps repeated
-    # invocations self-contained (the _text_groups discipline) — but only
-    # the recomputable persisted frames: draining checkpoint handles here
-    # would break earlier unmaterialized localCheckpoint results
-    # (ADVICE r11).
-    from opteryx_spark.operators.dedup import _track_persist, release_persisted_caches
-
-    release_persisted_caches()
+    # IEEE expression either way).
     buckets = _spread(df).select(
         F.col(id_col).alias("id"),
         F.col(vec_col).alias("v"),
@@ -185,7 +179,7 @@ def lsh_cosine_pairs(
             .filter(F.col("_bc") <= max_bucket)
             .drop("_bc")
         )
-    buckets = _track_persist(buckets)
+    buckets = cache.persist(buckets)
     a, b = buckets.alias("a"), buckets.alias("b")
     # cosine is computed BEFORE the pair dedup so the dedup exchange
     # carries (id1, id2, double) instead of two full embedding vectors —
@@ -612,12 +606,11 @@ def kmeans_portable(
     qv = F.transform(
         F.col(vec_col), lambda x: F.floor(x.cast("double") * F.lit(float(qscale)))
     )
-    from opteryx_spark.operators.dedup import _track_persist
 
     # every iteration (seed scan, per-round update, final assignment)
     # re-reads this frame — persist once instead of re-quantizing the
-    # corpus per pass (bounded-lifetime LRU release, as the dedup ops)
-    base = _track_persist(data.select(F.col(id_col), qv.alias("_qv")))
+    # corpus per pass
+    base = cache.persist(data.select(F.col(id_col), qv.alias("_qv")))
 
     seed_rows = (
         base.orderBy(F.md5(F.col(id_col).cast("string")), F.col(id_col))
@@ -839,9 +832,8 @@ def pq_train(
     qv = F.transform(
         F.col(vec_col), lambda x: F.floor(x.cast("double") * F.lit(float(qscale)))
     )
-    from opteryx_spark.operators.dedup import _track_persist
 
-    base = _track_persist(
+    base = cache.persist(
         df.filter(F.col(vec_col).isNotNull()).select(
             F.col(id_col).alias("_id"), qv.alias("_qv")
         )
@@ -1521,10 +1513,7 @@ def kcenter_coreset(
             lambda acc, t: acc + t,
         )
 
-    from opteryx_spark.operators.dedup import _checkpoint_tracked, _track_release
-
-    cur = base.select("_id", "_qv", _d2_to(center).alias("_dmin"))
-    cur, handle = _checkpoint_tracked(cur)
+    cur = cache.checkpoint(base.select("_id", "_qv", _d2_to(center).alias("_dmin")))
     for r in range(2, int(k) + 1):
         # ONE action per round: the struct keeper carries the winning
         # vector along (id is unique, so the array field never compares)
@@ -1546,11 +1535,10 @@ def kcenter_coreset(
         nxt = cur.select(
             "_id", "_qv", F.least("_dmin", _d2_to(center)).alias("_dmin")
         )
-        nxt, h = _checkpoint_tracked(nxt)
-        handle.unpersist()  # superseded round (localCheckpoint is eager)
-        handle = h
+        nxt = cache.checkpoint(nxt)
+        cache.release(cur)  # superseded round (localCheckpoint is eager)
         cur = nxt
-    _track_release(handle)
+    cache.release(cur)  # the picks are on the driver; no result reads it
     spark = df.sparkSession
     return spark.createDataFrame(
         picks, f"sel_idx bigint, {id_col} bigint, radius2_q bigint"
@@ -1596,12 +1584,11 @@ def pca_power_portable(
     """
     if dim < 1 or rounds < 1 or qscale < 1:
         raise ValueError("dim, rounds, qscale must be >= 1")
-    from opteryx_spark.operators.dedup import _track_persist
 
     qv = F.transform(
         F.col(vec_col), lambda x: F.floor(x.cast("double") * F.lit(float(qscale)))
     )
-    base = _track_persist(
+    base = cache.persist(
         df.filter(F.col(vec_col).isNotNull()).select(qv.alias("_qv"))
     )
     v = [int(qscale)] * int(dim)
@@ -1691,15 +1678,14 @@ def triplet_mining(
         F.lit(0).cast("long"),
         lambda acc, t: acc + t,
     )
-    from opteryx_spark.operators.dedup import _track_persist
 
     # persisted (r11): the pair-distance frame feeds BOTH the positive
     # and the negative keeper aggregates — without the persist each
     # branch re-runs the corpus scan AND the 64-element quantize+fold
     # per pair.  The cached projection is 5 slim columns bounded at
     # |corpus| x |anchor panel| rows (the panel is small by contract),
-    # the same bounded-lifetime cache every dedup operator uses.
-    pairs = _track_persist(
+    # the same scoped cache every dedup operator uses.
+    pairs = cache.persist(
         _prep(corpus, "c")
         .crossJoin(broadcast(_prep(anchors, "a")))
         .filter(F.col("c_id") != F.col("a_id"))

@@ -15,6 +15,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from opteryx_spark import cache
+
 # A tiny multilingual stopword inventory for the n-gram language heuristic.
 STOPWORDS = {
     "en": ["the", "a", "of", "to", "and", "in", "is", "it"],
@@ -580,7 +582,6 @@ def bpe_train(
             f"allow_large=True to proceed anyway, or export the word-frequency "
             f"table and train the large vocabulary offline."
         )
-    from opteryx_spark.operators.dedup import _track_persist
 
     sep = "\u001f"
     spark = docs.sparkSession
@@ -589,7 +590,7 @@ def bpe_train(
         .groupBy("_w")
         .agg(F.count(F.lit(1)).alias("_n"))
     )
-    syms = _track_persist(
+    syms = cache.persist(
         words.select(
             "_n", F.regexp_replace("_w", "(.)", sep + "$1").alias("_s")
         )
@@ -620,7 +621,7 @@ def bpe_train(
             break
         a, b, n = top[0]["a"], top[0]["b"], int(top[0]["n"])
         merges.append((rank, a, b, n))
-        syms = _track_persist(
+        syms = cache.persist(
             syms.select(
                 "_n",
                 F.replace(
@@ -754,9 +755,9 @@ def rake_keyphrases(
         & (F.size(F.split(p, " ")) <= F.lit(int(max_phrase_words))),
     )
     phr = df.select(F.explode(phrases_arr).alias("phrase"))
-    from opteryx_spark.operators.dedup import _maybe_broadcast, _track_persist
+    from opteryx_spark.operators.dedup import _maybe_broadcast
 
-    pw = _track_persist(
+    pw = cache.persist(
         phr.select(
             "phrase",
             F.size(F.split(F.col("phrase"), " ")).alias("_plen"),
@@ -838,9 +839,8 @@ def ngram_novelty(
     grams = df.select(
         F.col(id_col).alias("_id"), F.explode(shingles(text_col, k)).alias("_g")
     )
-    from opteryx_spark.operators.dedup import _track_persist
 
-    grams = _track_persist(grams)
+    grams = cache.persist(grams)
     first = grams.groupBy("_g").agg(F.min("_id").alias("_first"))
     per = (
         grams.join(first, "_g")

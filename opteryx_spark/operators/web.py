@@ -23,6 +23,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from opteryx_spark import cache
+
 # Multi-label public suffixes this engine recognizes when reducing a host
 # to its registered domain.  A deliberately small embedded subset of the
 # public-suffix list (the full PSL is a data file pipelines should mount
@@ -218,12 +220,10 @@ def pagerank(
     if not (0 < damping_pct < 100):
         raise ValueError("damping_pct must be in [1, 99]")
 
-    from opteryx_spark.operators.dedup import _track_persist
-
     # the edge list feeds every iteration's join AND the node/degree
     # derivations — persist once (Catalyst does not dedupe the repeated
     # subplan; without this the edge lineage replays per iteration)
-    e = _track_persist(
+    e = cache.persist(
         edges.select(F.col(src_col).alias("_src"), F.col(dst_col).alias("_dst"))
     )
     nodes = (
@@ -248,14 +248,12 @@ def pagerank(
     )
     base = F.expr(f"({100 - damping_pct} * (CAST({scale} AS BIGINT) div _n)) div 100")
 
-    from opteryx_spark.operators.dedup import _checkpoint_tracked, _track_release
-
     # re-root the lineage each round: the rank frame feeds THREE branches
     # per iteration (dangling mass, the contribution join, the rebuild),
     # so an un-truncated plan re-nests 3x per round — exponential analysis
     # and recompute.  localCheckpoint keeps every round's plan flat, the
     # same re-rooting the connected-components loop uses.
-    ranks, prev_h = _checkpoint_tracked(base_nodes)
+    ranks = cache.checkpoint(base_nodes)
     for _ in range(iterations):
         dang = F.broadcast(
             ranks.filter(F.col("_deg") == 0).agg(
@@ -268,7 +266,7 @@ def pagerank(
             .groupBy("node")
             .agg(F.sum("_share").alias("_inc"))
         )
-        ranks = (
+        new = cache.checkpoint(
             ranks.select("node", "_deg", "_n")
             .join(incoming, "node", "left")
             .crossJoin(dang)
@@ -285,10 +283,8 @@ def pagerank(
                 ).alias("rank"),
             )
         )
-        ranks, h = _checkpoint_tracked(ranks)
-        prev_h.unpersist()  # superseded round — keep only the latest
-        prev_h = h
-    _track_release(prev_h)  # final ranks' blocks: bounded-lifetime release
+        cache.release(ranks)  # superseded round — keep only the latest
+        ranks = new
     return ranks.select("node", "rank")
 
 
@@ -335,13 +331,7 @@ def personalized_pagerank(
     if not (0 < damping_pct < 100):
         raise ValueError("damping_pct must be in [1, 99]")
 
-    from opteryx_spark.operators.dedup import (
-        _checkpoint_tracked,
-        _track_persist,
-        _track_release,
-    )
-
-    e = _track_persist(
+    e = cache.persist(
         edges.select(F.col(src_col).alias("_src"), F.col(dst_col).alias("_dst"))
     )
     nodes = (
@@ -377,7 +367,7 @@ def personalized_pagerank(
         f"_is_seed * (({100 - damping_pct} * (CAST({scale} AS BIGINT) div _ns)) div 100)"
     )
 
-    ranks, prev_h = _checkpoint_tracked(base_nodes)
+    ranks = cache.checkpoint(base_nodes)
     for _ in range(iterations):
         dang = F.broadcast(
             ranks.filter(F.col("_deg") == 0).agg(
@@ -390,7 +380,7 @@ def personalized_pagerank(
             .groupBy("node")
             .agg(F.sum("_share").alias("_inc"))
         )
-        ranks = (
+        new = cache.checkpoint(
             ranks.select("node", "_is_seed", "_deg", "_ns")
             .join(incoming, "node", "left")
             .crossJoin(dang)
@@ -408,10 +398,8 @@ def personalized_pagerank(
                 ).alias("rank"),
             )
         )
-        ranks, h = _checkpoint_tracked(ranks)
-        prev_h.unpersist()
-        prev_h = h
-    _track_release(prev_h)
+        cache.release(ranks)
+        ranks = new
     return ranks.select("node", "rank")
 
 
@@ -440,11 +428,10 @@ def triangle_counts(
     Returns ``node``, ``n_triangles`` (BIGINT; nodes on no triangle are
     absent — left-join from the node set to zero-fill if needed).
     """
-    from opteryx_spark.operators.dedup import _track_persist
 
     # the canonical edge set feeds all three join legs — persist once
     # instead of recomputing the dedup shuffle per leg
-    e = _track_persist(
+    e = cache.persist(
         edges.filter(F.col(src_col).isNotNull() & F.col(dst_col).isNotNull())
         .filter(F.col(src_col) != F.col(dst_col))
         .select(
@@ -623,7 +610,7 @@ def kcore(
     ``max_rounds``).  Each round is one count aggregate plus two
     semi joins on node id — all hash-partitioned on node keys, no
     windows, no cartesian, no driver data; the loop re-roots lineage
-    per round via ``dedup._checkpoint_tracked`` (the pagerank pattern)
+    per round via ``cache.checkpoint`` (the pagerank pattern)
     so the plan never grows with the round count.
 
     The fixpoint test costs one ``count()`` action per round; pass
@@ -633,8 +620,6 @@ def kcore(
     Returns ``node``, ``core_degree`` (BIGINT, the node's degree inside
     the final subgraph; ≥ k at fixpoint) for surviving nodes.
     """
-    from opteryx_spark.operators.dedup import _checkpoint_tracked, _track_release
-
     if k < 1:
         raise ValueError("k must be >= 1")
     e = (
@@ -646,7 +631,7 @@ def kcore(
         )
         .distinct()
     )
-    e, handle = _checkpoint_tracked(e)
+    e = cache.checkpoint(e)
     n_edges = e.count() if max_rounds is None else None
     rounds = 0
     while True:
@@ -664,21 +649,19 @@ def kcore(
             .join(keep.withColumnRenamed("node", "_b"), "_b", "left_semi")
             .select("_a", "_b")
         )
-        nxt, h = _checkpoint_tracked(nxt)
+        nxt = cache.checkpoint(nxt)
         rounds += 1
         if max_rounds is None:
             n_next = nxt.count()
             if n_next == n_edges:
-                h.unpersist()  # superseded (equal to e) and already counted
+                cache.release(nxt)  # superseded (equal to e) and already counted
                 break
             n_edges = n_next
         # superseded round — release NOW (safe: localCheckpoint is eager, so
-        # nxt is already materialized); deferring to _track_release would pin
+        # nxt is already materialized); deferring to scope exit would pin
         # every peel round's edge blocks for the whole call (ADVICE r7)
-        handle.unpersist()
-        handle = h
+        cache.release(e)
         e = nxt
-    _track_release(handle)  # final surviving round: bounded-lifetime release
     deg = (
         e.select(F.col("_a").alias("node"))
         .unionAll(e.select(F.col("_b").alias("node")))
@@ -716,8 +699,6 @@ def core_numbers(
 
     Returns ``node``, ``core_number`` (BIGINT).
     """
-    from opteryx_spark.operators.dedup import _checkpoint_tracked, _track_release
-
     e = (
         edges.filter(F.col(src_col).isNotNull() & F.col(dst_col).isNotNull())
         .filter(F.col(src_col) != F.col(dst_col))
@@ -730,9 +711,8 @@ def core_numbers(
     nbrs = e.select(F.col("_a").alias("node"), F.col("_b").alias("nbr")).unionAll(
         e.select(F.col("_b").alias("node"), F.col("_a").alias("nbr"))
     )
-    nbrs, nbrs_handle = _checkpoint_tracked(nbrs)
-    v = nbrs.groupBy("node").agg(F.count(F.lit(1)).alias("val"))
-    v, handle = _checkpoint_tracked(v)
+    nbrs = cache.checkpoint(nbrs)
+    v = cache.checkpoint(nbrs.groupBy("node").agg(F.count(F.lit(1)).alias("val")))
     rounds = 0
     from pyspark.sql.window import Window
 
@@ -746,7 +726,7 @@ def core_numbers(
         nxt = ranked.groupBy("node").agg(
             F.max(F.least(F.col("_rn"), F.col("_nv"))).alias("val")
         )
-        nxt, h = _checkpoint_tracked(nxt)
+        nxt = cache.checkpoint(nxt)
         rounds += 1
         if max_rounds is None:
             # converged when no node's value moved this round
@@ -757,14 +737,11 @@ def core_numbers(
                 .count()
             )
             if n_changed == 0:
-                h.unpersist()  # superseded (values equal v) and already counted
+                cache.release(nxt)  # superseded (values equal v) and already counted
                 break
         # superseded round — release NOW (pagerank pattern; see kcore)
-        handle.unpersist()
-        handle = h
+        cache.release(v)
         v = nxt
-    _track_release(handle)  # final values: bounded-lifetime release
-    _track_release(nbrs_handle)
     return v.select("node", F.col("val").alias("core_number"))
 
 
@@ -912,19 +889,16 @@ def label_communities(
     Returns ``node``, ``community`` (BIGINT, a node id serving as the
     label).
     """
-    from opteryx_spark.operators.dedup import _checkpoint_tracked, _track_release
-
     if rounds < 1:
         raise ValueError("rounds must be >= 1")
     e = _canonical_edges(edges, src_col, dst_col)
     nbrs = e.select(F.col("_a").alias("node"), F.col("_b").alias("nbr")).unionAll(
         e.select(F.col("_b").alias("node"), F.col("_a").alias("nbr"))
     )
-    nbrs, nbrs_h = _checkpoint_tracked(nbrs)
-    labels = nbrs.select("node").distinct().select(
-        "node", F.col("node").alias("community")
+    nbrs = cache.checkpoint(nbrs)
+    labels = cache.checkpoint(
+        nbrs.select("node").distinct().select("node", F.col("node").alias("community"))
     )
-    labels, handle = _checkpoint_tracked(labels)
     for _ in range(rounds):
         counted = (
             nbrs.join(
@@ -941,12 +915,9 @@ def label_communities(
                 F.struct((-F.col("_c")).alias("_neg"), F.col("_nl").alias("_l"))
             ).alias("_k")
         ).select("node", F.col("_k._l").alias("community"))
-        nxt, h = _checkpoint_tracked(nxt)
-        handle.unpersist()  # superseded round (eager: localCheckpoint is eager)
-        handle = h
+        nxt = cache.checkpoint(nxt)
+        cache.release(labels)  # superseded round (eager: localCheckpoint is eager)
         labels = nxt
-    _track_release(handle)
-    _track_release(nbrs_h)
     return labels
 
 
@@ -981,22 +952,19 @@ def hop_distances(
 
     Returns ``node``, ``hops`` (BIGINT, 0 for seeds).
     """
-    from opteryx_spark.operators.dedup import _checkpoint_tracked, _track_release
-
     if max_hops < 0:
         raise ValueError("max_hops must be >= 0")
     e = _canonical_edges(edges, src_col, dst_col)
     nbrs = e.select(F.col("_a").alias("node"), F.col("_b").alias("nbr")).unionAll(
         e.select(F.col("_b").alias("node"), F.col("_a").alias("nbr"))
     )
-    nbrs, nbrs_h = _checkpoint_tracked(nbrs)
-    dist = (
+    nbrs = cache.checkpoint(nbrs)
+    dist = cache.checkpoint(
         seeds.filter(F.col(node_col).isNotNull())
         .select(F.col(node_col).cast("bigint").alias("node"))
         .distinct()
         .select("node", F.lit(0).cast("bigint").alias("hops"))
     )
-    dist, handle = _checkpoint_tracked(dist)
     for _ in range(max_hops):
         relaxed = nbrs.join(
             dist.select(F.col("node").alias("nbr"), F.col("hops").alias("_nh")),
@@ -1007,12 +975,9 @@ def hop_distances(
             .groupBy("node")
             .agg(F.min("hops").alias("hops"))
         )
-        nxt, h = _checkpoint_tracked(nxt)
-        handle.unpersist()  # superseded round (eager: localCheckpoint is eager)
-        handle = h
+        nxt = cache.checkpoint(nxt)
+        cache.release(dist)  # superseded round (eager: localCheckpoint is eager)
         dist = nxt
-    _track_release(handle)
-    _track_release(nbrs_h)
     return dist
 
 
@@ -1052,17 +1017,11 @@ def hits_scores(
     Returns ``node``, ``hub_ppm``, ``auth_ppm`` (BIGINT, ``scale``
     units).
     """
-    from opteryx_spark.operators.dedup import (
-        _checkpoint_tracked,
-        _track_persist,
-        _track_release,
-    )
-
     if rounds < 1:
         raise ValueError("rounds must be >= 1")
     if scale < 1:
         raise ValueError("scale must be >= 1")
-    e = _track_persist(
+    e = cache.persist(
         edges.filter(
             F.col(src_col).isNotNull()
             & F.col(dst_col).isNotNull()
@@ -1074,10 +1033,9 @@ def hits_scores(
     nodes = e.select(F.col("_s").alias("node")).union(
         e.select(F.col("_d").alias("node"))
     ).distinct()
-    nodes = _track_persist(nodes)
+    nodes = cache.persist(nodes)
     q = F.lit(int(scale)).cast("long")
-    h = nodes.select("node", q.alias("score"))
-    h, handle = _checkpoint_tracked(h)
+    h = cache.checkpoint(nodes.select("node", q.alias("score")))
 
     def _half(scores: DataFrame, out_key: str, in_key: str) -> DataFrame:
         # propagate scores across edges from in_key side to out_key side,
@@ -1101,23 +1059,18 @@ def hits_scores(
             )
         )
 
-    a, a_handle = None, None
+    a = None
     for _ in range(rounds):
-        a = _half(h, out_key="_d", in_key="_s")
-        a, ah = _checkpoint_tracked(a)
-        if a_handle is not None:
-            a_handle.unpersist()  # superseded authority round (eager)
-        a_handle = ah
-        nh = _half(a, out_key="_s", in_key="_d")
-        nh, hh = _checkpoint_tracked(nh)
-        handle.unpersist()  # superseded hub round (localCheckpoint is eager)
-        handle = hh
+        na = cache.checkpoint(_half(h, out_key="_d", in_key="_s"))
+        if a is not None:
+            cache.release(a)  # superseded authority round (eager)
+        a = na
+        nh = cache.checkpoint(_half(a, out_key="_s", in_key="_d"))
+        cache.release(h)  # superseded hub round (localCheckpoint is eager)
         h = nh
     out = h.select("node", F.col("score").alias("hub_ppm")).join(
         a.select("node", F.col("score").alias("auth_ppm")), "node", "full_outer"
     )
-    _track_release(handle)
-    _track_release(a_handle)
     return out.select(
         "node",
         F.coalesce("hub_ppm", F.lit(0)).cast("bigint").alias("hub_ppm"),
@@ -1155,15 +1108,13 @@ def link_prediction_jaccard(
     Returns ``a``, ``b`` (a < b), ``n_common``, ``deg_a``, ``deg_b``,
     ``jaccard_ppm`` (BIGINT).
     """
-    from opteryx_spark.operators.dedup import _track_persist
-
     if top_k < 1:
         raise ValueError("top_k must be >= 1")
-    e = _track_persist(_canonical_edges(edges, src_col, dst_col))
+    e = cache.persist(_canonical_edges(edges, src_col, dst_col))
     nbrs = e.select(F.col("_a").alias("node"), F.col("_b").alias("nbr")).unionAll(
         e.select(F.col("_b").alias("node"), F.col("_a").alias("nbr"))
     )
-    deg = _track_persist(nbrs.groupBy("node").agg(F.count(F.lit(1)).alias("deg")))
+    deg = cache.persist(nbrs.groupBy("node").agg(F.count(F.lit(1)).alias("deg")))
     centers = nbrs
     if max_degree is not None:
         hot = deg.filter(F.col("deg") > int(max_degree)).select(

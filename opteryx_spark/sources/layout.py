@@ -29,6 +29,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from opteryx_spark import cache
+
 __all__ = ["write_clustered", "layout_report", "zorder_value"]
 
 
@@ -267,13 +269,14 @@ def upsert_partitions(
         merged = merged.repartitionByRange(
             *[F.col(c) for c in [partition_col] + list(cluster_by)]
         ).sortWithinPartitions(*[F.col(c) for c in [partition_col] + list(cluster_by)])
-    # eager checkpoint: the overwrite target is in the read lineage
-    merged = merged.localCheckpoint()
-    n = merged.count()
-    (
-        merged.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy(partition_col)
-        .parquet(path)
-    )
+    with cache.cache_scope():
+        # eager checkpoint: the overwrite target is in the read lineage
+        merged = cache.checkpoint(merged)
+        n = merged.count()
+        (
+            merged.write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy(partition_col)
+            .parquet(path)
+        )
     return {"partitions": sorted(parts), "n_upserted": n}

@@ -21,6 +21,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from opteryx_spark import cache
 from opteryx_spark.operators import dedup, events, retrieval, similarity
 from opteryx_spark.suite import register
 from opteryx_spark.suite._util import t
@@ -863,10 +864,8 @@ def dedup_bloom_prefilter(spark, sf_dir):
     # r11 (guide §2.4): the (doc_id, key) frame feeds FOUR plan branches
     # (corpus keys -> positions, the exact-dup join, the new-doc side and
     # its bloom probe) and each branch re-ran the regexp_replace+md5 scan
-    # of the full corpus.  Persist the 40-byte-per-row key frame once —
-    # the same bounded-lifetime cache every dedup operator uses.
-    D.release_text_group_caches()
-    docs = D._track_persist(
+    # of the full corpus.  Persist the 40-byte-per-row key frame once.
+    docs = cache.persist(
         t(spark, sf_dir, "documents").select(
             "doc_id", F.md5(T.normalize_text("text")).alias("key")
         )

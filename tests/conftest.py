@@ -30,6 +30,16 @@ def pytest_collection_modifyitems(config, items):
         items[:] = selected
 
 
+@pytest.fixture(autouse=True)
+def _cache_scope():
+    """Every test runs in its own cache scope: what its operators persist
+    or checkpoint is released when it ends."""
+    from opteryx_spark.cache import cache_scope
+
+    with cache_scope():
+        yield
+
+
 @pytest.fixture(scope="session")
 def spark():
     from opteryx_spark.session import get_session

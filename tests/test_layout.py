@@ -206,8 +206,11 @@ def test_upsert_partitions_rewrites_only_touched_dirs(spark, tmp_path_factory):
     updates = spark.createDataFrame(
         [("d2", 1, "UPDATED"), ("d2", 99, "NEW")], "day string, id long, val string"
     )
+    pinned = spark.sparkContext._jsc.getPersistentRDDs().size()
     rep = layout.upsert_partitions(spark, path, updates, ["id"], "day")
     assert rep == {"partitions": ["d2"], "n_upserted": 6}
+    # the merge checkpoint is released inside the call, not leaked
+    assert spark.sparkContext._jsc.getPersistentRDDs().size() == pinned
 
     after = spark.read.parquet(path)
     assert after.count() == 16  # 15 - 1 replaced + 1 replacement + 1 new

@@ -60,6 +60,7 @@ def main() -> None:
     )
     os.makedirs(outdir, exist_ok=True)
 
+    from opteryx_spark.cache import cache_scope
     from opteryx_spark.session import get_session
     from opteryx_spark.suite import load_all
 
@@ -72,22 +73,16 @@ def main() -> None:
             continue
         try:
             spark.sparkContext.setJobDescription(f"plan-capture: {name}")
-            df = reg[name].spark(spark, sf_dir)
             buf = io.StringIO()
-            with redirect_stdout(buf):
-                df.explain("formatted")
+            with cache_scope():
+                df = reg[name].spark(spark, sf_dir)
+                with redirect_stdout(buf):
+                    df.explain("formatted")
             with open(os.path.join(outdir, f"{name}_{suffix}.txt"), "w") as f:
                 f.write(buf.getvalue())
             print(f"OK   {name}")
         except Exception as exc:  # noqa: BLE001 — capture the rest regardless
             print(f"FAIL {name}: {exc}", file=sys.stderr)
-        finally:
-            try:
-                from opteryx_spark.operators.dedup import release_text_group_caches
-
-                release_text_group_caches()
-            except Exception:
-                pass
     spark.stop()
 
 

@@ -21,7 +21,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 def main() -> None:
     sf = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
 
-    from opteryx_spark.operators.dedup import release_text_group_caches
+    from opteryx_spark.cache import cache_scope
     from opteryx_spark.session import get_session
     from opteryx_spark.suite import load_all
 
@@ -34,13 +34,13 @@ def main() -> None:
         try:
             spark.sparkContext.setJobDescription(f"sweep: {name}")
             t0 = time.perf_counter()
-            n = len(reg[name].spark(spark, sf).collect())
-            dt = time.perf_counter() - t0
+            with cache_scope():
+                n = len(reg[name].spark(spark, sf).collect())
+                dt = time.perf_counter() - t0
             out.append((dt, name, n))
             print(f"{dt:7.2f}s {name} rows={n}", flush=True)
         except Exception as exc:  # noqa: BLE001 — sweep the rest regardless
             print(f"   FAIL {name}: {str(exc)[:120]}", flush=True)
-        release_text_group_caches()
     print("== top 25 ==")
     for dt, name, n in sorted(out, reverse=True)[:25]:
         print(f"{dt:7.2f}s {name} rows={n}")
