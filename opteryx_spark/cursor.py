@@ -16,7 +16,7 @@ from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 
-from opteryx_spark import results, rewriter
+from opteryx_spark import results, rewriter, sqltext
 from opteryx_spark.session import get_session
 from opteryx_spark.sources import registry as _registry_mod
 from opteryx_spark.sources.registry import SourceRegistry, read_any
@@ -120,8 +120,7 @@ class Connection:
             name = m.group(1)
             if name == "user_memberships":
                 if self.memberships:
-                    vals = ", ".join("'" + m_.replace("'", "''") + "'" for m_ in self.memberships)
-                    return f"array({vals})"
+                    return "array" + sqltext.quote(self.memberships)
                 return "CAST(array() AS ARRAY<STRING>)"
             if name not in self.variables and name not in _SYSTEM_VARIABLES:
                 from opteryx_spark import errors
@@ -132,15 +131,9 @@ class Connection:
             value = self.variables.get(name)
             if value is None and name in _SYSTEM_VARIABLES:
                 value = _SYSTEM_VARIABLES[name][1]
-            if isinstance(value, bool):
-                return "TRUE" if value else "FALSE"
-            if isinstance(value, (int, float)):
-                return str(value)
-            if value is None:
-                return "NULL"
-            return "'" + str(value).replace("'", "''") + "'"
+            return sqltext.quote(value)
 
-        return rewriter.map_outside_literals(
+        return sqltext.map_outside_literals(
             sql, lambda seg: re.sub(r"@@(\w+)", repl, seg)
         )
 
@@ -343,23 +336,13 @@ class Cursor:
                 # named (id=1) or positional (1, 2) — positional binds to the
                 # template's :params in appearance order
                 positional = []
-                for pair in rewriter._split_top_level(exec_m.group(2)):
-                    # '=' split must be literal-aware too: the value may
-                    # contain '=' inside a quoted string
-                    eq = -1
-                    in_str = False
-                    for ci, ch in enumerate(pair):
-                        if in_str:
-                            in_str = ch != "'"
-                        elif ch == "'":
-                            in_str = True
-                        elif ch == "=":
-                            eq = ci
-                            break
-                    if eq >= 0:
-                        bound[pair[:eq].strip()] = _parse_literal(pair[eq + 1 :].strip())
-                    elif pair.strip():
-                        positional.append(_parse_literal(pair.strip()))
+                for pair in sqltext.split_top_level(exec_m.group(2)):
+                    # the value may hold '=' inside a quoted string
+                    eq = sqltext.search_outside_literals(_EQ, pair)
+                    if eq:
+                        bound[pair[: eq.start()].strip()] = _parse_literal(pair[eq.end() :])
+                    elif pair:
+                        positional.append(_parse_literal(pair))
                 if positional:
                     # parameter names in appearance order, deduped, `::`
                     # casts excluded
@@ -562,7 +545,7 @@ class Cursor:
                     star = True
                 return seg
 
-            rewriter.map_outside_literals(sql, _scan)
+            sqltext.map_outside_literals(sql, _scan)
         want_variant = has_atq and not star
         variant_views: dict[str, list[str]] = {}
         if not stores:
@@ -587,7 +570,7 @@ class Cursor:
 
             return pattern.sub(repl, seg)
 
-        sql = rewriter.map_outside_literals(sql, sub)
+        sql = sqltext.map_outside_literals(sql, sub)
         if has_atq:
             sql = rewriter.finalize_atq(sql, variant_views if want_variant else None)
         return sql
@@ -679,6 +662,7 @@ def _ym_safe(df: DataFrame) -> DataFrame:
     )
 
 
+_EQ = _re2.compile("=")
 _GJO_ARG = _re2.compile(r"get_json_object\(\s*([A-Za-z_][\w.]*)\s*,")
 _LIKE_ANY_NATIVE = _re2.compile(
     r"([\w.]+)\s+(LIKE|ILIKE|RLIKE)\s+(ANY|ALL)\s*\(", _re2.IGNORECASE
@@ -889,18 +873,16 @@ def _type_fallback(sql: str, msg: str) -> str | None:
             return new
     # LIKE-quantifier detection keys on the SQL side: the analyzer message
     # names internal forms (likeany/lower/...) that vary by operator
-    from opteryx_spark.dialect import _LIT_LIST, _balanced_end
+    from opteryx_spark.dialect import LIT_LIST
 
     out = sql
     pos = 0
     changed = False
-    while True:
-        m = _LIKE_ANY_NATIVE.search(out, pos)
-        if not m:
-            break
-        end = _balanced_end(out, m.end() - 1)
+    while (m := _LIKE_ANY_NATIVE.search(out, pos)) and (
+        end := sqltext.balanced_end(out, m.end() - 1)
+    ) >= 0:
         body = out[m.end() : end - 1]
-        if not _LIT_LIST.match(body):
+        if not LIT_LIST.match(body):
             pos = m.end()
             continue
         lhs, op, quant = m.group(1), m.group(2).upper(), m.group(3).upper()

@@ -8,71 +8,22 @@ JVM-side, codegen-friendly, zero UDF overhead.  Only genuinely polymorphic
 functions (SEARCH adapts to string vs array input, reference
 ``functions/other_functions.py:27``) fall back to a registered pandas UDF.
 
-All scanners are string-literal-aware and paren-balanced, so nested calls
-and quoted arguments survive.
+Quoted text follows the one lexical model in ``sqltext``.
 """
 
 from __future__ import annotations
 
 import re
 
-# ---------------------------------------------------------------------------
-# shared low-level helpers
-
-
-def _split_top_level(args: str) -> list[str]:
-    out, depth, in_str, start = [], 0, False, 0
-    for i, ch in enumerate(args):
-        if in_str:
-            in_str = ch != "'"
-        elif ch == "'":
-            in_str = True
-        elif ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        elif ch == "," and depth == 0:
-            out.append(args[start:i].strip())
-            start = i + 1
-    tail = args[start:].strip()
-    if tail:
-        out.append(tail)
-    return out
-
-
-def _balanced_end(sql: str, open_paren: int) -> int:
-    """Index one past the ')' matching the '(' at ``open_paren``."""
-    depth, i, in_str, n = 1, open_paren + 1, False, len(sql)
-    while i < n and depth:
-        ch = sql[i]
-        if in_str:
-            in_str = ch != "'"
-        elif ch == "'":
-            in_str = True
-        elif ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        i += 1
-    return i
-
-
-def map_outside_literals(sql: str, fn) -> str:
-    out, start, i, in_str, n = [], 0, 0, False, len(sql)
-    while i < n:
-        ch = sql[i]
-        if not in_str and ch == "'":
-            out.append(fn(sql[start:i]))
-            start = i
-            in_str = True
-        elif in_str and ch == "'":
-            out.append(sql[start : i + 1])
-            start = i + 1
-            in_str = False
-        i += 1
-    out.append(sql[start:] if in_str else fn(sql[start:]))
-    return "".join(out)
-
+from opteryx_spark.sqltext import (
+    QUOTES,
+    balanced_end,
+    literal_end,
+    map_outside_literals,
+    search_outside_literals,
+    split_top_level,
+    sub_outside_literals,
+)
 
 # ---------------------------------------------------------------------------
 # macro table: reference function name → Spark expression template
@@ -281,18 +232,13 @@ _NAME = re.compile(r"[A-Za-z_]\w*")
 
 
 def _expand_once(sql: str) -> str:
-    out, i, in_str, n = [], 0, False, len(sql)
+    out, i, n = [], 0, len(sql)
     while i < n:
         ch = sql[i]
-        if in_str:
-            out.append(ch)
-            in_str = ch != "'"
-            i += 1
-            continue
-        if ch == "'":
-            out.append(ch)
-            in_str = True
-            i += 1
+        if ch in QUOTES:
+            end = literal_end(sql, i)
+            out.append(sql[i:end])
+            i = end
             continue
         m = _NAME.match(sql, i)
         if not m:
@@ -306,12 +252,11 @@ def _expand_once(sql: str) -> str:
         while k < n and sql[k] in " \t\n":
             k += 1
         qualified = i > 0 and sql[i - 1] in "._$@"
-        if fn is None or qualified or k >= n or sql[k] != "(":
+        if fn is None or qualified or sql[k : k + 1] != "(" or (end := balanced_end(sql, k)) < 0:
             out.append(name)
             i = j
             continue
-        end = _balanced_end(sql, k)
-        args = _split_top_level(sql[k + 1 : end - 1])
+        args = split_top_level(sql[k + 1 : end - 1])
         rep = fn(args)
         out.append(rep if rep is not None else sql[i:end])
         i = end
@@ -343,7 +288,7 @@ _ANYALL_HEAD = re.compile(
 
 # pattern-list bodies: comma-separated string literals (NULLs allowed —
 # the reference drops null patterns, utils/sql.py::regex_match_any)
-_LIT_LIST = re.compile(
+LIT_LIST = re.compile(
     r"^\s*(?:'(?:[^']|'')*'|NULL)(?:\s*,\s*(?:'(?:[^']|'')*'|NULL))*\s*$", re.IGNORECASE
 )
 # reference-only bare-literal form: ``x LIKE ANY '%p%'`` (no parens)
@@ -369,20 +314,16 @@ def rewrite_any_all(sql: str) -> str:
     """
     sql = _LIKE_ANY_BARE.sub(lambda m: f"{m.group(1)} {m.group(2)} ({m.group(3)})", sql)
     pos = 0
-    while True:
-        m = _ANYALL_HEAD.search(sql, pos)
-        if not m:
-            return sql
-        end = _balanced_end(sql, m.end() - 1)
+    while (m := _ANYALL_HEAD.search(sql, pos)) and (end := balanced_end(sql, m.end() - 1)) >= 0:
         arr = sql[m.end() : end - 1]
         if re.match(r"\s*SELECT\b", arr, re.IGNORECASE):
             pos = m.end()  # ANSI quantified subquery — Spark handles natively
             continue
         lhs, op, quant = m.group(1), m.group(2), m.group(3).upper()
         op_norm = re.sub(r"\s+", " ", op.upper())
-        if op_norm.endswith(("LIKE", "RLIKE")) and _LIT_LIST.match(arr):
+        if op_norm.endswith(("LIKE", "RLIKE")) and LIT_LIST.match(arr):
             # reference drops NULL patterns before matching
-            pats = [p for p in _split_top_level(arr) if p.upper() != "NULL"]
+            pats = [p for p in split_top_level(arr) if p.upper() != "NULL"]
             base = op_norm.split()[-1]
             neg = op_norm.startswith("NOT")
             if not pats:
@@ -398,42 +339,27 @@ def rewrite_any_all(sql: str) -> str:
         body = arr.strip()
         # tuple literals become arrays: ANY(('a','b')) / ANY('a','b','c')
         # (reference treats the quantifier body as a value list)
-        if body.startswith("(") and _balanced_end(body, 0) == len(body):
+        if body.startswith("(") and balanced_end(body, 0) == len(body):
             body = f"array{body}"
-        elif len(_split_top_level(body)) > 1:
+        elif len(split_top_level(body)) > 1:
             body = f"array({body})"
         repl = f"{fn}({body}, __v -> {lhs} {op} __v)"
         sql = sql[: m.start()] + repl + sql[end:]
         pos = m.start()
+    return sql
 
 
 # ---------------------------------------------------------------------------
 # literal forms
 
-_BYTE_LIT = re.compile(r"(?<![\w$])[bB]'")
+_BYTE_PREFIX = re.compile(r"(?<![\w$])[bB](?=')")
 _NUM_UNDERSCORE = re.compile(r"(?<![\w.])(\d[\d_]*(?:\.[\d_]+)?)")
 
 
 def strip_byte_literals(sql: str) -> str:
     """``b'bytes'`` → ``'bytes'`` — the reference compares BLOB and VARCHAR
     freely (``ops.py:50-56``); Spark strings compare without the prefix."""
-    out, i, in_str, n = [], 0, False, len(sql)
-    while i < n:
-        if not in_str:
-            m = _BYTE_LIT.match(sql, i)
-            if m:
-                out.append("'")
-                i = m.end()
-                in_str = True
-                continue
-        ch = sql[i]
-        if in_str:
-            in_str = ch != "'"
-        elif ch == "'":
-            in_str = True
-        out.append(ch)
-        i += 1
-    return "".join(out)
+    return sub_outside_literals(_BYTE_PREFIX, lambda m: "", sql)
 
 
 _HEX_LIT = re.compile(r"\b0[xX]([0-9A-Fa-f]+)\b")
@@ -477,28 +403,14 @@ _AS_TYPE = re.compile(r"\bAS\s+", re.IGNORECASE)
 _CAST_HEAD = re.compile(r"\b(?:TRY_)?CAST\s*\(", re.IGNORECASE)
 
 
-def _in_literal(sql: str, idx: int) -> bool:
-    """True when ``idx`` falls inside a single-quoted literal."""
-    in_str = False
-    for i in range(idx):
-        if sql[i] == "'":
-            in_str = not in_str
-    return in_str
-
-
 def map_cast_types(sql: str) -> str:
     # `AS <type>` renames apply only inside CAST(...) spans — a bare
     # `SELECT 'x' AS VARCHAR` is an alias named VARCHAR, not a cast —
     # and never inside string literals within the span
     pos = 0
-    while True:
-        m = _CAST_HEAD.search(sql, pos)
-        if not m:
-            break
-        if _in_literal(sql, m.start()):
-            pos = m.end()
-            continue
-        end = _balanced_end(sql, m.end() - 1)
+    while (m := search_outside_literals(_CAST_HEAD, sql, pos)) and (
+        end := balanced_end(sql, m.end() - 1)
+    ) >= 0:
         body = sql[m.end() : end - 1]
 
         def seg_as(s: str) -> str:
@@ -537,11 +449,7 @@ _EXTRACT_FIELD_MAP = {
 
 def rewrite_extract(sql: str) -> str:
     out, pos = [], 0
-    while True:
-        m = _EXTRACT_HEAD.search(sql, pos)
-        if not m:
-            break
-        end = _balanced_end(sql, m.end() - 1)
+    while (m := _EXTRACT_HEAD.search(sql, pos)) and (end := balanced_end(sql, m.end() - 1)) >= 0:
         body = _EXTRACT_BODY.match(sql[m.end() : end - 1])
         if not body:
             out.append(sql[pos:end])
@@ -615,11 +523,7 @@ def rewrite_unnest(sql: str) -> str:
     # table CROSS JOIN UNNEST(col) AS a → CROSS JOIN LATERAL (SELECT
     # explode(col) AS a): unlike LATERAL VIEW, the lateral subquery can be
     # followed by further JOIN clauses in the same FROM list
-    while True:
-        m = _CJ_UNNEST.search(sql)
-        if not m:
-            break
-        end = _balanced_end(sql, m.end() - 1)
+    while (m := _CJ_UNNEST.search(sql)) and (end := balanced_end(sql, m.end() - 1)) >= 0:
         arg = _array_tuple(sql[m.end() : end - 1])
         alias, end2 = _unnest_alias(sql, end)
         alias = alias or "unnest"
@@ -629,11 +533,7 @@ def rewrite_unnest(sql: str) -> str:
         )
         sql = sql[: m.start()] + repl + sql[end2:]
     # FROM UNNEST((tuple)) AS element  →  FROM (SELECT explode(array(...)) AS element)
-    while True:
-        m = _FROM_UNNEST.search(sql)
-        if not m:
-            break
-        end = _balanced_end(sql, m.end() - 1)
+    while (m := _FROM_UNNEST.search(sql)) and (end := balanced_end(sql, m.end() - 1)) >= 0:
         arg = _array_tuple(sql[m.end() : end - 1])
         alias, end2 = _unnest_alias(sql, end)
         alias = alias or "unnest"
@@ -745,19 +645,17 @@ _PRE_LITERAL_KEYWORDS = frozenset(
 def rewrite_array_literals(sql: str) -> str:
     out: list[str] = []
     stack: list[bool] = []  # True where '[' opened an array literal
-    in_str = False
-    prev = ""  # last non-space char emitted outside strings
+    prev = ""  # last non-space char emitted outside quoted spans ("'" for a span)
     word: list[str] = []  # identifier/keyword token ending at prev
     gap = True  # whitespace seen since prev (word boundary)
-    for ch in sql:
-        if in_str:
-            out.append(ch)
-            in_str = ch != "'"
+    span_end = 0
+    for i, ch in enumerate(sql):
+        if i < span_end:
             continue
-        if ch == "'":
-            in_str = True
-            out.append(ch)
-            prev, word, gap = ch, [], False
+        if ch in QUOTES:
+            span_end = literal_end(sql, i)
+            out.append(sql[i:span_end])
+            prev, word, gap = "'", [], False
             continue
         if ch == "[":
             # subscript when the preceding token is a value (identifier,
@@ -802,15 +700,12 @@ _IN_UNNEST = re.compile(
 
 
 def rewrite_in_unnest(sql: str) -> str:
-    while True:
-        m = _IN_UNNEST.search(sql)
-        if not m:
-            return sql
-        end = _balanced_end(sql, m.end() - 1)
+    while (m := _IN_UNNEST.search(sql)) and (end := balanced_end(sql, m.end() - 1)) >= 0:
         arr = sql[m.end() : end - 1]
         neg = "NOT " if m.group(2) else ""
         repl = f"{neg}array_contains({arr}, {m.group(1)})"
         sql = sql[: m.start()] + repl + sql[end:]
+    return sql
 
 
 # ---------------------------------------------------------------------------
@@ -826,11 +721,7 @@ _AGG_BODY = re.compile(
 
 def rewrite_array_agg_modifiers(sql: str) -> str:
     pos = 0
-    while True:
-        m = _ARRAY_AGG_HEAD.search(sql, pos)
-        if not m:
-            return sql
-        end = _balanced_end(sql, m.end() - 1)
+    while (m := _ARRAY_AGG_HEAD.search(sql, pos)) and (end := balanced_end(sql, m.end() - 1)) >= 0:
         body = sql[m.end() : end - 1]
         if not re.search(r"\b(ORDER\s+BY|LIMIT)\b", body, re.IGNORECASE):
             pos = end  # plain form is native
@@ -861,6 +752,7 @@ def rewrite_array_agg_modifiers(sql: str) -> str:
             agg = f"slice({agg}, 1, {limit})"
         sql = sql[: m.start()] + agg + sql[end:]
         pos = m.start() + len(agg)
+    return sql
 
 
 # ---------------------------------------------------------------------------
@@ -887,54 +779,16 @@ _STRFTIME_MAP = [
 ]
 
 
-_CI_RE_TAIL = re.compile(r"([\w.\)\]]+)\s*(!~\*|~\*)\s*$")
-
-
-def _split_on_literals(sql: str) -> list[tuple[str, str]]:
-    """Split into alternating ('seg', text) / ('lit', 'quoted') chunks;
-    single-quoted literals with '' escapes."""
-    chunks: list[tuple[str, str]] = []
-    i, n, start = 0, len(sql), 0
-    while i < n:
-        if sql[i] == "'":
-            j = i + 1
-            while j < n:
-                if sql[j] == "'":
-                    if j + 1 < n and sql[j + 1] == "'":
-                        j += 2
-                        continue
-                    break
-                j += 1
-            chunks.append(("seg", sql[start:i]))
-            chunks.append(("lit", sql[i : j + 1]))
-            start = j + 1
-            i = start
-        else:
-            i += 1
-    chunks.append(("seg", sql[start:]))
-    return chunks
+# the operator and the opening quote of its pattern literal
+_CI_RE_OP = re.compile(r"([\w.\)\]]+)\s*(!~\*|~\*)\s*(['\"])")
 
 
 def _rewrite_ci_regex_ops(sql: str) -> str:
-    if "~*" not in sql:
-        return sql
-    chunks = _split_on_literals(sql)
-    out: list[str] = []
-    k = 0
-    while k < len(chunks):
-        kind, text = chunks[k]
-        if kind == "seg" and k + 1 < len(chunks) and chunks[k + 1][0] == "lit":
-            m = _CI_RE_TAIL.search(text)
-            if m:
-                lit = chunks[k + 1][1]
-                op = "NOT RLIKE" if m.group(2) == "!~*" else "RLIKE"
-                out.append(text[: m.start()] + f"{m.group(1)} {op} ")
-                out.append("'(?i)" + lit[1:])
-                k += 2
-                continue
-        out.append(text)
-        k += 1
-    return "".join(out)
+    return sub_outside_literals(
+        _CI_RE_OP,
+        lambda m: f"{m.group(1)} {'NOT ' if m.group(2) == '!~*' else ''}RLIKE {m.group(3)}(?i)",
+        sql,
+    )
 
 
 def rewrite_misc_operators(sql: str) -> str:
@@ -957,10 +811,8 @@ def rewrite_misc_operators(sql: str) -> str:
 
     # case-insensitive regex ops carry their pattern literal: fold the
     # insensitivity into the pattern itself ((?i) prefix), not the column.
-    # Literal-aware: the operator must sit OUTSIDE string literals (a
-    # string containing "~* '" must not be rewritten), so split on
-    # literals and match the operator at a segment end, pattern = the
-    # immediately following literal.
+    # The operator must sit outside quoted spans (a string containing
+    # "~* '" is not rewritten) and directly before the pattern literal.
     sql = _rewrite_ci_regex_ops(sql)
 
     def seg(s: str) -> str:
@@ -975,12 +827,8 @@ def rewrite_misc_operators(sql: str) -> str:
     sql = map_outside_literals(sql, seg)
     # strftime-style DATE_FORMAT patterns → Spark datetime patterns
     pos = 0
-    while True:
-        m = _DF_HEAD.search(sql, pos)
-        if not m:
-            break
-        end = _balanced_end(sql, m.end() - 1)
-        args = _split_top_level(sql[m.end() : end - 1])
+    while (m := _DF_HEAD.search(sql, pos)) and (end := balanced_end(sql, m.end() - 1)) >= 0:
+        args = split_top_level(sql[m.end() : end - 1])
         if len(args) == 2 and args[1].startswith("'"):
             fmt = args[1][1:-1]
             if "%" in fmt or fmt == "dddd":

@@ -28,6 +28,8 @@ from __future__ import annotations
 import re
 from dataclasses import dataclass, field
 
+from opteryx_spark import sqltext
+
 
 @dataclass
 class RewriteResult:
@@ -36,43 +38,7 @@ class RewriteResult:
     path_tables: dict[str, str] = field(default_factory=dict)  # view name -> path
 
 
-# --- literal-aware scanning -------------------------------------------------
-
-
-def _scan_literal(sql: str, i: int) -> int:
-    """Given ``sql[i]`` is a quote char, return the index one past the end
-    of the literal.  Handles doubled quotes ('') and backslash escapes
-    (Spark's non-ANSI string parsing treats \\' as an escaped quote)."""
-    quote, j, n = sql[i], i + 1, len(sql)
-    while j < n:
-        if sql[j] == "\\":
-            j += 2
-            continue
-        if sql[j] == quote:
-            if j + 1 < n and sql[j + 1] == quote:
-                j += 2
-                continue
-            return j + 1
-        j += 1
-    return n
-
-
-def map_outside_literals(sql: str, fn) -> str:
-    """Apply ``fn`` to every segment of ``sql`` that is *not* inside a
-    quoted string literal — the guard that keeps identifier/operator
-    rewrites and parameter binding from corrupting string contents."""
-    out, i, seg_start, n = [], 0, 0, len(sql)
-    while i < n:
-        if sql[i] in ("'", '"'):
-            out.append(fn(sql[seg_start:i]))
-            end = _scan_literal(sql, i)
-            out.append(sql[i:end])
-            i = end
-            seg_start = i
-        else:
-            i += 1
-    out.append(fn(sql[seg_start:n]))
-    return "".join(out)
+# Quoted text follows the one lexical model in ``sqltext``.
 
 
 # --- comments & statement split --------------------------------------------
@@ -82,8 +48,8 @@ def strip_comments(sql: str) -> str:
     out, i, n = [], 0, len(sql)
     while i < n:
         ch = sql[i]
-        if ch in ("'", '"'):
-            end = _scan_literal(sql, i)
+        if ch in sqltext.QUOTES:
+            end = sqltext.literal_end(sql, i)
             out.append(sql[i:end])
             i = end
         elif sql.startswith("--", i):
@@ -110,8 +76,8 @@ def split_statements(sql: str) -> list[str]:
     stmts, cur, i, n = [], [], 0, len(sql)
     while i < n:
         ch = sql[i]
-        if ch in ("'", '"'):
-            end = _scan_literal(sql, i)
+        if ch in sqltext.QUOTES:
+            end = sqltext.literal_end(sql, i)
             cur.append(sql[i:end])
             i = end
         elif ch == ";":
@@ -219,29 +185,6 @@ def _norm_end_exclusive(tok: str) -> str:
     return f"CAST({tok} AS TIMESTAMP) + INTERVAL 1 DAY"
 
 
-def _search_outside_literals(pattern: re.Pattern, sql: str, pos: int = 0):
-    """``pattern.search`` skipping matches that START inside a string
-    literal (same contract as :func:`_sub_outside_literals`, for the
-    table-function rewrites that drive their own scan loop)."""
-    while True:
-        m = pattern.search(sql, pos)
-        if not m:
-            return None
-        i = 0
-        inside = False
-        while i < m.start():
-            if sql[i] in ("'", '"'):
-                end = _scan_literal(sql, i)
-                if i < m.start() < end:
-                    inside = True
-                i = end
-            else:
-                i += 1
-        if not inside:
-            return m
-        pos = m.start() + 1
-
-
 def _find_top_level(sql: str, word_pattern: str, start: int = 0) -> tuple[int, int]:
     """First occurrence of ``word_pattern`` (a regex) at paren depth 0 and
     outside string literals; returns (start, end) or (-1, -1).  Used to
@@ -251,8 +194,8 @@ def _find_top_level(sql: str, word_pattern: str, start: int = 0) -> tuple[int, i
     depth, i, n = 0, start, len(sql)
     while i < n:
         ch = sql[i]
-        if ch in ("'", '"'):
-            i = _scan_literal(sql, i)
+        if ch in sqltext.QUOTES:
+            i = sqltext.literal_end(sql, i)
             continue
         if ch == "(":
             depth += 1
@@ -264,34 +207,6 @@ def _find_top_level(sql: str, word_pattern: str, start: int = 0) -> tuple[int, i
                 return i, m.end()
         i += 1
     return -1, -1
-
-
-def _sub_outside_literals(pattern: re.Pattern, repl_fn, sql: str) -> str:
-    """``pattern.sub`` that skips matches STARTING inside a string
-    literal — FROM-clause rewrites (temporal FOR, table functions) must
-    not fire on matching text inside a quoted value.  (Matches may
-    legitimately *contain* literals — date bounds — so only the start
-    position is checked.)"""
-    spans = []
-    i = 0
-    while i < len(sql):
-        if sql[i] in ("'", '"'):
-            end = _scan_literal(sql, i)
-            spans.append((i, end))
-            i = end
-        else:
-            i += 1
-    out, last = [], 0
-    for m in pattern.finditer(sql):
-        if any(a <= m.start() < b for a, b in spans):
-            continue
-        if m.start() < last:  # overlapped a prior replacement
-            continue
-        out.append(sql[last : m.start()])
-        out.append(repl_fn(m))
-        last = m.end()
-    out.append(sql[last:])
-    return "".join(out)
 
 
 def extract_temporal(sql: str) -> tuple[str, dict[str, tuple[str, str, str]]]:
@@ -337,11 +252,11 @@ def extract_temporal(sql: str) -> tuple[str, dict[str, tuple[str, str, str]]]:
         return sub
 
     for pat, kind in _FOR_PATTERNS:
-        sql = _sub_outside_literals(pat, handle(kind), sql)
+        sql = sqltext.sub_outside_literals(pat, handle(kind), sql)
     # FOR on a derived relation ((SELECT ...) AS p FOR '...'): the inner
     # references resolve their own snapshots; with snapshot-consistent
     # (static) virtual data the outer clause is an identity filter
-    sql = _sub_outside_literals(_SUBQ_FOR, lambda m: m.group(1), sql)
+    sql = sqltext.sub_outside_literals(_SUBQ_FOR, lambda m: m.group(1), sql)
     return sql, filters
 
 
@@ -362,29 +277,19 @@ _AT_ANY = re.compile(r"([\w.\(\)]+)\s*@>\s*(?:array)?\(", re.IGNORECASE)
 def _rewrite_at_ops(sql: str, pattern: re.Pattern, build) -> str:
     pos = 0
     while True:
-        m = pattern.search(sql, pos)
+        m = sqltext.search_outside_literals(pattern, sql, pos)
         if not m:
             return sql
-        # scan from the opening paren to its balanced close
-        depth, i, in_str = 1, m.end(), False
-        while i < len(sql) and depth:
-            ch = sql[i]
-            if in_str:
-                in_str = ch != "'"
-            elif ch == "'":
-                in_str = True
-            elif ch == "(":
-                depth += 1
-            elif ch == ")":
-                depth -= 1
-            i += 1
-        if depth:  # unbalanced: leave untouched
+        i = sqltext.balanced_end(sql, m.end() - 1)
+        if i < 0:  # unbalanced: leave untouched
             pos = m.end()
             continue
         args = sql[m.end() : i - 1]
         repl = build(m.group(1), args)
         sql = sql[: m.start()] + repl + sql[i:]
         pos = m.start() + len(repl)
+
+
 _DOLLAR = re.compile(r"\$(\w+)")
 _GEN_SERIES_HEAD = re.compile(r"\b(FROM|JOIN)\s+GENERATE_SERIES\s*\(", re.IGNORECASE)
 _GS_CONT = re.compile(r"\s*,\s*GENERATE_SERIES\s*\(", re.IGNORECASE)
@@ -424,23 +329,28 @@ def _json_path(key: str) -> str:
 
 def _expr_start(s: str, end: int) -> int:
     """Start index of the value expression ending just before ``end``:
-    a dotted identifier chain with any trailing balanced ()/[] groups
-    (``a.b``, ``fn(x)``, ``arr[0]``, chained), or a string literal."""
+    a dotted identifier chain (backtick parts too) with any trailing
+    balanced ()/[] groups (``a.b``, ``fn(x)``, ``arr[0]``, chained), or a
+    string literal."""
+    opens = {b - 1: a for a, b in sqltext.literal_spans(s[:end])}  # close -> open
     i = end
     while i > 0:
         c = s[i - 1]
+        if i - 1 in opens:
+            if c == "`":
+                i = opens[i - 1]
+                continue
+            return opens[i - 1] if i == end else i
         if c in ")]":
             open_c = "(" if c == ")" else "["
-            depth, k, in_str = 0, i - 1, False
+            depth, k = 0, i - 1
             while k >= 0:
-                ch = s[k]
-                if in_str:
-                    in_str = ch != "'"
-                elif ch == "'":
-                    in_str = True
-                elif ch == c:
+                if k in opens:
+                    k = opens[k] - 1
+                    continue
+                if s[k] == c:
                     depth += 1
-                elif ch == open_c:
+                elif s[k] == open_c:
                     depth -= 1
                     if depth == 0:
                         break
@@ -449,16 +359,6 @@ def _expr_start(s: str, end: int) -> int:
                 return i
             i = k
             continue
-        if c == "'" and i == end:
-            k = i - 2
-            while k >= 0:
-                if s[k] == "'":
-                    if k > 0 and s[k - 1] == "'":
-                        k -= 2  # '' escape inside the literal
-                        continue
-                    break
-                k -= 1
-            return max(k, 0)
         if c.isalnum() or c in "_.$@":
             i -= 1
             continue
@@ -476,7 +376,7 @@ def rewrite_json_arrows(sql: str) -> str:
     (``data[0]->'id'``)."""
     pos = 0
     while True:
-        m = _JSON_OP.search(sql, pos)
+        m = sqltext.search_outside_literals(_JSON_OP, sql, pos)
         if not m:
             return sql
         lhs_end = m.start()
@@ -565,28 +465,7 @@ def rewrite_virtual_datasets(sql: str) -> str:
 
         return _DOLLAR.sub(repl, s)
 
-    return map_outside_literals(sql, seg)
-
-
-def _split_top_level(args: str) -> list[str]:
-    """Split on commas outside parens and string literals."""
-    out, depth, in_str, start = [], 0, False, 0
-    for i, ch in enumerate(args):
-        if in_str:
-            in_str = ch != "'"
-        elif ch == "'":
-            in_str = True
-        elif ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        elif ch == "," and depth == 0:
-            out.append(args[start:i].strip())
-            start = i + 1
-    tail = args[start:].strip()
-    if tail:
-        out.append(tail)
-    return out
+    return sqltext.map_outside_literals(sql, seg)
 
 
 def _gs_interval(spec: str) -> str | None:
@@ -639,22 +518,13 @@ def rewrite_generate_series(sql: str) -> str:
     fine), quoted date bounds cast to TIMESTAMP, and the reference's
     compact interval specs translated to Spark INTERVAL literals.
     """
-    def one_call(start: int) -> tuple[str, int]:
+    def one_call(start: int) -> tuple[str, int] | None:
         """Rewrite the call whose '(' arguments begin at ``start``; returns
-        (rendered relation, index after the alias)."""
-        depth, i, in_str = 1, start, False
-        while i < len(sql) and depth:
-            ch = sql[i]
-            if in_str:
-                in_str = ch != "'"
-            elif ch == "'":
-                in_str = True
-            elif ch == "(":
-                depth += 1
-            elif ch == ")":
-                depth -= 1
-            i += 1
-        inner = _gs_explode_inner(_split_top_level(sql[start : i - 1]))
+        (rendered relation, index after the alias), None if unbalanced."""
+        i = sqltext.balanced_end(sql, start - 1)
+        if i < 0:
+            return None
+        inner = _gs_explode_inner(sqltext.split_top_level(sql[start : i - 1]))
         alias, col, end = "series", "generate_series", i
         am = _GS_ALIAS.match(sql, i)
         if am and am.group(1).upper() not in _GS_KEYWORDS:
@@ -666,20 +536,16 @@ def rewrite_generate_series(sql: str) -> str:
         return f"(SELECT explode({inner}) AS {col}) {alias}", end
 
     out, pos = [], 0
-    while True:
-        m = _search_outside_literals(_GEN_SERIES_HEAD, sql, pos)
-        if not m:
+    while m := sqltext.search_outside_literals(_GEN_SERIES_HEAD, sql, pos):
+        call = one_call(m.end())
+        if call is None:  # unbalanced: leave the rest for Spark's parser
             break
-        out.append(sql[pos : m.start()])
-        rel, pos = one_call(m.end())
-        out.append(f"{m.group(1)} {rel}")
+        out += (sql[pos : m.start()], f"{m.group(1)} {call[0]}")
+        pos = call[1]
         # comma-continued FROM list: FROM generate_series(...) s, generate_series(...) e
-        while True:
-            cm = _GS_CONT.match(sql, pos)
-            if not cm:
-                break
-            rel, pos = one_call(cm.end())
-            out.append(f", {rel}")
+        while (cm := _GS_CONT.match(sql, pos)) and (call := one_call(cm.end())):
+            out.append(f", {call[0]}")
+            pos = call[1]
     out.append(sql[pos:])
     return "".join(out)
 
@@ -713,18 +579,8 @@ def rewrite_distinct_on(sql: str) -> str:
     if not hm:
         return sql
     # balanced scan over the key list (may contain nested parens/literals)
-    i, depth = hm.end(), 1
-    while i < len(s) and depth:
-        ch = s[i]
-        if ch in ("'", '"'):
-            i = _scan_literal(s, i)
-            continue
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        i += 1
-    if depth:
+    i = sqltext.balanced_end(s, hm.end() - 1)
+    if i < 0:
         return sql  # unbalanced — leave for Spark's parser to report
     keys = s[hm.end() : i - 1]
     fs, fe = _find_top_level(s, r"\bFROM\b", i)
@@ -762,41 +618,21 @@ def rewrite_distinct_on(sql: str) -> str:
 # --- parameters -------------------------------------------------------------
 
 
-def _sql_literal(v) -> str:
-    import datetime
-
-    if v is None:
-        return "NULL"
-    if isinstance(v, bool):
-        return "TRUE" if v else "FALSE"
-    if isinstance(v, (int, float)):
-        return repr(v)
-    if isinstance(v, (datetime.datetime, datetime.date)):
-        return f"'{v.isoformat()}'"
-    if isinstance(v, (list, tuple)):
-        return "(" + ", ".join(_sql_literal(x) for x in v) + ")"
-    s = str(v).replace("'", "''")
-    return f"'{s}'"
-
-
 def bind_params(sql: str, params: dict | list | None) -> str:
     """Named (``:name``) or positional (``?``) parameter binding, applied
     post-rewrite as safe literal substitution (reference binds post-parse,
     ``planner/ast_rewriter.py:39-56``; string-level is the Spark analogue).
-    Placeholders inside string literals are never touched."""
+    Placeholders inside quoted spans are never touched, every value is
+    written by ``sqltext.quote``, and all markers of a segment are replaced
+    in one pass, so bound text is never scanned again."""
     if not params:
         return sql
     if isinstance(params, dict):
-
-        def sub_named(seg: str) -> str:
-            for k in sorted(params, key=len, reverse=True):
-                lit = _sql_literal(params[k])
-                # lambda replacement: literal values must not be parsed as
-                # regex templates (backslashes / \g escapes in the value)
-                seg = re.sub(rf"[:@]{re.escape(k)}\b", lambda _m, s=lit: s, seg)
-            return seg
-
-        return map_outside_literals(sql, sub_named)
+        names = "|".join(re.escape(k) for k in sorted(params, key=len, reverse=True))
+        marker = re.compile(rf"[:@]({names})\b")
+        return sqltext.map_outside_literals(
+            sql, lambda seg: marker.sub(lambda m: sqltext.quote(params[m.group(1)]), seg)
+        )
     values = iter(params)
 
     def sub_positional(seg: str) -> str:
@@ -806,14 +642,14 @@ def bind_params(sql: str, params: dict | list | None) -> str:
         for j, ch in enumerate(seg):
             if ch == "?" and (j == 0 or seg[j - 1] != "@"):
                 try:
-                    out.append(_sql_literal(next(values)))
+                    out.append(sqltext.quote(next(values)))
                     continue
                 except StopIteration:
                     pass
             out.append(ch)
         return "".join(out)
 
-    return map_outside_literals(sql, sub_positional)
+    return sqltext.map_outside_literals(sql, sub_positional)
 
 
 # --- pipeline ---------------------------------------------------------------
@@ -835,23 +671,11 @@ def rewrite_fake_function(sql: str) -> str:
     naturally (``FAKE(5000,2) AS FK`` → ``(SELECT ...) AS FK``).
     """
     out, pos = [], 0
-    while True:
-        m = _search_outside_literals(_FAKE_HEAD, sql, pos)
-        if not m:
+    while m := sqltext.search_outside_literals(_FAKE_HEAD, sql, pos):
+        i = sqltext.balanced_end(sql, m.end() - 1)
+        if i < 0:  # unbalanced: leave the rest for Spark's parser
             break
-        depth, i, in_str = 1, m.end(), False
-        while i < len(sql) and depth:
-            ch = sql[i]
-            if in_str:
-                in_str = ch != "'"
-            elif ch == "'":
-                in_str = True
-            elif ch == "(":
-                depth += 1
-            elif ch == ")":
-                depth -= 1
-            i += 1
-        args = _split_top_level(sql[m.end() : i - 1])
+        args = sqltext.split_top_level(sql[m.end() : i - 1])
         n = args[0].strip() if args else "0"
         colspec = args[1].strip() if len(args) > 1 else "1"
         cols = []
@@ -899,7 +723,7 @@ def rewrite_http_function(sql: str) -> str:
     """``FROM HTTP('url')`` → ``FROM 'url'`` (reference
     ``operators/function_dataset_node.py:60-75``); the path-table
     extraction then routes it through the HTTP reader."""
-    return _sub_outside_literals(
+    return sqltext.sub_outside_literals(
         _HTTP_FN, lambda m: f"{m.group(1)} {m.group(2)}", sql
     )
 
@@ -923,7 +747,7 @@ def rewrite(sql: str, params: dict | list | None = None) -> RewriteResult:
     sql = rewrite_distinct_on(sql)
     # the reference's parser accepts OFFSET before LIMIT; Spark requires
     # LIMIT ... OFFSET ...
-    sql = map_outside_literals(
+    sql = sqltext.map_outside_literals(
         sql,
         lambda seg: re.sub(
             r"\bOFFSET\s+(\d+)\s+LIMIT\s+(\d+)", r"LIMIT \2 OFFSET \1", seg, flags=re.IGNORECASE

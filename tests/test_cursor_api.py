@@ -188,6 +188,29 @@ def test_named_params(conn):
     assert cur.fetchone()[0] > 0
 
 
+@pytest.mark.parametrize(
+    "sql, params, rows",
+    [
+        # bound values are always quoted and never scanned again
+        ("SELECT :v AS v", {"v": "a\\"}, [("a\\",)]),
+        (
+            "SELECT :v AS v, 1 AS one",
+            {"v": "x\\' AS v, 2 AS one --"},
+            [("x\\' AS v, 2 AS one --", 1)],
+        ),
+        ("SELECT :a AS a, :b AS b", {"a": ":b", "b": 1}, [(":b", 1)]),
+        # every rewrite pass reads quoted text by the same rule
+        ("SELECT 'x\\'y' AS a, IIF(1 < 0, 'a', 'b') AS b", None, [("x'y", "b")]),
+        ("SELECT CAST('a\\'b' AS VARCHAR) AS a", None, [("a'b",)]),
+        ("SELECT \"o'k\" AS a, 1_000 AS n", None, [("o'k", 1000)]),
+        ("SELECT \"o'k\" AS a, [1, 2] AS arr", None, [("o'k", [1, 2])]),
+        ("SELECT 1 AS `it's`, :p AS c", {"p": 5}, [(1, 5)]),
+    ],
+)
+def test_quoted_text_and_bound_values(conn, sql, params, rows):
+    assert conn.cursor().execute(sql, params).fetchall() == rows
+
+
 def test_multi_statement(conn):
     cur = conn.cursor().execute("SET @x = 2; SELECT @x * 3 AS y")
     assert cur.fetchall() == [(6,)]

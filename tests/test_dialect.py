@@ -22,6 +22,11 @@ def test_macro_ifnotnull_keeps_null():
 def test_macro_inside_string_untouched():
     out = dialect.expand_macros("SELECT 'IIF(a,b,c)' FROM t")
     assert out == "SELECT 'IIF(a,b,c)' FROM t"
+    for sql in ("SELECT \"IIF(a,b,c)\" FROM t", "SELECT 'it\\'s IIF(a,b,c)' FROM t"):
+        assert dialect.expand_macros(sql) == sql
+    # a call after an escaped or double-quoted quote is outside the literal
+    out = dialect.expand_macros("SELECT 'x\\'y', \"o'k\", IIF(a,b,c) FROM t")
+    assert out == "SELECT 'x\\'y', \"o'k\", IF(a, b, c) FROM t"
 
 
 def test_macro_qualified_name_untouched():
@@ -152,6 +157,10 @@ def test_bitwise_filter_coercion():
 def test_cast_types_do_not_touch_literal_contents():
     out = dialect.map_cast_types("SELECT CAST('keep AS INTEGER intact' AS VARCHAR)")
     assert "'keep AS INTEGER intact'" in out and "AS STRING)" in out
+    out = dialect.map_cast_types("SELECT CAST('a\\'b AS INTEGER' AS VARCHAR)")
+    assert out == "SELECT CAST('a\\'b AS INTEGER' AS STRING)"
+    out = dialect.map_cast_types("SELECT CAST(\"o'k AS INTEGER\" AS VARCHAR)")
+    assert out == "SELECT CAST(\"o'k AS INTEGER\" AS STRING)"
 
 
 def test_alias_named_varchar_is_not_a_cast():

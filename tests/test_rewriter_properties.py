@@ -5,7 +5,7 @@ from __future__ import annotations
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from opteryx_spark import rewriter
+from opteryx_spark import rewriter, sqltext
 
 sqlish = st.text(
     alphabet=st.characters(
@@ -49,6 +49,27 @@ def test_bind_params_escapes(params):
     for v in params.values():
         if isinstance(v, str) and "'" in v:
             assert "''" in out or "'" not in v
+
+
+@st.composite
+def quoted_spans(draw):
+    """A string literal or quoted identifier whose text holds quotes,
+    backslashes, commas and parens, escaped as Spark reads them."""
+    q = draw(st.sampled_from(["'", '"', "`"]))
+    body = draw(st.text(alphabet="a '\"\\`,()", max_size=12))
+    if q == "`":
+        return "`" + body.replace("`", "``") + "`"
+    escape = draw(st.sampled_from([q + q, "\\" + q]))
+    return q + body.replace("\\", "\\\\").replace(q, escape) + q
+
+
+@given(st.lists(quoted_spans(), min_size=1, max_size=6))
+@settings(max_examples=300, deadline=None)
+def test_quoted_spans_are_opaque(tokens):
+    sql = f"f({', '.join(tokens)})"
+    assert sqltext.split_top_level(sql[2:-1]) == tokens
+    assert sqltext.balanced_end(sql, 1) == len(sql)
+    assert sqltext.map_outside_literals(sql, str.upper) == f"F({', '.join(tokens)})"
 
 
 @given(sqlish)
