@@ -252,13 +252,6 @@ def content_hash_dedup(
 # --- exact n-gram Jaccard similarity join -----------------------------------
 
 
-def _maybe_broadcast(frame: DataFrame, flag: bool | None):
-    """True: force a broadcast hint.  None/False: no hint — Catalyst/AQE
-    size-gates the join from actual statistics, which is the only safe
-    default at 100 TB (the per-doc set table IS the corpus there)."""
-    return F.broadcast(frame) if flag is True else frame
-
-
 def ngram_jaccard_pairs(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -266,8 +259,6 @@ def ngram_jaccard_pairs(
     k: int = 2,
     threshold: float = 0.8,
     prefix_filter: bool = True,
-    broadcast_sets: bool | None = None,
-    persist_sets: bool = True,
     max_df: int | None = None,
     unique_texts: bool | str = "auto",
     weight_col: str | None = None,
@@ -308,10 +299,6 @@ def ngram_jaccard_pairs(
     the cost of redefining the similarity universe; None (default) keeps
     exact semantics.
 
-    ``broadcast_sets``: True forces broadcast of the per-doc array table
-    in verification; None (default) lets Catalyst/AQE size-gate it —
-    at 100 TB that table is the corpus and must shuffle instead.
-
     Shingles are xxhash64-hashed up front: set cardinalities (and hence
     Jaccard) are preserved (64-bit collisions are negligible), while the
     index join and the array intersections run on longs instead of
@@ -327,8 +314,6 @@ def ngram_jaccard_pairs(
             k=k,
             threshold=threshold,
             prefix_filter=prefix_filter,
-            broadcast_sets=broadcast_sets,
-            persist_sets=persist_sets,
             max_df=max_df,
             unique_texts=False,
             weight_col="n_copies",
@@ -360,9 +345,7 @@ def ngram_jaccard_pairs(
 
     if not prefix_filter:
         # naive full inverted-index self-join (correctness baseline)
-        sets_df = sets_df.withColumn("n", F.size("arr"))
-        if persist_sets:
-            sets_df = cache.persist(sets_df)
+        sets_df = cache.persist(sets_df.withColumn("n", F.size("arr")))
         sh = sets_df.select("id", F.explode("arr").alias("s"))
         sa = sets_df.select(F.col("id").alias("id1"), F.col("n").alias("na"))
         sb = sets_df.select(F.col("id").alias("id2"), F.col("n").alias("nb"))
@@ -402,9 +385,8 @@ def ngram_jaccard_pairs(
             F.size("ranked").alias("n"),
         )
     )
-    if persist_sets:
-        # enc feeds three plan branches (prefix index, both verify sides)
-        enc = cache.persist(enc)
+    # enc feeds three plan branches (prefix index, both verify sides)
+    enc = cache.persist(enc)
     # exact rational threshold arithmetic: float ceil() rounds ABOVE the
     # true ceiling for many (threshold, size) combos (e.g. t=0.16,
     # na+nb=29 -> float alpha 5 vs true 4), silently over-pruning pairs
@@ -458,8 +440,8 @@ def ngram_jaccard_pairs(
         # verify with a per-pair JVM set intersection (no second
         # explode/shuffle); Catalyst/AQE broadcasts the array table when
         # it is small enough, else this shuffles on doc id
-        .join(_maybe_broadcast(arrs1, broadcast_sets), "id1")
-        .join(_maybe_broadcast(arrs2, broadcast_sets), "id2")
+        .join(arrs1, "id1")
+        .join(arrs2, "id2")
         .select(
             "id1",
             "id2",
@@ -717,7 +699,6 @@ def minhash_dedup_verified(
     num_hashes: int = 64,
     bands: int = 16,
     k: int = 2,
-    broadcast_sets: bool | None = None,
     unique_texts: bool | str = "auto",
     max_bucket: int | None = 1000,
 ) -> DataFrame:
@@ -746,7 +727,6 @@ def minhash_dedup_verified(
             num_hashes,
             bands,
             k,
-            broadcast_sets,
             unique_texts=False,
             max_bucket=max_bucket,
         )
@@ -761,8 +741,8 @@ def minhash_dedup_verified(
     ov = F.size(F.array_intersect("arr1", "arr2"))
     union = F.size("arr1") + F.size("arr2") - ov
     return (
-        cand.join(_maybe_broadcast(arrs1, broadcast_sets), "id1")
-        .join(_maybe_broadcast(arrs2, broadcast_sets), "id2")
+        cand.join(arrs1, "id1")
+        .join(arrs2, "id2")
         .select("id1", "id2", (ov.cast("double") / union.cast("double")).alias("jaccard"))
         .filter(F.col("jaccard") >= threshold)
     )
@@ -1320,7 +1300,6 @@ def remove_chunks_in_corpus(
     text_col: str = "text",
     chunk_tokens: int = 32,
     min_chunk_tokens: int = 8,
-    broadcast_ref: bool | None = None,
 ) -> DataFrame:
     """Incremental exact-substring dedup that ACTS: remove from the new
     crawl every window whose text already exists in the ACCEPTED corpus
@@ -1334,8 +1313,7 @@ def remove_chunks_in_corpus(
     ``n_removed_chunks``, ``cleaned_text``; NULL text → NULL outputs.
     Unlike the global operator there is no keeper election — membership
     in the reference IS the verdict, so the decision is one digest join
-    (broadcast when the index fits, shuffle otherwise; ``broadcast_ref``
-    forces the hint, None lets AQE size-gate).
+    (AQE broadcasts it when the index fits and shuffles it otherwise).
     """
     from opteryx_spark.operators.text import chunk_documents
 
@@ -1361,7 +1339,7 @@ def remove_chunks_in_corpus(
         ).alias("_ck"),
     )
     per_doc = (
-        ch.join(_maybe_broadcast(ref, broadcast_ref), "_ck", "left")
+        ch.join(ref, "_ck", "left")
         .groupBy("_did")
         .agg(
             F.count(F.lit(1)).alias("n_chunks"),

@@ -1012,15 +1012,10 @@ def seasonal_residuals(
         ).alias("seasonal"),
         F.count(F.lit(1)).alias("n_slot"),
     )
-    from opteryx_spark.operators.dedup import _maybe_broadcast
-
     # null-safe join keys: a NULL group is a REAL slot (the oracle's
     # IS NOT DISTINCT FROM) — a plain key-list join would silently drop
     # NULL-group rows
-    s = _maybe_broadcast(
-        slots.select(*[F.col(k).alias(f"_s_{k}") for k in keys], "seasonal", "n_slot"),
-        None,
-    )
+    s = slots.select(*[F.col(k).alias(f"_s_{k}") for k in keys], "seasonal", "n_slot")
     cond = None
     for k in keys:
         c = F.col(k).eqNullSafe(F.col(f"_s_{k}"))

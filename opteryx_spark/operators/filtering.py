@@ -29,7 +29,6 @@ def decontaminate(
     text_col: str = "text",
     k: int = 3,
     min_overlap: int = 1,
-    broadcast_benchmark: bool | None = None,
 ) -> DataFrame:
     """Flag corpus documents sharing word ``k``-grams with a benchmark set.
 
@@ -41,9 +40,8 @@ def decontaminate(
     k-grams) and ``contaminated`` appended.
 
     Scale: the benchmark n-gram set is tiny relative to a training corpus
-    (benchmarks are MBs, corpora are TBs), so the membership join is
-    broadcast — pass ``broadcast_benchmark=True`` to force the hint, or
-    leave ``None`` and AQE size-gates it.  The corpus side is one
+    (benchmarks are MBs, corpora are TBs), so AQE broadcasts the
+    membership join from its runtime size.  The corpus side is one
     explode + hash-aggregate keyed by ``id_col``; no all-pairs anywhere.
     At extreme benchmark sizes the same shape runs as a shuffled
     left-semi join unchanged.
@@ -51,8 +49,6 @@ def decontaminate(
     bench_grams = benchmark.select(
         F.explode(text.shingles(text_col, k)).alias("gram")
     ).distinct()
-    if broadcast_benchmark:
-        bench_grams = F.broadcast(bench_grams)
 
     doc_grams = corpus.select(
         F.col(id_col).alias("_cid"), F.explode(text.shingles(text_col, k)).alias("gram")
@@ -240,8 +236,8 @@ def unigram_perplexity(
     ``broadcast_costs``: True forces a broadcast hint on the cost table;
     None (default) lets Catalyst/AQE size-gate the join — the only safe
     default on web-scale corpora, where the distinct-token set (URLs,
-    typos, hex blobs) is effectively unbounded and a forced hint can OOM
-    the driver (same contract as ``dedup._maybe_broadcast``).
+    typos, hex blobs) is effectively unbounded and a forced hint can run
+    the JVM out of memory.
     """
     toks = df.select(F.col(id_col).alias("_pid"), F.explode(text.tokens(text_col)).alias("_tok"))
     if model is None:
@@ -271,10 +267,8 @@ def unigram_perplexity(
             ).alias("_unk_nll")
         )
     )
-    from opteryx_spark.operators.dedup import _maybe_broadcast
-
     doc = (
-        toks.join(_maybe_broadcast(costs, broadcast_costs), "_tok", "left")
+        toks.join(F.broadcast(costs) if broadcast_costs else costs, "_tok", "left")
         .crossJoin(F.broadcast(unk))
         .select("_pid", F.coalesce(F.col("_nll"), F.col("_unk_nll")).alias("_nll"))
         .groupBy("_pid")
@@ -457,7 +451,6 @@ def remove_boilerplate_lines(
     id_col: str = "doc_id",
     text_col: str = "text",
     min_doc_freq: int = 2,
-    broadcast_hot: bool | None = True,
 ) -> DataFrame:
     """C4's line-frequency boilerplate pass (Raffel et al. 2020 §2.2;
     also CCNet/RefinedWeb): drop every LINE that occurs in at least
@@ -475,8 +468,7 @@ def remove_boilerplate_lines(
     Scale shape: line frequency is a word-count-style aggregate keyed on
     the line's md5 digest (digests travel, lines don't); the HOT set
     (only lines at/above ``min_doc_freq``) is joined back — tiny by
-    construction, so it broadcasts (``broadcast_hot=True`` default; None
-    lets AQE size-gate when the hot set may be large); the per-doc
+    construction, so it broadcasts; the per-doc
     rebuild is one id-keyed reduce sorting (pos, line) structs in-group.
     No all-pairs, no driver collect, no Python row path.  The plan reads
     the (id, text) projection ~3x (frequency pass, mark pass, outer
@@ -497,9 +489,7 @@ def remove_boilerplate_lines(
     hot = hot_line_digests(df, id_col, text_col, min_doc_freq).withColumn(
         "_hot", F.lit(True)
     )
-    from opteryx_spark.operators.dedup import _maybe_broadcast
-
-    marked = lines.join(_maybe_broadcast(hot, broadcast_hot), "_dg", "left")
+    marked = lines.join(F.broadcast(hot), "_dg", "left")
     per_doc = marked.groupBy("_lid").agg(
         F.count(F.lit(1)).alias("n_lines"),
         F.count(F.col("_hot")).alias("n_boilerplate_lines"),
@@ -930,7 +920,6 @@ def bigram_perplexity(
     text_col: str = "text",
     alpha: float = 0.5,
     max_avg_nll_millinats: int = 9000,
-    broadcast_costs: bool | None = None,
 ) -> DataFrame:
     """Bigram-LM perplexity gate — the conditional upgrade of
     :func:`unigram_perplexity`: per transition, ``p(w2|w1) =
@@ -947,10 +936,9 @@ def bigram_perplexity(
 
     Scale shape: bigram and context counts are two word-count aggregates
     over the exploded transitions; the cost table is
-    bigram-vocabulary-sized and joined back onto the transitions
-    (``broadcast_costs`` has the same contract as the unigram gate —
-    default None lets AQE size-gate it, since web-scale bigram
-    vocabularies are effectively unbounded); the per-doc reduce is keyed
+    bigram-vocabulary-sized and joined back onto the transitions with no
+    hint (AQE size-gates it, since web-scale bigram vocabularies are
+    effectively unbounded); the per-doc reduce is keyed
     by id.  No windows, no driver collects.
 
     Appends ``n_bigrams``, ``bigram_nll_millinats``,
@@ -971,8 +959,6 @@ def bigram_perplexity(
     trans = df.select(
         F.col(id_col).alias("_pid"), F.explode(pairs_arr).alias("_p")
     ).select("_pid", F.col("_p._w1").alias("_w1"), F.col("_p._w2").alias("_w2"))
-
-    from opteryx_spark.operators.dedup import _maybe_broadcast
 
     trans = cache.persist(trans)
     big = trans.groupBy("_w1", "_w2").agg(F.count(F.lit(1)).alias("_c12"))
@@ -1000,7 +986,7 @@ def bigram_perplexity(
         )
     )
     doc = (
-        trans.join(_maybe_broadcast(costs, broadcast_costs), ["_w1", "_w2"])
+        trans.join(costs, ["_w1", "_w2"])
         .groupBy("_pid")
         .agg(
             F.count(F.lit(1)).alias("n_bigrams"),

@@ -755,8 +755,6 @@ def rake_keyphrases(
         & (F.size(F.split(p, " ")) <= F.lit(int(max_phrase_words))),
     )
     phr = df.select(F.explode(phrases_arr).alias("phrase"))
-    from opteryx_spark.operators.dedup import _maybe_broadcast
-
     pw = cache.persist(
         phr.select(
             "phrase",
@@ -774,7 +772,7 @@ def rake_keyphrases(
     # every occurrence of a phrase contributes the identical word-score
     # sum, so sum-over-occurrences div occurrence-count is exact
     summed = (
-        pw.join(_maybe_broadcast(scores, None), "_w")
+        pw.join(scores, "_w")
         .groupBy("phrase")
         .agg(F.sum("_ws").alias("_raw"))
     )

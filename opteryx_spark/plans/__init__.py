@@ -1,14 +1,13 @@
-"""Plan inspection: the engine's EXPLAIN [ANALYZE] surface.
+"""Plan inspection: the engine's EXPLAIN surface.
 
-Reference parity: ``ExplainNode`` (``opteryx/operators/explain_node.py``)
-and the per-operator execution sensors (``serial_engine.py:69-128``).
-Spark-side, EXPLAIN is Catalyst's formatted plan and ANALYZE maps to
-executed-plan metrics from ``queryExecution``.
+Reference parity: ``ExplainNode`` (``opteryx/operators/explain_node.py``).
+Spark-side, EXPLAIN is Catalyst's formatted plan; the cursor's EXPLAIN
+ANALYZE runs the statement through the noop sink and prints the executed
+plan itself.
 
-Also provides scale-assertion helpers used by tests: `plan_has` /
-`assert_no_cartesian` let tests pin the *physical strategy* (broadcast vs
-shuffle, pushed filters) — correctness at 100 TB is a plan property, not
-just a result property.
+Tests use :func:`explain_text` and :func:`broadcast_join_count` to pin the
+*physical strategy* (broadcast vs shuffle, pushed filters) — correctness
+at 100 TB is a plan property, not just a result property.
 """
 
 from __future__ import annotations
@@ -22,30 +21,5 @@ def explain_text(df: DataFrame, mode: str = "formatted") -> str:
     )
 
 
-def executed_metrics(df: DataFrame) -> str:
-    """Post-execution metrics string (EXPLAIN ANALYZE analogue).
-
-    Executes through the noop sink (same path as the cursor's EXPLAIN
-    ANALYZE) so runtime metrics exist without ever materializing the
-    result set on the driver — collect() here would OOM on a big result.
-    """
-    df.write.format("noop").mode("overwrite").save()
-    return df._jdf.queryExecution().executedPlan().toString()
-
-
-def plan_has(df: DataFrame, *fragments: str) -> bool:
-    text = explain_text(df)
-    return all(f in text for f in fragments)
-
-
 def broadcast_join_count(df: DataFrame) -> int:
     return explain_text(df).count("BroadcastHashJoin")
-
-
-def pushed_filters(df: DataFrame) -> list[str]:
-    text = explain_text(df)
-    out = []
-    for line in text.splitlines():
-        if "PushedFilters" in line:
-            out.append(line.strip())
-    return out

@@ -1,11 +1,6 @@
-"""Suite wave 35 — STAGED FOR THE ROUND-9 WINDOW (not imported by
-``load_all`` yet): registering these six in round 8 would push
-(registry − driver-green) past the 50-slot driver window (46 + 6 = 52),
-the exact overflow VERDICT r6/r7 banned.  The operators, unit tests
-(``tests/test_wave35.py``) and these oracle twins are complete and
-compare-verified locally (``tools/staged_preflight.py`` — run log in
-NOTES_r8); r9 activation is one import line in ``suite/__init__.py``
-AFTER the round ritual folds the r8 greens.
+"""Suite wave 35, imported by ``load_all`` like every other suite module.
+Unit tests live in ``tests/test_wave35.py``; the oracle twins
+compare-verify through ``tools/window_preflight.py --only <names>``.
 
 Surface: HITS hubs/authorities, greedy k-center coreset selection,
 funnel time-to-convert, weekday-ANOVA seasonal strength, shingle

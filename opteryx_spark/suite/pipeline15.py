@@ -1,6 +1,6 @@
-"""Suite wave 36 — STAGED FOR THE ROUND-9 WINDOW alongside
-``pipeline14`` (same rationale: r8's driver window is at 46/50; see
-pipeline14's module docstring).  Verified by ``tools/staged_preflight.py``.
+"""Suite wave 36, imported by ``load_all`` like every other suite module;
+the oracle twins compare-verify through ``tools/window_preflight.py
+--only <names>``.
 
 Surface: exact two-sample KS drift, classical additive decomposition,
 semi-hard triplet mining, cross-batch term trends, and the A/B

@@ -1,6 +1,6 @@
-"""Suite wave 37 — STAGED FOR THE ROUND-9 WINDOW alongside
-``pipeline14`` / ``pipeline15`` (same rationale; verified by
-``tools/staged_preflight.py``).
+"""Suite wave 37, imported by ``load_all`` like every other suite module;
+the oracle twins compare-verify through ``tools/window_preflight.py
+--only <names>``.
 
 Surface: common-neighbor Jaccard link prediction and the cohort
 lifetime-value matrix."""
