@@ -22,7 +22,9 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from opteryx_spark import cache
+from opteryx_spark.operators import hashing
 from opteryx_spark.operators.text import shingles, tokens
+from opteryx_spark.session import spread
 
 # --- exact-dedup prefilter for the similarity joins --------------------------
 #
@@ -75,7 +77,7 @@ def _text_groups(df: DataFrame, id_col: str, text_col: str) -> tuple[DataFrame, 
     The exemplar's ``id`` IS the gid, so pair expansion joins members
     directly on the inner pair ids (two joins, not four).
     """
-    g = _spread(df).select(
+    g = spread(df).select(
         F.col(id_col).alias("id"),
         F.col(text_col).alias(text_col),
         F.xxhash64(text_col).alias("gid"),
@@ -124,104 +126,10 @@ def _expand_pairs(
     )
     return inter.unionByName(intra)
 
-# deterministic odd multipliers/offsets for the minhash permutation family
-_MH_SEED_A = 0x9E3779B97F4A7C15
-_MH_SEED_B = 0xC2B2AE3D27D4EB4F
 
-# portable-hash variant: all arithmetic stays under 2^62 so the identical
-# integer computation is expressible in DuckDB BIGINTs (same pattern that
-# made the winnowing oracle exact) — used by the oracle-bearing minhash
-# suite entry.  2^31-1 is Mersenne prime M31; 1000003 matches winnowing.
-_PORTABLE_MOD = 2147483647
-_PORTABLE_P = 1000003
-
-
-def _portable_hash_expr(x: Column) -> Column:
-    """Polynomial char hash mod 2^31-1: fold(acc*31 + codepoint).
-
-    Reproducible bit-for-bit in DuckDB (list_reduce over ascii codes);
-    products stay < 2^36, far inside long range.
-
-    Folds over ``split(x, '')`` — the code-point sequence in order (an
-    empty regex matches only BETWEEN code points in Java, never inside a
-    surrogate pair, and combining marks stay separate code points, same
-    as ``substr``'s code-point indexing) — so the fold is linear in the
-    string length.
-
-    Version sensitivity (ADVICE r11): this depends on Spark's
-    ``split(x, '')`` emitting EXACTLY the code-point array with no
-    trailing empty element — raw Java ``Pattern.split("", -1)`` keeps a
-    trailing '' (``ascii('') = 0`` would inject a spurious ``*31`` step
-    and shift every hash, breaking the DuckDB twin).  True on the pinned
-    Spark 4.1.2 and pinned by the equivalence battery below; when bumping
-    Spark, keep both folds and re-run that battery first.  The per-position ``substr(i, 1)`` formulation it
-    replaces rescanned the string's UTF-8 bytes from the front at every
-    position (O(n^2) per key: ~16x the char work on a 32-char md5 key);
-    value-identical on every code point, proven by
-    ``tests/test_r11_optimizations.py`` against the retained reference
-    fold (adversarial unicode + randomized + corpus shingles).
-    """
-    n = F.length(x)
-    return F.aggregate(
-        F.when(n >= 1, F.split(x, "")).otherwise(
-            F.array().cast("array<string>")
-        ),
-        F.lit(0).cast("long"),
-        lambda acc, c: (acc * F.lit(31) + F.ascii(c).cast("long"))
-        % F.lit(_PORTABLE_MOD),
-    )
-
-
-def _portable_hash_expr_reference(x: Column) -> Column:
-    """The original per-position fold (substr per index): O(n^2) but
-    trivially aligned with the DuckDB twin's definition.  Kept ONLY as
-    the equivalence witness for ``_portable_hash_expr`` — not called by
-    any operator."""
-    n = F.length(x)
-    return F.aggregate(
-        F.when(n >= 1, F.sequence(F.lit(1), n)).otherwise(
-            F.array().cast("array<int>")
-        ),
-        F.lit(0).cast("long"),
-        lambda acc, i: (acc * F.lit(31) + F.ascii(x.substr(i, F.lit(1))).cast("long"))
-        % F.lit(_PORTABLE_MOD),
-    )
-
-
-def _portable_perm_params(num_hashes: int) -> list[tuple[int, int]]:
-    """31-bit reductions of the 64-bit permutation family: a ∈ [1, M-1]
-    (never the zero map), b ∈ [0, M-1]; (a*h+b) mod M products < 2^62."""
-    return [
-        ((a % (_PORTABLE_MOD - 1)) + 1, b % _PORTABLE_MOD)
-        for a, b in _perm_params(num_hashes)
-    ]
-
-
-def _perm_params(num_hashes: int) -> list[tuple[int, int]]:
-    out = []
-    a, b = _MH_SEED_A, _MH_SEED_B
-    for _ in range(num_hashes):
-        a = (a * 6364136223846793005 + 1442695040888963407) % (1 << 64)
-        b = (b * 6364136223846793005 + 1442695040888963407) % (1 << 64)
-        out.append((a | 1, b))  # odd multiplier => bijective mod 2^64
-    return out
-
-
-def _signed64(v: int) -> int:
-    return v - (1 << 64) if v >= (1 << 63) else v
-
-
-def _spread(df: DataFrame) -> DataFrame:
-    """Ensure the input is at least default-parallelism partitions wide.
-
-    A small file arrives as one split; without this every per-row kernel
-    (shingling, hashing) runs on a single core.  At 100 TB inputs are
-    already thousands of splits and this is a no-op.
-    """
-    target = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < target:
-        return df.repartition(target)
-    return df
+# The hashes below (MinHash permutations, the portable polynomial hash,
+# bloom positions) come from operators/hashing.py — the one portable
+# family the DuckDB oracles replay and the stream twins share.
 
 
 # --- exact ------------------------------------------------------------------
@@ -337,7 +245,7 @@ def ngram_jaccard_pairs(
         return _expand_pairs(inner, members, active, {"jaccard": F.lit(1.0)})
 
     wcols = [F.col(weight_col).alias("_w")] if weight_col else []
-    sets_df = _spread(df).select(
+    sets_df = spread(df).select(
         F.col(id_col).alias("id"),
         F.transform(shingles(text_col, k), lambda x: F.xxhash64(x)).alias("arr"),
         *wcols,
@@ -482,55 +390,17 @@ def minhash_signatures(
     DuckDB oracle, so the whole LSH pipeline is value-verifiable.
     """
     # map-side only: the whole signature is ONE fold over the per-doc hash
-    # array — no explode, no groupBy, no shuffle.  The accumulator is the
-    # running 64-wide component-min vector; each shingle hash updates all
-    # components via zip_with against the literal permutation array.  One
-    # pass over the hashes (vs num_hashes array_min/transform passes) and
-    # one compact expression tree — measured 27% faster per row with
-    # byte-identical output.  Duplicate shingles can't change a min, so
-    # the un-deduped array is equivalent to the set; docs with no
-    # shingles are dropped (same semantics as the explode+groupBy
-    # formulation this replaces).
-    long_max = (1 << 63) - 1
-    if portable_hash:
-        hashed = _spread(df).select(
-            F.col(id_col).alias("id"),
-            F.transform(shingles(text_col, k), _portable_hash_expr).alias("harr"),
-        )
-        perms = F.array(
-            *[
-                F.struct(F.lit(a).alias("a"), F.lit(b).alias("b"))
-                for a, b in _portable_perm_params(num_hashes)
-            ]
-        )
-        step = lambda acc, h: F.zip_with(  # noqa: E731
-            acc, perms, lambda m, p: F.least(m, (h * p["a"] + p["b"]) % F.lit(_PORTABLE_MOD))
-        )
-    else:
-        spark = df.sparkSession
-        if str(spark.conf.get("spark.sql.ansi.enabled", "false")).lower() == "true":
-            raise RuntimeError(
-                "minhash permutations use wrapping 64-bit arithmetic, which "
-                "ANSI mode rejects as overflow: set spark.sql.ansi.enabled="
-                "false (opteryx_spark.session.get_session does), or pass "
-                "portable_hash=True for the mod-2^31-1 variant"
-            )
-        hashed = _spread(df).select(
-            F.col(id_col).alias("id"),
-            F.transform(shingles(text_col, k), lambda x: F.xxhash64(x)).alias("harr"),
-        )
-        perms = F.array(
-            *[
-                F.struct(F.lit(_signed64(a)).alias("a"), F.lit(_signed64(b)).alias("b"))
-                for a, b in _perm_params(num_hashes)
-            ]
-        )
-        # permutation is wrapping 64-bit (h*a+b); min over signed longs
-        step = lambda acc, h: F.zip_with(  # noqa: E731
-            acc, perms, lambda m, p: F.least(m, h * p["a"] + p["b"])
-        )
-    sig = F.aggregate(
-        F.col("harr"), F.array_repeat(F.lit(long_max).cast("long"), num_hashes), step
+    # array (hashing.minhash_signature) — no explode, no groupBy, no
+    # shuffle.  One pass over the hashes (vs num_hashes array_min/transform
+    # passes) and one compact expression tree — measured 27% faster per
+    # row with byte-identical output.  Docs with no shingles are dropped
+    # (same semantics as the explode+groupBy formulation this replaces).
+    hashed = spread(df).select(
+        F.col(id_col).alias("id"),
+        hashing.shingle_hashes(text_col, k, portable_hash).alias("harr"),
+    )
+    sig = hashing.minhash_signature(
+        F.col("harr"), num_hashes, portable_hash, df.sparkSession
     )
     return hashed.filter(F.size("harr") > 0).select("id", sig.alias("sig"))
 
@@ -549,22 +419,12 @@ def _banded_buckets(
     rows = num_hashes // bands
     sig = minhash_signatures(df, id_col, text_col, num_hashes, k, portable_hash)
 
-    def _band_hash(i: int) -> Column:
-        if not portable_hash:
-            return F.xxhash64(
-                *[F.element_at("sig", i * rows + j + 1) for j in range(rows)]
-            )
-        # polynomial fold over the band's components — DuckDB-expressible
-        bh: Column = F.lit(0).cast("long")
-        for j in range(rows):
-            bh = (bh * F.lit(_PORTABLE_P) + F.element_at("sig", i * rows + j + 1)) % F.lit(
-                _PORTABLE_MOD
-            )
-        return bh
-
     band_cols = F.array(
         *[
-            F.struct(F.lit(i).alias("band"), _band_hash(i).alias("bh"))
+            F.struct(
+                F.lit(i).alias("band"),
+                hashing.band_hash("sig", i, rows, portable_hash).alias("bh"),
+            )
             for i in range(bands)
         ]
     )
@@ -735,7 +595,7 @@ def minhash_dedup_verified(
     cand = minhash_lsh_pairs(
         df, id_col, text_col, num_hashes, bands, k, max_bucket, unique_texts=False
     ).select("id1", "id2")
-    sets_df = _spread(df).select(F.col(id_col).alias("id"), shingles(text_col, k).alias("arr"))
+    sets_df = spread(df).select(F.col(id_col).alias("id"), shingles(text_col, k).alias("arr"))
     arrs1 = sets_df.select(F.col("id").alias("id1"), F.col("arr").alias("arr1"))
     arrs2 = sets_df.select(F.col("id").alias("id2"), F.col("arr").alias("arr2"))
     ov = F.size(F.array_intersect("arr1", "arr2"))
@@ -770,10 +630,10 @@ def simhash(
     xxhash64 — pass ``bits<=31``; every vote is DuckDB-reproducible so
     the whole pipeline carries an oracle.
     """
-    token_hash = _portable_hash_expr if portable_hash else F.xxhash64
+    token_hash = hashing.portable_hash_expr if portable_hash else F.xxhash64
     if portable_hash and bits > 31:
         raise ValueError("portable simhash carries at most 31 bits")
-    hashed = _spread(df).select(
+    hashed = spread(df).select(
         F.col(id_col).alias("id"),
         F.transform(tokens(text_col), lambda x: token_hash(x)).alias("harr"),
     )
@@ -782,7 +642,7 @@ def simhash(
     # array (vs ``bits`` filter passes — 24% faster, identical output).
     # mask == bitval: 1<<j as signed 64-bit (bit 63 is the sign bit).
     zero = F.lit(0).cast("long")
-    masks = F.array(*[F.lit(_signed64(1 << j)).cast("long") for j in range(bits)])
+    masks = F.array(*[F.lit(hashing.signed64(1 << j)).cast("long") for j in range(bits)])
     n = F.size("harr")
     counts = F.aggregate(
         F.col("harr"),
@@ -932,7 +792,7 @@ def winnow_pairs(
     # rolling-hash fingerprint pipeline (three times total — the
     # minhash_lsh_pairs persist precedent)
     fps = cache.persist(
-        _spread(df).select(
+        spread(df).select(
             F.col(id_col).alias("id"),
             F.explode(winnow_fingerprints(text_col, k, window)).alias("fp"),
         )
@@ -1614,17 +1474,9 @@ def minhash_dedup_against_index(
 
 
 def _bloom_pos_exprs(h0, m_bits: int, k: int) -> list:
-    """k bloom positions from a base hash: the degski xorshift-multiply
-    rounds used across the portable sketch family (BIGINT-safe)."""
-    out = []
-    mod32 = F.lit(4294967296)
-    for i in range(k):
-        h = (h0 + F.lit(i) * F.lit(2654435761)) % mod32
-        for _ in range(2):
-            h = ((F.shiftright(h, 16).bitwiseXOR(h)) * F.lit(0x45D9F3B)) % mod32
-        h = F.shiftright(h, 16).bitwiseXOR(h)
-        out.append(h % F.lit(m_bits))
-    return out
+    """k bloom positions from a base hash: members 0..k-1 of the seeded
+    ``hashing.hash32`` family (BIGINT-safe)."""
+    return [hashing.hash32(h0, seed=i) % F.lit(m_bits) for i in range(k)]
 
 
 def bloom_positions(
@@ -1648,7 +1500,7 @@ def bloom_positions(
     # every key paid k interpreted hash folds instead of one
     return (
         keys.filter(F.col(key_col).isNotNull())
-        .select(_portable_hash_expr(F.col(key_col)).alias("_h0"))
+        .select(hashing.portable_hash_expr(F.col(key_col)).alias("_h0"))
         .select(
             F.explode(
                 F.array(*_bloom_pos_exprs(F.col("_h0"), m_bits, k))
@@ -1681,7 +1533,7 @@ def bloom_prefilter(
     hits = (
         probe.filter(F.col("_key").isNotNull())
         # named-column base hash: k positions share ONE char fold (r11)
-        .select("_key", _portable_hash_expr(F.col("_key")).alias("_h0"))
+        .select("_key", hashing.portable_hash_expr(F.col("_key")).alias("_h0"))
         .select(
             "_key",
             F.explode(
@@ -1744,7 +1596,7 @@ def containment_pairs(
     # aggregate and both self-join sides otherwise re-run the shingle
     # explode four times (the minhash_lsh_pairs persist precedent)
     sh = cache.persist(
-        _spread(df).select(
+        spread(df).select(
             F.col(id_col).alias("id"), F.explode(shingles(text_col, k)).alias("sh")
         )
     )

@@ -8,9 +8,8 @@ percentiles are Spark's exact interpolated ``percentile`` (the
 cross-engine-identical form the ClickBench entries already prove out),
 sums follow the DECIMAL(25,8) exact-sum convention, and hashed features
 use the engine's portable 31-bit polynomial + degski xorshift hashes
-(``operators/dedup.py::_portable_hash_expr`` /
-``operators/profile.py`` CMS bucketing) so every bucket and sign is
-reproducible in plain SQL.
+(``operators/hashing.py``: ``portable_hash_expr`` / ``hash32``) so every
+bucket and sign is reproducible in plain SQL.
 
 Scale notes (100 TB):
 - ``winsorize_robust_scale`` aggregates per-group stats FIRST (a
@@ -35,7 +34,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from opteryx_spark import cache
-from opteryx_spark.operators.dedup import _portable_hash_expr
+from opteryx_spark.operators.hashing import hash32, portable_hash_expr
 
 __all__ = [
     "winsorize_robust_scale",
@@ -129,12 +128,7 @@ def hash_features(
     """
     if n_features < 1:
         raise ValueError("n_features must be >= 1")
-    mod32 = F.lit(4294967296)
-    h0 = _portable_hash_expr(F.col("_tk"))
-    h = h0 % mod32
-    for _ in range(2):
-        h = ((F.shiftright(h, 16).bitwiseXOR(h)) * F.lit(0x45D9F3B)) % mod32
-    h = F.shiftright(h, 16).bitwiseXOR(h)
+    h = hash32(portable_hash_expr(F.col("_tk")))
     return (
         df.select(F.col(id_col), F.explode(F.col(tokens_col)).alias("_tk"))
         .select(

@@ -900,10 +900,10 @@ def weighted_sample(
     """
     if k < 1:
         raise ValueError("k must be >= 1")
-    from opteryx_spark.operators.dedup import _PORTABLE_MOD, _portable_hash_expr
+    from opteryx_spark.operators.hashing import PORTABLE_MOD, portable_hash_expr
 
-    h = _portable_hash_expr(F.concat(F.lit(salt), F.col(id_col).cast("string")))
-    u = (h + F.lit(1)).cast("double") / F.lit(float(_PORTABLE_MOD + 1))
+    h = portable_hash_expr(F.concat(F.lit(salt), F.col(id_col).cast("string")))
+    u = (h + F.lit(1)).cast("double") / F.lit(float(PORTABLE_MOD + 1))
     lnm = F.floor(-F.log(u) * F.lit(1000000.0) + F.lit(0.5)).cast("long")
     key = lnm.cast("double") / (F.col(weight_col).cast("double") * F.lit(1000000.0))
     return (

@@ -17,6 +17,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from opteryx_spark import cache
+from opteryx_spark.operators.hashing import hash32, hll_bucket_rho, portable_hash_expr
 
 
 def _render(c: Column, dtype: str) -> Column:
@@ -89,13 +90,14 @@ def hll_estimate_portable(
     sketch is value-verifiable.
 
     Flajolet et al. 2007 exactly: 32-bit xorshift-multiply hash (the
-    degski/Stafford ``hash32``: two rounds of ``h = ((h>>16)^h)·0x45d9f3b
-    mod 2^32`` then a final fold — full avalanche, and every product stays
-    under 2^63 so the arithmetic is BIGINT-safe in any engine; a bare
-    multiplicative hash leaves the LOW bits unmixed and ρ reads exactly
-    those, which measured a 25% bias on sequential keys), bucket = top
-    ``p`` bits, ρ = leading-zero rank of the remaining ``32−p`` bits
-    (computed as ``length(bin(w))`` — no floats), registers = per-bucket
+    degski/Stafford ``hash32`` of ``operators/hashing.py``: two rounds of
+    ``h = ((h>>16)^h)·0x45d9f3b mod 2^32`` then a final fold — full
+    avalanche, and every product stays under 2^63 so the arithmetic is
+    BIGINT-safe in any engine; a bare multiplicative hash leaves the LOW
+    bits unmixed and ρ reads exactly those, which measured a 25% bias on
+    sequential keys), bucket = top ``p`` bits, ρ = leading-zero rank of
+    the remaining ``32−p`` bits (computed as ``length(bin(w))`` — no
+    floats; ``hashing.hll_bucket_rho``), registers = per-bucket
     MAX(ρ).  The harmonic sum is kept EXACT: each
     ``2^−ρ`` term is scaled by ``2^(32−p+1)`` into a BIGINT, so the only
     float ops are the final α·m²/sum and the small-range linear-counting
@@ -115,18 +117,8 @@ def hll_estimate_portable(
     from pyspark.sql import functions as F
 
     m = 1 << p
-    wbits = 32 - p
-    scale_pow = wbits + 1  # 2^-rho * 2^(wbits+1) is integral for rho <= wbits+1
-    mod32 = F.lit(4294967296)
-    h = F.col(col).cast("long") % mod32
-    for _ in range(2):
-        h = ((F.shiftright(h, 16).bitwiseXOR(h)) * F.lit(0x45D9F3B)) % mod32
-    h = F.shiftright(h, 16).bitwiseXOR(h)
-    bucket = F.shiftright(h, wbits)
-    w = h % F.lit(1 << wbits)
-    rho = F.when(w == 0, F.lit(wbits + 1)).otherwise(
-        F.lit(wbits) - F.length(F.bin(w)) + F.lit(1)
-    )
+    scale_pow = 32 - p + 1  # 2^-rho * 2^(32-p+1) is integral for rho <= 32-p+1
+    bucket, rho = hll_bucket_rho(F.col(col), p)
     regs = (
         df.select(bucket.alias("_b"), rho.alias("_r"))
         .filter(F.col("_b").isNotNull())
@@ -245,18 +237,8 @@ def hll_estimate_by_group(
     from pyspark.sql import functions as F
 
     m = 1 << p
-    wbits = 32 - p
-    scale_pow = wbits + 1
-    mod32 = F.lit(4294967296)
-    h = F.col(col).cast("long") % mod32
-    for _ in range(2):
-        h = ((F.shiftright(h, 16).bitwiseXOR(h)) * F.lit(0x45D9F3B)) % mod32
-    h = F.shiftright(h, 16).bitwiseXOR(h)
-    bucket = F.shiftright(h, wbits)
-    w = h % F.lit(1 << wbits)
-    rho = F.when(w == 0, F.lit(wbits + 1)).otherwise(
-        F.lit(wbits) - F.length(F.bin(w)) + F.lit(1)
-    )
+    scale_pow = 32 - p + 1
+    bucket, rho = hll_bucket_rho(F.col(col), p)
     regs = (
         df.select(*group_cols, bucket.alias("_b"), rho.alias("_r"))
         .filter(F.col("_b").isNotNull())
@@ -305,19 +287,12 @@ def hll_estimate_by_group(
 
 
 def cms_bucket(hcol, row: int, w: int):
-    """Counter index for CMS hash row ``row``: the degski xorshift-multiply
-    finisher over the portable polynomial hash, offset per row — constants
-    < 2^31 so every intermediate stays BIGINT-safe and the whole expression
-    is SQL-reproducible (shared by the batch sketch, its oracle, and the
-    streaming twin so the three can never drift)."""
-    from pyspark.sql import functions as F
-
-    mod32 = F.lit(4294967296)
-    h = (hcol + F.lit(row) * F.lit(2654435761)) % mod32
-    for _ in range(2):
-        h = ((F.shiftright(h, 16).bitwiseXOR(h)) * F.lit(0x45D9F3B)) % mod32
-    h = F.shiftright(h, 16).bitwiseXOR(h)
-    return h % F.lit(w)
+    """Counter index for CMS hash row ``row``: member ``row`` of the
+    seeded degski finisher family (``operators/hashing.py::hash32``) over
+    the portable polynomial hash ``hcol`` — BIGINT-safe and
+    SQL-reproducible (shared by the batch sketch and the streaming twin;
+    the oracle replays it)."""
+    return hash32(hcol, seed=row) % F.lit(w)
 
 
 def cms_counters(df, text_col: str = "text", d: int = 4, w: int = 8192):
@@ -329,12 +304,11 @@ def cms_counters(df, text_col: str = "text", d: int = 4, w: int = 8192):
     from pyspark.sql import functions as F
 
     from opteryx_spark.operators import text as _text
-    from opteryx_spark.operators.dedup import _portable_hash_expr
 
     toks = df.select(F.explode(_text.tokens(text_col)).alias("_tk"))
     # bind the polynomial hash to a named column first (r11): inlining it
     # into the d band structs re-folds the token's chars d times per row
-    cells = toks.select(_portable_hash_expr(F.col("_tk")).alias("_h")).select(
+    cells = toks.select(portable_hash_expr(F.col("_tk")).alias("_h")).select(
         F.explode(
             F.array(
                 *[
@@ -382,7 +356,6 @@ def cms_token_counts(
     from pyspark.sql import functions as F
 
     from opteryx_spark.operators import text as _text
-    from opteryx_spark.operators.dedup import _portable_hash_expr
 
     probe_terms = sorted(set(probe_terms or []))
     if not probe_terms:
@@ -405,7 +378,7 @@ def cms_token_counts(
     # bind the polynomial hash to a named column first (r11): inlining it
     # into the d band structs re-folds the token's chars d times per row
     cells = tok_counts.select(
-        F.col("_n"), _portable_hash_expr(F.col("_tk")).alias("_h")
+        F.col("_n"), portable_hash_expr(F.col("_tk")).alias("_h")
     ).select(
         F.col("_n"),
         F.explode(
@@ -424,7 +397,7 @@ def cms_token_counts(
     )
 
     probes = spark.createDataFrame([(t,) for t in probe_terms], "term string")
-    ph = _portable_hash_expr(F.col("term"))
+    ph = portable_hash_expr(F.col("term"))
     probe_cells = probes.select(
         "term",
         F.explode(
@@ -617,17 +590,6 @@ def weighted_median(
     return keeper
 
 
-def _hash32(col) -> "F.Column":
-    """The module's portable 32-bit degski xorshift-multiply hash (the
-    :func:`hll_estimate_portable` recipe) — BIGINT-safe, full avalanche,
-    SQL-reproducible (`xor(h >> 16, h) * 73244475 % 2^32` twice + fold)."""
-    mod32 = F.lit(4294967296)
-    h = col.cast("long") % mod32
-    for _ in range(2):
-        h = ((F.shiftright(h, 16).bitwiseXOR(h)) * F.lit(0x45D9F3B)) % mod32
-    return F.shiftright(h, 16).bitwiseXOR(h)
-
-
 def kmv_distinct_ops(
     a: DataFrame,
     b: DataFrame,
@@ -663,10 +625,10 @@ def kmv_distinct_ops(
     """
     tagged = (
         a.filter(F.col(col).isNotNull())
-        .select(_hash32(F.col(col)).alias("_h"), F.lit(1).alias("_m"))
+        .select(hash32(F.col(col).cast("long")).alias("_h"), F.lit(1).alias("_m"))
         .unionAll(
             b.filter(F.col(col).isNotNull()).select(
-                _hash32(F.col(col)).alias("_h"), F.lit(2).alias("_m")
+                hash32(F.col(col).cast("long")).alias("_h"), F.lit(2).alias("_m")
             )
         )
     )

@@ -21,7 +21,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from opteryx_spark import cache
-from opteryx_spark.operators.dedup import _spread
+from opteryx_spark.session import spread
+
 
 def _dot(a: Column, b: Column) -> Column:
     """Sequential left-fold dot product in doubles.
@@ -54,7 +55,7 @@ def cosine_topk(
     measured against.  Map-side expression + top-k, no corpus shuffle."""
     q = F.array(*[F.lit(float(v)) for v in query_vec])
     return (
-        _spread(df).select(F.col(id_col), cosine(F.col(vec_col), q).alias("cosim"))
+        spread(df).select(F.col(id_col), cosine(F.col(vec_col), q).alias("cosim"))
         .orderBy(F.desc("cosim"), F.asc(id_col))
         .limit(k)
     )
@@ -76,7 +77,7 @@ def cosine_pairs(
     # fold per pair instead of three, bit-identical (sqrt(dot(v,v)) is
     # the same IEEE expression per row as it was per pair); measured
     # 8.0 s -> 2.9 s on the 2000-vector sf0.1 entry
-    a = _spread(df).select(
+    a = spread(df).select(
         F.col(id_col).alias("id1"),
         F.col(vec_col).alias("v1"),
         _norm(F.col(vec_col)).alias("_n1"),
@@ -162,7 +163,7 @@ def lsh_cosine_pairs(
     # were re-folded per candidate pair — measured 4x on the sf0.1 entry:
     # 11.4 s -> 2.8 s, bit-identical since sqrt(dot(v,v)) is the same
     # IEEE expression either way).
-    buckets = _spread(df).select(
+    buckets = spread(df).select(
         F.col(id_col).alias("id"),
         F.col(vec_col).alias("v"),
         _norm(F.col(vec_col)).alias("_n"),
@@ -240,7 +241,7 @@ def hyperplane_lsh_topk(
     scan fraction: radius 2 on 8 planes probes 37/256 ≈ 14% of buckets.
     """
     planes = random_hyperplanes(len(query_vec), n_planes, seed)
-    signed = _spread(df).select(
+    signed = spread(df).select(
         F.col(id_col), F.col(vec_col), hyperplane_signature(F.col(vec_col), planes).alias("bucket")
     )
     qsig = 0
@@ -287,7 +288,7 @@ def ivf_index(
     from pyspark.ml.clustering import KMeans
     from pyspark.ml.functions import array_to_vector, vector_to_array
 
-    data = _spread(df.filter(F.col(vec_col).isNotNull())).select(
+    data = spread(df.filter(F.col(vec_col).isNotNull())).select(
         F.col(id_col), F.col(vec_col), array_to_vector(F.col(vec_col)).alias("features")
     )
     model = KMeans(k=n_clusters, seed=seed, featuresCol="features").fit(data)

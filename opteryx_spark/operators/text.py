@@ -912,8 +912,8 @@ def char_entropy(
     s = F.substring(F.col(text_col), 1, prefix_len)
     # explode the code-point array (split on the empty regex matches only
     # BETWEEN code points — same pieces as per-position ``substr``, proven
-    # by the _portable_hash_expr equivalence battery and pinned again in
-    # tests/test_r11_optimizations.py).  The per-position formulation it
+    # by the hashing.portable_hash_expr equivalence battery and pinned
+    # again in tests/test_r11_optimizations.py).  The per-position formulation it
     # replaces (explode(sequence(1, len)) + substr(_s, _i, 1)) rescanned
     # the prefix's UTF-8 bytes from the front at every position — O(n²)
     # byte work per document on a 512-char prefix.

@@ -22,7 +22,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 # Configs that are safe (and wanted) at any scale.  Only applied when we
 # build the session ourselves; a caller-provided session is respected.
@@ -60,6 +60,19 @@ _BUILDER_CONF = {
 
 def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
+
+
+def spread(df: DataFrame) -> DataFrame:
+    """Ensure the input is at least default-parallelism partitions wide.
+
+    A small file arrives as one split; without this every per-row kernel
+    (shingling, hashing) runs on a single core.  At 100 TB inputs are
+    already thousands of splits and this is a no-op.
+    """
+    target = df.sparkSession.sparkContext.defaultParallelism
+    if df.rdd.getNumPartitions() < target:
+        return df.repartition(target)
+    return df
 
 
 def get_session(

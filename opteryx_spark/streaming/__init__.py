@@ -504,18 +504,10 @@ def minhash_dedup_stream(
     keep the batch operator's join form (stream-static joins) or shard
     the stream by band.
     """
-    from opteryx_spark.operators.dedup import (
-        _PORTABLE_MOD,
-        _PORTABLE_P,
-        _perm_params,
-        _portable_hash_expr,
-        _portable_perm_params,
-        _signed64,
-    )
-    from opteryx_spark.operators.text import _let, shingles
+    from opteryx_spark.operators import hashing
+    from opteryx_spark.operators.text import _let
 
     rows = num_hashes // bands
-    long_max = (1 << 63) - 1
 
     # --- static side: bucket map (built once, broadcast) ---------------------
     entries = (
@@ -532,52 +524,20 @@ def minhash_dedup_stream(
         entries.agg(F.map_from_entries(F.collect_list(F.struct("_k", "_vs"))).alias("_idx"))
     )
 
-    # --- per-row signature + band keys (same arithmetic as batch) ------------
-    if portable_hash:
-        perms = F.array(
-            *[
-                F.struct(F.lit(a).alias("a"), F.lit(b).alias("b"))
-                for a, b in _portable_perm_params(num_hashes)
-            ]
-        )
-        harr = F.transform(shingles(text_col, k), _portable_hash_expr)
-        step = lambda acc, h: F.zip_with(  # noqa: E731
-            acc, perms, lambda m, p: F.least(m, (h * p["a"] + p["b"]) % F.lit(_PORTABLE_MOD))
-        )
-
-        def _band_key(i: int, s):
-            bh = F.lit(0).cast("long")
-            for j in range(rows):
-                bh = (
-                    bh * F.lit(_PORTABLE_P) + F.element_at(s, i * rows + j + 1)
-                ) % F.lit(_PORTABLE_MOD)
-            return F.concat_ws(":", F.lit(i), bh)
-
-    else:
-        perms = F.array(
-            *[
-                F.struct(F.lit(_signed64(a)).alias("a"), F.lit(_signed64(b)).alias("b"))
-                for a, b in _perm_params(num_hashes)
-            ]
-        )
-        harr = F.transform(shingles(text_col, k), lambda x: F.xxhash64(x))
-        # wrapping 64-bit permutation, exactly as minhash_signatures
-        step = lambda acc, h: F.zip_with(  # noqa: E731
-            acc, perms, lambda m, p: F.least(m, h * p["a"] + p["b"])
-        )
-
-        def _band_key(i: int, s):
-            return F.concat_ws(
-                ":",
-                F.lit(i),
-                F.xxhash64(*[F.element_at(s, i * rows + j + 1) for j in range(rows)]),
-            )
-
-    sig = F.aggregate(harr, F.array_repeat(F.lit(long_max).cast("long"), num_hashes), step)
+    # --- per-row signature + band keys (the batch builders) -------------------
+    harr = hashing.shingle_hashes(text_col, k, portable_hash)
+    sig = hashing.minhash_signature(harr, num_hashes, portable_hash, docs.sparkSession)
 
     with_sig = docs.crossJoin(idx_row).withColumn("_sig", sig)
     # docs with no shingles (NULL/short text) have no index presence either
-    keys = F.array(*[_band_key(i, F.col("_sig")) for i in range(bands)])
+    keys = F.array(
+        *[
+            F.concat_ws(
+                ":", F.lit(i), hashing.band_hash(F.col("_sig"), i, rows, portable_hash)
+            )
+            for i in range(bands)
+        ]
+    )
     cands = F.when(
         F.size(harr) > 0,
         F.flatten(
@@ -635,17 +595,9 @@ def hll_registers_stream(
     import pandas as pd
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-    wbits = 32 - p
-    mod32 = F.lit(4294967296)
-    h = F.col(col).cast("long") % mod32
-    for _ in range(2):
-        h = ((F.shiftright(h, 16).bitwiseXOR(h)) * F.lit(0x45D9F3B)) % mod32
-    h = F.shiftright(h, 16).bitwiseXOR(h)
-    bucket = F.shiftright(h, wbits)
-    w = h % F.lit(1 << wbits)
-    rho = F.when(w == 0, F.lit(wbits + 1)).otherwise(
-        F.lit(wbits) - F.length(F.bin(w)) + F.lit(1)
-    )
+    from opteryx_spark.operators.hashing import hll_bucket_rho
+
+    bucket, rho = hll_bucket_rho(F.col(col), p)
     hashed = rows.select(bucket.alias("bucket"), rho.alias("rho")).filter(
         F.col("bucket").isNotNull()
     )
@@ -1391,13 +1343,13 @@ def kmv_registers_stream(
     import pandas as pd
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-    from opteryx_spark.operators.profile import _hash32
+    from opteryx_spark.operators.hashing import hash32
 
     if k < 1 or n_shards < 1:
         raise ValueError("k and n_shards must be >= 1")
     hashed = (
         rows.filter(F.col(col).isNotNull())
-        .select(_hash32(F.col(col)).alias("h"))
+        .select(hash32(F.col(col).cast("long")).alias("h"))
         .select("h", (F.col("h") % F.lit(int(n_shards))).alias("shard"))
     )
 

@@ -6,6 +6,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from opteryx_spark.operators.hashing import hash32
 from opteryx_spark.suite import register
 from opteryx_spark.suite._util import dsum, osum, t
 
@@ -234,11 +235,7 @@ def tvf_fake_table(spark, sf_dir):
     is correctly rounded in both engines, so ``amount`` is bit-identical."""
     n = 1000
     base = spark.range(n)
-    mod32 = F.lit(4294967296)
-    h = F.col("id") % mod32
-    for _ in range(2):
-        h = ((F.shiftright(h, 16).bitwiseXOR(h)) * F.lit(0x45D9F3B)) % mod32
-    h = F.shiftright(h, 16).bitwiseXOR(h)
+    h = hash32(F.col("id"))
     return base.select(
         F.col("id").alias("row_id"),
         F.concat(F.lit("user_"), (h % F.lit(500)).cast("string")).alias("name"),
@@ -271,11 +268,7 @@ def sample_order_by_rand(spark, sf_dir):
     only one an external oracle can verify.  The cursor dialect still
     accepts literal ``ORDER BY RAND()``."""
     cust = t(spark, sf_dir, "customer")
-    mod32 = F.lit(4294967296)
-    h = F.col("c_custkey") % mod32
-    for _ in range(2):
-        h = ((F.shiftright(h, 16).bitwiseXOR(h)) * F.lit(0x45D9F3B)) % mod32
-    h = F.shiftright(h, 16).bitwiseXOR(h)
+    h = hash32(F.col("c_custkey"))
     return (
         cust.select("c_custkey", "c_name", h.alias("_h"))
         .orderBy("_h", "c_custkey")

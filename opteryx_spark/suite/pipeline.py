@@ -793,11 +793,11 @@ def curate_pipeline_audit(spark, sf_dir):
 # expressible in DuckDB — rows-only checked).  This twin runs the SAME LSH
 # pipeline (permutation family, banding, hot-bucket cap, est_jaccard) on
 # the portable polynomial hash, making every stage value-verifiable.
-from opteryx_spark.operators.dedup import _portable_perm_params  # noqa: E402
+from opteryx_spark.operators.hashing import portable_perm_params  # noqa: E402
 
 _PERM_VALUES = ", ".join(
     f"({i}, CAST({a} AS BIGINT), CAST({b} AS BIGINT))"
-    for i, (a, b) in enumerate(_portable_perm_params(64))
+    for i, (a, b) in enumerate(portable_perm_params(64))
 )
 
 

@@ -259,39 +259,6 @@ def test_triplet_mining_persisted_pairs_match_reference(spark):
     assert got == exp
 
 
-def test_portable_hash_linear_fold_matches_reference(spark):
-    """The split-to-char-array fold must hash EVERY code-point sequence
-    identically to the per-position substr reference it replaced (the
-    DuckDB-twin definition): adversarial unicode (astral plane,
-    combining marks, surrogate-pair neighbours) plus randomized ASCII /
-    multibyte strings.  This is the equivalence witness every portable
-    entry (minhash/simhash portable twins, cms/kmv/hll, hashed tokens,
-    bloom positions, sample-split salt) leans on."""
-    from opteryx_spark.operators.dedup import (
-        _portable_hash_expr,
-        _portable_hash_expr_reference,
-    )
-
-    rng = random.Random(11)
-    pool = (
-        "abc XYZ 0123456789 \t\n é é 😀 𐍈 中文 мир ﷺ ‍️"
-        " \U0001F600\U0001F3FD é a\U0001D54A b"
-    )
-    rows = [("",), ("a",), ("😀",), ("a😀b",), ("é",), ("\U0001D54A",),
-            ("x" * 300,), ("😀" * 50,), (None,)]
-    for _ in range(120):
-        n = rng.randrange(0, 40)
-        rows.append(("".join(rng.choice(pool) for _ in range(n)),))
-    df = spark.createDataFrame(rows, "s string")
-    got = df.select(
-        _portable_hash_expr(F.col("s")).alias("h_new"),
-        _portable_hash_expr_reference(F.col("s")).alias("h_ref"),
-    ).collect()
-    assert all(r.h_new == r.h_ref for r in got)
-    # NULL and '' both fold to 0 (the guarded empty-array path)
-    assert got[0].h_new == 0 and got[8].h_new == 0
-
-
 def test_char_entropy_split_explode_matches_substr_reference(spark):
     """char_entropy now explodes ``split(_s, '')`` (the code-point array)
     instead of per-position ``substr`` — the pieces must be identical on

@@ -785,7 +785,7 @@ def test_kmv_registers_stream_matches_batch(spark, sf_dir, tmp_path_factory):
     """Reducing the sharded stream emissions to the global bottom-k must
     reproduce the batch sketch's registers and estimate exactly."""
     from opteryx_spark.catalog import load_table
-    from opteryx_spark.operators.profile import _hash32
+    from opteryx_spark.operators.hashing import hash32
 
     k = 64
     src = str(tmp_path_factory.mktemp("oxs_kmv_src"))
@@ -798,7 +798,7 @@ def test_kmv_registers_stream_matches_batch(spark, sf_dir, tmp_path_factory):
     want_bk = [
         r["h"]
         for r in orders.filter(F.col("o_custkey").isNotNull())
-        .select(_hash32(F.col("o_custkey")).alias("h"))
+        .select(hash32(F.col("o_custkey").cast("long")).alias("h"))
         .distinct()
         .orderBy("h")
         .limit(k)
