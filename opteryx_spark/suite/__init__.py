@@ -18,6 +18,7 @@ Determinism rules (so value-hashes match bit-for-bit):
 
 from __future__ import annotations
 
+import hashlib
 from collections.abc import Callable
 from dataclasses import dataclass
 
@@ -48,419 +49,18 @@ def register(name: str, oracle: str | None = None, oracle_cost_s: float = 1.0):
     return deco
 
 
-# The driver's correctness harness checks entries in registration order and
-# caps how many it verifies per round (50 of the registry).  Ordering policy
-# (round 6): NEW oracle entries (not in _DRIVER_GREEN) and CHANGED entries
-# (recorded green, but the (spark-impl source, oracle text) hash no longer
-# matches the one recorded when the green was earned — see _green_hashes.py
-# and tools/gen_green_hashes.py) auto-promote to the front of the window, so
-# a rewritten entry is re-confirmed instead of coasting on a stale verdict
-# (VERDICT r5 'What's wrong' #2: fixed-point q1 was never driver-re-checked).
-# The remaining slots re-confirm a ROTATING sample of old greens
-# (deterministic per-round shuffle keyed by _ROTATION_SALT, so successive
-# rounds re-confirm different entries instead of the same first-registered
-# ones); rows-only entries always go last.
+# The external correctness harness checks entries in ``load_all()`` order
+# and caps how many it verifies per round (50 of the registry).  The order is
+# one rule: oracle-bearing entries first, sorted by md5(_ROTATION_SALT +
+# name), so a new salt re-confirms a different sample of the registry; then
+# the rows-only entries in registration order.  tests/_tiers.py and the
+# bench's spotlight cycle key their rotations on the same salt.
 _ROTATION_SALT = "r12"
 
 
-def _collect_sources(fn, seen: set) -> list[tuple[str, str]]:
-    """Source text of ``fn`` plus every opteryx_spark function it references,
-    transitively.  Most suite entries are thin wrappers delegating to
-    ``operators/*`` / ``streaming/*`` — hashing only the wrapper would let an
-    operator edit coast on a stale driver green (ADVICE r6, medium), so the
-    hash walks ``__code__.co_names`` (including nested code objects), resolves
-    them through ``__globals__``, and follows both direct function refs and
-    one-hop module attribute refs (``events.peak_concurrency(...)``).
-
-    Resolution IMPORTS candidate opteryx_spark modules (importlib, not a
-    bare sys.modules probe) so the hash is deterministic regardless of
-    what the current process happens to have imported already."""
-    import importlib
-    import inspect
-    import types
-
-    def _try_import(modname: str):
-        if not modname.startswith("opteryx_spark"):
-            return None
-        try:
-            return importlib.import_module(modname)
-        except Exception:
-            return None
-
-    key = (getattr(fn, "__module__", "") or "", getattr(fn, "__qualname__", None) or repr(fn))
-    if key in seen:
-        return []
-    seen.add(key)
-    try:
-        src = inspect.getsource(fn)
-    except (OSError, TypeError):  # builtins/lambdas without source
-        src = repr(fn)
-    out = [(f"{key[0]}.{key[1]}", src)]
-    code = getattr(fn, "__code__", None)
-    g = getattr(fn, "__globals__", None)
-    if code is None or g is None:
-        return out
-    names: set[str] = set()
-    stack = [code]
-    while stack:  # nested defs/lambdas/comprehensions live in co_consts
-        c = stack.pop()
-        names.update(c.co_names)
-        names.update(c.co_varnames)  # `from pkg import mod` binds mod as a LOCAL
-        stack.extend(k for k in c.co_consts if hasattr(k, "co_names"))
-
-    # candidate opteryx_spark modules: module-valued globals, plus dotted
-    # co_names hitting sys.modules (function-LOCAL `from opteryx_spark.x
-    # import y` compiles to IMPORT_NAME "opteryx_spark.x" — the bound name
-    # is a varname, so globals alone never sees it), plus one submodule
-    # hop (`from opteryx_spark.operators import curate`)
-    mods: dict[str, types.ModuleType] = {}
-    funcs: list[types.FunctionType] = []
-    for name in sorted(names):
-        val = g.get(name)
-        if val is None and "." in name:
-            val = _try_import(name)
-        if isinstance(val, types.FunctionType) and (val.__module__ or "").startswith("opteryx_spark"):
-            funcs.append(val)
-        elif isinstance(val, types.ModuleType) and val.__name__.startswith("opteryx_spark"):
-            mods[val.__name__] = val
-    for mod in list(mods.values()):
-        is_pkg = hasattr(mod, "__path__")
-        for name in sorted(names):
-            sub = getattr(mod, name, None)
-            if sub is None and is_pkg:
-                sub = _try_import(f"{mod.__name__}.{name}")
-            if isinstance(sub, types.ModuleType) and sub.__name__.startswith("opteryx_spark"):
-                mods.setdefault(sub.__name__, sub)
-    for _, mod in sorted(mods.items()):
-        for name in sorted(names):
-            sub = getattr(mod, name, None)
-            if isinstance(sub, types.FunctionType) and (
-                getattr(sub, "__module__", "") or ""
-            ).startswith("opteryx_spark"):
-                funcs.append(sub)
-    for f in funcs:
-        out.extend(_collect_sources(f, seen))
-    return out
-
-
-def _impl_hash(qd: QueryDef) -> str:
-    """Hash of what the driver actually verifies: the Spark impl's source
-    text (wrapper PLUS all delegated opteryx_spark functions it calls,
-    transitively — see ``_collect_sources``) plus the oracle SQL.  Any edit
-    to any of them re-promotes the entry into the driver window."""
-    import hashlib
-
-    parts = sorted(_collect_sources(qd.spark, set()))
-    blob = "\x00".join(f"{q}\x01{s}" for q, s in parts) + "\x00" + (qd.oracle or "")
-    return hashlib.md5(blob.encode()).hexdigest()
-
-# Every entry with a full green (rows+schema+hash) verdict in some round's
-# CORRECTNESS JSON.  New oracle-bearing entries (not in this set) are
-# auto-promoted into the driver window ahead of these.
-_DRIVER_GREEN = frozenset({
-    "agg_array_agg",
-    "agg_bool_bit",
-    "agg_cms_token_counts",
-    "agg_count_distinct",
-    "agg_cube_grouping",
-    "agg_global",
-    "agg_histogram",
-    "agg_hll_by_group",
-    "agg_hll_portable",
-    "agg_kmv_distinct",
-    "agg_median_percentile",
-    "agg_mode_exact",
-    "agg_quantile_histogram",
-    "agg_rollup",
-    "agg_variance_stddev",
-    "agg_weighted_median",
-    "any_all_array_ops",
-    "array_funcs",
-    "cb_daily_series",
-    "cb_hour_histogram",
-    "cb_minute_bursts",
-    "cb_props_extract_topk",
-    "cb_type_share",
-    "cb_user_activity_topk",
-    "cb_user_first_last",
-    "cb_user_type_matrix",
-    "cb_value_percentiles_by_type",
-    "cdc_snapshot_diff",
-    "count_null_semantics",
-    "cte_with_chain",
-    "curate_incremental",
-    "curate_pipeline_audit",
-    "curate_pipeline_v2",
-    "curate_pipeline_v3",
-    "cust_rfm_segments",
-    "datetime_extract_unix",
-    "decontaminate_benchmark",
-    "dedup_bloom_prefilter",
-    "dedup_chunk_fraction",
-    "dedup_connected_groups",
-    "dedup_containment_pairs",
-    "dedup_exact_stats",
-    "dedup_fingerprint",
-    "dedup_fuzzy_keepers",
-    "dedup_incremental_exact",
-    "dedup_minhash_incremental",
-    "dedup_minhash_lsh_portable",
-    "dedup_minhash_verified",
-    "dedup_ngram_jaccard",
-    "dedup_remove_chunks",
-    "dedup_remove_corpus_chunks",
-    "dedup_simhash_portable",
-    "dedup_winnow_pairs",
-    "distinct_on_latest_order",
-    "emb_ann_filtered",
-    "emb_ann_ivf_topk",
-    "emb_ann_lsh_topk",
-    "emb_ann_pq_indexed",
-    "emb_ann_sq8_indexed",
-    "emb_ann_sq8_topk",
-    "emb_centroid_drift",
-    "emb_cosine_pairs",
-    "emb_cosine_topk",
-    "emb_kcenter_coreset",
-    "emb_kmeans_portable",
-    "emb_knn_join",
-    "emb_l2_norms",
-    "emb_lsh_near_dup_pairs",
-    "emb_matryoshka_recall",
-    "emb_mmr_rerank",
-    "emb_pca_power",
-    "emb_pq_adc_topk",
-    "emb_quantization_recall",
-    "emb_quantize_int8",
-    "emb_random_projection",
-    "emb_semantic_dedup",
-    "emb_silhouette_lite",
-    "emb_triplet_mining",
-    "events_ab_test_z",
-    "events_attribution",
-    "events_attribution_decay",
-    "events_attribution_removal",
-    "events_cohort_ltv",
-    "events_cohort_retention",
-    "events_dau_wau",
-    "events_dwell_bounce",
-    "events_ewma",
-    "events_funnel_rates",
-    "events_funnel_ttc",
-    "events_gap_fill",
-    "events_hourly_rollup",
-    "events_inter_event_time",
-    "events_interval_coverage",
-    "events_latency_percentiles",
-    "events_markov_stationary",
-    "events_new_vs_returning",
-    "events_ohlc_bars",
-    "events_peak_concurrency",
-    "events_point_in_time_state",
-    "events_rolling_window",
-    "events_rollup_merge",
-    "events_scd2_history",
-    "events_seasonal_residuals",
-    "events_session_funnel",
-    "events_sessionize",
-    "events_sessionless_funnel",
-    "events_streaks",
-    "events_survival_km",
-    "events_top_paths",
-    "events_twap",
-    "events_type_transitions",
-    "events_value_anomalies",
-    "expr_case_when",
-    "expr_date_funcs",
-    "expr_json_extract",
-    "expr_math_funcs",
-    "expr_string_funcs",
-    "feat_basket_rules",
-    "feat_calibration_ece",
-    "feat_chi2_screen",
-    "feat_hashed_tokens",
-    "feat_lag_features",
-    "feat_one_hot_lang",
-    "feat_psi_drift",
-    "feat_quantile_bin",
-    "feat_target_encode",
-    "feat_target_encode_loo",
-    "feat_winsorize_scale",
-    "graph_assortativity",
-    "graph_clustering_coeff",
-    "graph_core_numbers",
-    "graph_hits_scores",
-    "graph_hop_distance",
-    "graph_kcore_membership",
-    "graph_label_communities",
-    "graph_link_prediction",
-    "graph_personalized_pagerank",
-    "graph_reciprocity",
-    "graph_triangle_counts",
-    "hash_encode_funcs",
-    "having_post_aggregation",
-    "interval_arithmetic",
-    "join_asof_forward",
-    "join_asof_last_click",
-    "join_asof_nearest",
-    "join_cross",
-    "join_full_outer",
-    "join_fuzzy_blocked",
-    "join_interval_overlap",
-    "join_left_anti",
-    "join_left_outer",
-    "join_left_semi",
-    "join_linkage_scored",
-    "join_non_equi",
-    "join_range_binned",
-    "join_right_outer",
-    "mm_phash_bands",
-    "mm_phash_near_dups",
-    "multimodal_audio_features",
-    "multimodal_image_features",
-    "multimodal_resize_images",
-    "multimodal_video_frames",
-    "null_in_notin",
-    "null_three_valued_logic",
-    "null_where_filters",
-    "numeric_funcs_2",
-    "pivot_status_by_priority",
-    "pred_between_casts",
-    "pred_like_battery",
-    "profile_correlations",
-    "profile_null_patterns",
-    "profile_orders",
-    "quality_benford_audit",
-    "quality_categorical_drift",
-    "quality_completeness_by_day",
-    "quality_constraint_report",
-    "quality_fd_violations",
-    "quality_fk_audit",
-    "quality_freshness",
-    "quality_ks_drift",
-    "quality_mad_outliers",
-    "quality_monotonic_ts",
-    "quality_schema_drift",
-    "quality_w1_drift",
-    "regexp_funcs",
-    "sample_backtest_folds",
-    "sample_balanced_classes",
-    "sample_epoch_shuffle",
-    "sample_epochs_upsample",
-    "sample_hash_deterministic",
-    "sample_negative_pairs",
-    "sample_order_by_rand",
-    "sample_quota_stratified",
-    "sample_split_assign",
-    "sample_split_no_leakage",
-    "sample_stratified_kfold",
-    "sample_temperature_weights",
-    "sample_temporal_split",
-    "sample_token_budget",
-    "sample_token_mixture",
-    "sample_weighted_es",
-    "scalar_conditional_funcs",
-    "set_except",
-    "set_intersect",
-    "set_union_all",
-    "set_union_distinct",
-    "skew_join_naive",
-    "skew_join_salted",
-    "sort_limit_offset",
-    "string_funcs_2",
-    "subquery_scalar_correlated",
-    "text_best_snippets",
-    "text_bigram_perplexity",
-    "text_bm25_scores",
-    "text_bm25_search_index",
-    "text_bm25_topk",
-    "text_boilerplate_fraction",
-    "text_bpe_encode",
-    "text_bpe_token_stats",
-    "text_bpe_train_merges",
-    "text_char_entropy",
-    "text_characteristic_terms",
-    "text_chunk_documents",
-    "text_encoding_issues",
-    "text_gopher_quality",
-    "text_hybrid_rrf",
-    "text_lexical_diversity",
-    "text_line_boilerplate",
-    "text_ngram_novelty",
-    "text_normalize",
-    "text_pack_sequences",
-    "text_perplexity_filter",
-    "text_pmi_collocations",
-    "text_quality_features",
-    "text_quality_gate",
-    "text_quality_langid",
-    "text_rake_keyphrases",
-    "text_readability",
-    "text_redact_pii",
-    "text_retrieval_eval",
-    "text_script_profile",
-    "text_strip_html",
-    "text_term_trends",
-    "text_token_stats",
-    "text_vocab_topk",
-    "text_winnow_fingerprints",
-    "tpch_q10_returned_items",
-    "tpch_q11_important_stock",
-    "tpch_q12_shipping_modes",
-    "tpch_q13_customer_distribution",
-    "tpch_q14_promo_effect",
-    "tpch_q15_top_supplier",
-    "tpch_q16_parts_supplier",
-    "tpch_q17_small_quantity_revenue",
-    "tpch_q18_large_volume_customer",
-    "tpch_q19_discounted_revenue",
-    "tpch_q1_pricing_summary",
-    "tpch_q20_potential_promotion",
-    "tpch_q21_suppliers_kept_waiting",
-    "tpch_q22_global_sales_opportunity",
-    "tpch_q2_min_cost_supplier",
-    "tpch_q3_shipping_priority",
-    "tpch_q4_order_priority",
-    "tpch_q5_local_supplier_volume",
-    "tpch_q6_forecast_revenue",
-    "tpch_q7_volume_shipping",
-    "tpch_q8_market_share",
-    "tpch_q9_product_profit",
-    "ts_acf_daily",
-    "ts_ccf_daily",
-    "ts_classical_decompose",
-    "ts_cusum_changepoint",
-    "ts_forecast_snaive",
-    "ts_holt_linear",
-    "ts_holt_winters",
-    "ts_ols_trend",
-    "ts_rolling_median_detrend",
-    "ts_seasonal_strength",
-    "ts_weekday_anova",
-    "tvf_fake_table",
-    "tvf_generate_series",
-    "tvf_values_clause",
-    "unnest_lateral_filtered_distinct",
-    "unnest_tokens",
-    "web_canonical_urls",
-    "web_domain_blocklist",
-    "web_domain_gini",
-    "web_domain_pagerank",
-    "web_domain_quota",
-    "web_parse_urls",
-    "window_frames_moving_avg",
-    "window_lag_rank",
-    "window_range_percent",
-    "window_rank_variants",
-    "window_running_sum",
-    "window_topn_per_group",
-    "window_value_functions",
-})
-
-
 def load_all() -> dict[str, QueryDef]:
-    # import side-effect-registered modules (import order also sets the
-    # default registration order within each priority tier)
+    # import side-effect-registered modules (import order sets the
+    # registration order the rows-only entries keep)
     import opteryx_spark.suite.battery  # noqa: F401
     import opteryx_spark.suite.battery2  # noqa: F401
     import opteryx_spark.suite.battery3  # noqa: F401
@@ -485,29 +85,9 @@ def load_all() -> dict[str, QueryDef]:
     import opteryx_spark.suite.pipeline17  # noqa: F401
     import opteryx_spark.suite.tpch  # noqa: F401
 
-    import hashlib
+    def salted(name: str) -> str:
+        return hashlib.md5((_ROTATION_SALT + name).encode()).hexdigest()
 
-    from opteryx_spark.suite._green_hashes import GREEN_HASHES
-
-    ordered: dict[str, QueryDef] = {}
-    # tier 1a: CHANGED entries (recorded green, impl-hash mismatch) lead —
-    # a stale green is actively misleading, so re-confirmation outranks
-    # first confirmation when the registry outgrows the driver window
-    for name, qd in REGISTRY.items():
-        if qd.oracle and name in _DRIVER_GREEN and GREEN_HASHES.get(name) != _impl_hash(qd):
-            ordered[name] = qd
-    # tier 1b: new oracle-bearing entries (no green verdict yet), in
-    # registration order; entries past the window promote next round
-    for name, qd in REGISTRY.items():
-        if qd.oracle and name not in _DRIVER_GREEN and name not in ordered:
-            ordered[name] = qd
-    # tier 2: already-green oracle entries, rotated per round so driver
-    # re-confirmation slots cycle through the whole registry over rounds
-    greens = [n for n, qd in REGISTRY.items() if qd.oracle and n not in ordered]
-    greens.sort(key=lambda n: hashlib.md5((_ROTATION_SALT + n).encode()).hexdigest())
-    for name in greens:
-        ordered[name] = REGISTRY[name]
-    # tier 3: rows-only entries (no oracle) — never displace an oracle entry
-    for name, qd in REGISTRY.items():
-        ordered.setdefault(name, qd)
-    return ordered
+    oracled = sorted((n for n, qd in REGISTRY.items() if qd.oracle), key=salted)
+    rows_only = [n for n, qd in REGISTRY.items() if not qd.oracle]
+    return {name: REGISTRY[name] for name in oracled + rows_only}

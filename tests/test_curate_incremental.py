@@ -84,3 +84,25 @@ def test_outcome_precedence_and_accounting(spark, sf_dir):
               out.groupBy("outcome").agg(F.count("*").alias("n")).collect()}
     assert sum(counts.values()) == out.count()
     assert counts.get("kept", 0) > 0
+
+
+def test_curate_incremental_delta_scanned_once(spark, sf_dir):
+    # r12: the delta feeds four branches through ONE persisted slim
+    # projection — the new-crawl source must appear once in the plan, not
+    # once per branch (was 6 scans)
+    from opteryx_spark.operators import curate, dedup
+
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id", "text")
+    corpus = docs.filter(F.col("doc_id") < 250)
+    new = docs.filter(F.col("doc_id") >= 250)
+    cd = dedup.corpus_digests(corpus, method="fingerprint")
+    wd = dedup.window_digests(corpus, "text", chunk_tokens=16, min_chunk_tokens=4)
+    idx = dedup.minhash_index(corpus, portable_hash=True)
+    out = curate.curate_incremental(new, cd, wd, idx)
+    txt = explain_text(out)
+    # the >=250 pushed filter marks a delta parquet scan; the persisted
+    # slim projection leaves exactly one
+    assert txt.count("GreaterThanOrEqual(doc_id,250)") == 1, txt.count(
+        "GreaterThanOrEqual(doc_id,250)"
+    )
+    dedup.release_text_group_caches()

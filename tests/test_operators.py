@@ -8,6 +8,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from opteryx_spark.operators import dedup, multimodal, similarity, text
+from opteryx_spark.operators import similarity as S
+from opteryx_spark.plans import explain_text
 from opteryx_spark.suite._util import t
 
 
@@ -1485,3 +1487,64 @@ def test_minhash_lsh_candidates_superset_of_exact_dups(spark, sf_dir):
     missing = dup_pairs - set(got)
     assert not missing, f"exact dups missing from candidates: {sorted(missing)[:5]}"
     assert all(v == 1.0 for v in got.values())
+
+
+# kmeans_portable internals pin (broadcast-centroid + sequence-explode
+# update).  The r12 rewrite moved centroids from per-iteration literals to a
+# one-row broadcast frame and the update aggregate from ``dim`` per-position
+# SUMs to a (cluster, pos)-keyed SUM/COUNT over a constant ``sequence(1, dim)``
+# explode.  Values must be IDENTICAL to the old formulation, including the
+# edge semantics a raw ``posexplode`` would silently change (short vectors
+# emit fewer elements, shifting per-position counts).  The golden rows below
+# were generated by running the pre-r12 implementation (git 8999e03) on this
+# exact input; the suite oracle pins the regular corpus, this pins the
+# ragged edge.
+DATA = [
+    (1, [0.1, 0.2, 0.3]),
+    (2, [0.9, 0.8, 0.7]),
+    (3, [0.11, 0.19, 0.31]),
+    (4, [0.88, 0.79, 0.72]),
+    (5, [0.5, 0.5]),  # short vector: beyond-length positions are NULL
+    (7, None),  # null vector: filtered out entirely
+]
+
+# pre-r12 implementation output on DATA (k=2, iterations=2, dim=3)
+GOLDEN_ROWS = [(1, 1, 75), (2, 0, 81945), (3, 1, 75), (4, 0, 84245), (5, 0, None)]
+GOLDEN_CENTS = [[760, 696, 473], [105, 195, 305]]
+
+
+def test_kmeans_ragged_matches_pre_r12(spark):
+    df = spark.createDataFrame(DATA, "vec_id long, embedding array<double>")
+    out, cents = S.kmeans_portable(df, k=2, iterations=2, dim=3)
+    rows = [
+        (r["vec_id"], r["cluster"], r["dist2"]) for r in out.orderBy("vec_id").collect()
+    ]
+    assert rows == GOLDEN_ROWS
+    assert cents == GOLDEN_CENTS
+
+
+# Plan-shape pins for two r12 optimizations (OPTIMIZATION_r12.md): a later
+# refactor that reintroduces the duplicated work fails here, not only in a
+# bench regression.
+
+
+def test_remove_duplicate_chunks_slim_digest_persisted(spark, sf_dir):
+    # r12: the slim digest frame is persisted so the chunking subtree runs
+    # twice (slim fill + rebuild), not three times (guide §2.4)
+    from opteryx_spark.operators import dedup
+
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    txt = explain_text(dedup.remove_duplicate_chunks(docs, chunk_tokens=16))
+    assert "InMemoryRelation" in txt
+    dedup.release_text_group_caches()
+
+
+def test_quality_features_tokenize_staged_once(spark, sf_dir):
+    # r12: the base select stages the token array once — the composed
+    # quality_features plan carried 20 split+filter tokenizes before, 7
+    # after; pin a ceiling between the two
+    from opteryx_spark.operators import filtering
+
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id", "text")
+    txt = explain_text(filtering.quality_features(docs))
+    assert txt.count("filter(split") <= 10, txt.count("filter(split")

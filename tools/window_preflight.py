@@ -1,11 +1,12 @@
 """Pre-flight the driver's correctness window locally.
 
-Simulates the driver's per-round entry ordering (tier 1a changed →
-tier 1b never-verified → rotation re-confirms; see
-``opteryx_spark.suite.load_all``), then runs the first ``--limit``
-entries through the driver-equivalent compare (``tests/_compare.py`` —
-rows + schema + exact values + pandas-dtype lint) at ``--sf``.  A clean
-run here predicts a green ``CORRECTNESS_r{N}.json``.
+Takes the entry order from ``opteryx_spark.suite.load_all``
+(oracle entries sorted by md5(``_ROTATION_SALT`` + name), then the
+rows-only ones), then runs the oracle entries among the first
+``--limit`` through the harness-equivalent compare (``tests/_compare.py``
+— rows + schema + exact values + pandas-dtype lint) at ``--sf``, and
+warns when the window's annotated oracle cost passes its budget.  A
+clean run here predicts a green correctness window.
 
 Usage:
     python tools/window_preflight.py                 # full 50-slot window, sf0.01
