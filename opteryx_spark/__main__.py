@@ -20,28 +20,32 @@ def main(argv: list[str] | None = None) -> int:
     parser.add_argument("-o", "--output", help="write full result to this file (by extension)")
     args = parser.parse_args(argv)
 
-    import opteryx_spark as ox
+    from opteryx_spark import connect, errors
 
-    conn = ox.connect()
+    conn = connect()
     if args.data_dir:
         from opteryx_spark.catalog import register_sf_dir
 
         register_sf_dir(conn.spark, args.data_dir)
-    cur = conn.cursor().execute(args.sql)
-    if args.output:
-        df = cur.df
-        out = args.output
-        if out.endswith(".parquet"):
-            df.coalesce(1).write.mode("overwrite").parquet(out)
-        elif out.endswith(".csv"):
-            df.coalesce(1).write.mode("overwrite").option("header", True).csv(out)
-        elif out.endswith((".jsonl", ".json")):
-            df.coalesce(1).write.mode("overwrite").json(out)
-        else:
-            raise SystemExit(f"unsupported output format: {out}")
-        print(f"wrote {out}")
-    else:
-        cur.df.show(args.max_rows, truncate=False)
+    try:
+        with errors.boundary():
+            cur = conn.cursor().execute(args.sql)
+            if args.output:
+                out = args.output
+                if out.endswith(".parquet"):
+                    cur.df.coalesce(1).write.mode("overwrite").parquet(out)
+                elif out.endswith(".csv"):
+                    cur.df.coalesce(1).write.mode("overwrite").option("header", True).csv(out)
+                elif out.endswith((".jsonl", ".json")):
+                    cur.df.coalesce(1).write.mode("overwrite").json(out)
+                else:
+                    raise SystemExit(f"unsupported output format: {out}")
+                print(f"wrote {out}")
+            else:
+                cur.df.show(args.max_rows, truncate=False)
+    except errors.Error as exc:
+        print(type(exc).__name__ + ": " + str(exc).strip().partition("\n")[0], file=sys.stderr)
+        return 1
     return 0
 
 

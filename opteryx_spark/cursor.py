@@ -14,9 +14,10 @@ from __future__ import annotations
 from collections import namedtuple
 from typing import Any
 
+from pyspark.errors import AnalysisException, ParseException
 from pyspark.sql import DataFrame, SparkSession
 
-from opteryx_spark import results, rewriter, sqltext
+from opteryx_spark import errors, results, rewriter, sqltext
 from opteryx_spark.session import get_session
 from opteryx_spark.sources import registry as _registry_mod
 from opteryx_spark.sources.registry import SourceRegistry, read_any
@@ -123,8 +124,6 @@ class Connection:
                     return "array" + sqltext.quote(self.memberships)
                 return "CAST(array() AS ARRAY<STRING>)"
             if name not in self.variables and name not in _SYSTEM_VARIABLES:
-                from opteryx_spark import errors
-
                 # reference shared/variables.py raises on unknown names —
                 # a typo must not degrade to NULL-comparison semantics
                 raise errors.ProgrammingError(f"unknown system variable: @@{name}")
@@ -178,8 +177,6 @@ class Connection:
     def _apply_visibility_filters(self) -> None:
         for table, predicate in self.visibility_filters.items():
             if "." in table:
-                from opteryx_spark import errors
-
                 # a dotted name cannot be a temp-view name, and queries
                 # writing store.table resolve through _resolve_store_refs
                 # into fresh unfiltered store_* views — the filter would
@@ -230,31 +227,16 @@ class Cursor:
     # -- execution ----------------------------------------------------------
 
     def execute(self, sql: str, params: dict | list | None = None) -> "Cursor":
-        from opteryx_spark import errors
-
         spark = self._conn.spark
         self._conn.statistics["queries_executed"] += 1
         statements = rewriter.split_statements(rewriter.strip_comments(sql))
         if not statements:
             # reference raises MissingSqlStatement (errors/__init__.py)
             raise errors.ProgrammingError("no SQL statement to execute")
-        for stmt in statements:
-            self._conn.statistics["statements_executed"] += 1
-            try:
+        with errors.boundary():
+            for stmt in statements:
+                self._conn.statistics["statements_executed"] += 1
                 self._df = self._execute_one(spark, stmt, params)
-            except (FileNotFoundError, IsADirectoryError, PermissionError) as exc:
-                # dataset resolution failures are PEP-249 DataErrors, like
-                # the reference's DatasetNotFoundError
-                raise errors.DataError(str(exc)) from exc
-            except Exception as exc:
-                if type(exc).__name__ in (
-                    "ParseException",
-                    "AnalysisException",
-                    "QueryExecutionException",
-                    "SparkRuntimeException",
-                ):
-                    raise errors.wrap_spark_error(exc) from exc
-                raise
         self._clear_result()
         return self
 
@@ -275,8 +257,6 @@ class Cursor:
         # one column named after the view, one row holding its SQL)
         create_m = re.match(r"SHOW\s+CREATE\s+VIEW\s+([\w.$]+)\s*$", stmt, re.IGNORECASE)
         if create_m:
-            from opteryx_spark import errors
-
             name = create_m.group(1)
             # view resolution is case-insensitive everywhere else (Spark
             # temp views, _refresh_context_views) — match that here
@@ -328,8 +308,6 @@ class Cursor:
             if isinstance(tmpl, dict):  # reference JSON file shape
                 tmpl = tmpl.get("statement")
             if tmpl is None:
-                from opteryx_spark import errors
-
                 raise errors.ProgrammingError(f"prepared statement not found: {name}")
             bound = {}
             if exec_m.group(2):
@@ -411,7 +389,6 @@ class Cursor:
                 # (reference MabelPartitionScheme), not a column filter
                 import datetime as _dt
 
-                from opteryx_spark import errors
                 from opteryx_spark.sources import mabel_partitions as _mp
 
                 end_expr = "CAST(NULL AS TIMESTAMP)" if end == "NULL" else f"CAST({end} AS TIMESTAMP)"
@@ -423,15 +400,10 @@ class Cursor:
                     _dt.datetime.now().replace(hour=0, minute=0, second=0, microsecond=0)
                     + _dt.timedelta(days=1)
                 )
-                try:
-                    _mp.read_for_range(spark, mroot, s, e).createOrReplaceTempView(view)
-                except _mp.UnsupportedSegmentation as exc:
-                    raise errors.ProgrammingError(str(exc)) from exc
+                _mp.read_for_range(spark, mroot, s, e).createOrReplaceTempView(view)
                 continue
             col = self._conn.time_columns.get(table)
             if col is None:
-                from opteryx_spark import errors
-
                 raise errors.ProgrammingError(
                     f"temporal FOR clause on table '{table}' which has no "
                     f"configured time column (Connection(time_columns={{'{table}': ...}}))"
@@ -454,10 +426,10 @@ class Cursor:
             )
         try:
             return _ym_safe(spark.sql(sql))
-        except Exception as exc:
-            if type(exc).__name__ != "AnalysisException":
-                raise
-            if "AMBIGUOUS_REFERENCE" in str(exc):
+        except ParseException:
+            raise  # no type-dependent alternative for unparsable SQL
+        except AnalysisException as exc:
+            if errors.condition(exc) == "AMBIGUOUS_REFERENCE":
                 # the reference resolves identifiers case-sensitively, so
                 # `id` and `ID` coexist; analysis happens inside sql()
                 prev = spark.conf.get("spark.sql.caseSensitive")
@@ -480,8 +452,6 @@ class Cursor:
         """Reference EXPLAIN surface (``managers/execution/serial_engine.py:69``):
         TEXT → (tree, operator, config) rows; ANALYZE adds runtime metric
         columns; MERMAID → one diagram cell; JSON/GRAPHVIZ → unsupported."""
-        from opteryx_spark import errors
-
         fmt = (fmt or "TEXT").upper()
         if fmt in ("JSON", "GRAPHVIZ"):
             raise errors.ProgrammingError(f"EXPLAIN FORMAT {fmt} is not supported")
@@ -600,7 +570,8 @@ class Cursor:
                 binary = results.binary_type(self._conn.spark)
                 self._rows = results.table_rows(self.arrow(), binary)
             else:
-                self._rows = results.collect_rows(self.df)
+                with errors.boundary():
+                    self._rows = results.collect_rows(self.df)
         return self._rows
 
     @property
@@ -630,11 +601,13 @@ class Cursor:
         """Results as a pyarrow.Table (reference ``execute_to_arrow``): the
         statement's buffered result, so fetching rows too runs it once."""
         if self._table is None:
-            self._table = self.df.toArrow()
+            with errors.boundary():
+                self._table = self.df.toArrow()
         return self._table
 
     def pandas(self):
-        return self.df.toPandas()
+        with errors.boundary():
+            return self.df.toPandas()
 
     def close(self) -> None:
         self._df = None

@@ -18,6 +18,8 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
+from opteryx_spark import errors
+
 
 def partition_path(root: str, day: dt.date, hour: int | None = None) -> str:
     p = os.path.join(root, f"year_{day.year:04d}", f"month_{day.month:02d}", f"day_{day.day:02d}")
@@ -65,7 +67,7 @@ def read_partitioned(
     return reader.load(paths)
 
 
-class UnsupportedSegmentation(Exception):
+class UnsupportedSegmentation(errors.ProgrammingError):
     """A ``by_*`` segment other than ``by_hour`` (reference
     ``managers/schemes/mabel_partitions.py`` raises
     UnsupportedSegementationError for the same layouts)."""

@@ -25,6 +25,8 @@ from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 
+from opteryx_spark import errors
+
 # extension → (spark format, default options)
 _FORMAT_BY_EXT: dict[str, tuple[str, dict[str, str]]] = {
     ".parquet": ("parquet", {}),
@@ -263,9 +265,7 @@ def _read_via_pandas(spark: SparkSession, path: str, ext: str) -> DataFrame:
         try:
             import vortex  # type: ignore[import-not-found]
         except ImportError as exc:
-            from opteryx_spark.errors import NotSupportedError
-
-            raise NotSupportedError(
+            raise errors.NotSupportedError(
                 "vortex files need the 'vortex-data' package installed"
             ) from exc
         table = vortex.open(path).to_arrow_table()  # pragma: no cover - lib absent
@@ -323,11 +323,9 @@ def _read_nosql_store(spark: SparkSession, store: "_Store", table: str) -> DataF
     }[fmt]
     try:
         return spark.read.format(fmt).options(**opts).load()
-    except Exception as exc:  # CLASS_NOT_FOUND when the jar isn't on the cluster
-        if "DATA_SOURCE_NOT_FOUND" in str(exc) or "ClassNotFound" in str(exc):
-            from opteryx_spark.errors import NotSupportedError
-
-            raise NotSupportedError(
+    except Exception as exc:
+        if errors.condition(exc) == "DATA_SOURCE_NOT_FOUND":  # jar not on the cluster
+            raise errors.NotSupportedError(
                 f"{store.kind} stores need the {jar} jar on the cluster "
                 f"(spark.jars.packages)"
             ) from exc
@@ -338,9 +336,7 @@ def _read_firestore_store(spark: SparkSession, store: "_Store", collection: str)
     try:
         from google.cloud import firestore  # type: ignore[import-not-found]
     except ImportError as exc:
-        from opteryx_spark.errors import NotSupportedError
-
-        raise NotSupportedError(
+        raise errors.NotSupportedError(
             "firestore stores need the google-cloud-firestore package"
         ) from exc
     client = firestore.Client(project=store.options.get("project"))  # pragma: no cover

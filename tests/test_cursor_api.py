@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import os
+import threading
 import time
 
 import pytest
@@ -77,6 +78,111 @@ def test_rowcount_and_arrow_reuse_the_fetched_result(conn, spark):
     alone = _jobs(spark, "cursor-fetch-only", fetch_only)
     assert alone > 0
     assert _jobs(spark, "cursor-fetch-reuse", fetch_then_reuse) <= alone
+
+
+_BOOM = "SELECT raise_error('boom') AS e"
+
+
+def _at_fetch(fetch, sql=_BOOM):
+    """A case that executes ``sql`` cleanly, then fails in ``fetch``."""
+
+    def case(conn, spark, tmp_path):
+        cur = conn.cursor().execute(sql)
+        return (lambda: fetch(cur)), "boom"
+
+    return case
+
+
+def _at_execute(sql, names):
+    return lambda conn, spark, tmp_path: ((lambda: conn.cursor().execute(sql)), names)
+
+
+def _deleted_file(conn, spark, tmp_path):
+    """A parquet file removed between execute and fetch."""
+    path = tmp_path / "gone"
+    spark.range(100).coalesce(1).write.parquet(str(path))
+    cur = conn.cursor().execute(f"SELECT * FROM '{path}'")
+    (part,) = path.glob("part-*.parquet")
+    part.unlink()
+    return cur.fetchall, part.name
+
+
+def _cancelled(conn, spark, tmp_path):
+    """The job group of a fetch, cancelled while the fetch waits on it.  The
+    tasks sleep 30 s and are interrupted, so the case ends in seconds."""
+    sc = spark.sparkContext
+    cur = conn.cursor().execute(
+        "SELECT java_method('java.lang.Thread', 'sleep', 30000L) FROM range(2)"
+    )
+
+    def cancel():
+        for _ in range(300):
+            if sc.statusTracker().getJobIdsForGroup("failure-cancel"):
+                sc.cancelJobGroup("failure-cancel")
+                return
+            time.sleep(0.05)
+
+    def fetch():
+        sc.setJobGroup("failure-cancel", "failure-cancel", interruptOnCancel=True)
+        watcher = threading.Thread(target=cancel)
+        watcher.start()
+        try:
+            cur.fetchall()
+        finally:
+            watcher.join(30)  # the watcher gives up after 15 s
+            for key in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
+                sc.setLocalProperty(key, None)
+
+    return fetch, "SPARK_JOB_CANCELLED"
+
+
+# (id, case, PEP-249 class): a case returns the failing call and the text
+# its message must hold; none of them depends on a JVM stack trace
+FAILURE_CASES = [
+    ("fetchone", _at_fetch(lambda c: c.fetchone()), ox.OperationalError),
+    ("fetchmany", _at_fetch(lambda c: c.fetchmany(2)), ox.OperationalError),
+    ("fetchall", _at_fetch(lambda c: c.fetchall()), ox.OperationalError),
+    ("fetchall_collect", _at_fetch(
+        lambda c: c.fetchall(), "SELECT parse_json('1') AS v, raise_error('boom') AS e"
+    ), ox.OperationalError),
+    ("arrow", _at_fetch(lambda c: c.arrow()), ox.OperationalError),
+    ("pandas", _at_fetch(lambda c: c.pandas()), ox.OperationalError),
+    ("rowcount", _at_fetch(lambda c: c.rowcount), ox.OperationalError),
+    ("query_to_arrow", lambda conn, spark, tmp_path: (
+        (lambda: ox.query_to_arrow(_BOOM)), "boom"
+    ), ox.OperationalError),
+    ("deleted_file", _deleted_file, ox.DataError),
+    ("cancelled_job", _cancelled, ox.OperationalError),
+    ("parse_error", _at_execute("SELEC BROKEN SYNTAX", "PARSE_SYNTAX_ERROR"),
+     ox.ProgrammingError),
+    ("unknown_table", _at_execute(
+        "SELECT * FROM definitely_not_a_table_xyz", "TABLE_OR_VIEW_NOT_FOUND"
+    ), ox.ProgrammingError),
+    ("unknown_column", _at_execute("SELECT nosuchcol FROM nation", "UNRESOLVED_COLUMN"),
+     ox.ProgrammingError),
+    ("missing_path", _at_execute(
+        "SELECT * FROM '/nonexistent/nowhere.parquet'", "PATH_NOT_FOUND"
+    ), ox.ProgrammingError),
+]
+
+
+@pytest.mark.parametrize("case,cls", [c[1:] for c in FAILURE_CASES],
+                         ids=[c[0] for c in FAILURE_CASES])
+def test_spark_failure_is_typed(conn, spark, tmp_path, case, cls):
+    """A Spark failure reaches the caller as its PEP-249 class, at execute
+    or at fetch, with the original Spark exception as ``__cause__``."""
+    from py4j.protocol import Py4JJavaError
+    from pyspark.errors.exceptions.captured import CapturedException
+
+    from opteryx_spark import errors
+
+    call, names = case(conn, spark, tmp_path)
+    with pytest.raises(ox.Error) as info:
+        call()
+    assert type(info.value) is cls
+    assert isinstance(info.value.__cause__, (CapturedException, Py4JJavaError))
+    assert errors.condition(info.value.__cause__)  # still readable by a caller
+    assert names in str(info.value)
 
 
 # (name, SQL, whether the Arrow path carries it); every case must fetch

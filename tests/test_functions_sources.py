@@ -144,18 +144,6 @@ def test_iceberg_conf_and_sql():
     assert "VERSION AS OF 42" in iceberg.time_travel_sql("lake.db.t", snapshot_id=42)
 
 
-def test_dbapi_error_mapping(spark):
-    import opteryx_spark as ox
-
-    conn = ox.connect(spark=spark)
-    import pytest as _pytest
-
-    with _pytest.raises(ox.ProgrammingError):
-        conn.cursor().execute("SELECT * FROM definitely_not_a_table_xyz")
-    with _pytest.raises(ox.ProgrammingError):
-        conn.cursor().execute("SELEC BROKEN SYNTAX")
-
-
 def test_match_against(spark):
     df = spark.createDataFrame(
         [(1, "the quick Brown fox"), (2, "quick grey wolf")], ["id", "txt"]

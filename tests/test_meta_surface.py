@@ -70,6 +70,14 @@ def test_cli_main(spark, sf_dir, capsys):
     assert "25" in out
 
 
+def test_cli_error_is_one_line_and_exit_status_1(spark, capsys):
+    from opteryx_spark.__main__ import main
+
+    assert main(["SELECT raise_error('boom')"]) == 1
+    err = capsys.readouterr().err.strip().splitlines()
+    assert err[-1].startswith("OperationalError: ") and "boom" in err[-1]
+
+
 def test_explain_analyze(conn):
     cur = conn.cursor().execute("EXPLAIN ANALYZE SELECT COUNT(*) FROM nation")
     rows = cur.fetchall()
