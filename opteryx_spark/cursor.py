@@ -11,8 +11,11 @@ Arrow table (``df.toArrow()``), which every fetch method, ``rowcount`` and
 
 from __future__ import annotations
 
-from collections import namedtuple
+import os
+import threading
+from collections import OrderedDict, namedtuple
 from typing import Any
+from urllib.parse import unquote, urlparse
 
 from pyspark.errors import AnalysisException, ParseException
 from pyspark.sql import DataFrame, SparkSession
@@ -58,6 +61,13 @@ DEFAULT_PREPARED = {
     "VERSION": "SELECT version()",
 }
 
+# executed plans a connection keeps for repeated statements, oldest
+# evicted first; each entry pins its DataFrame's shuffle files and
+# broadcast relations until then
+PLAN_MAP_SIZE = 64
+# plan leaves whose rows the plan itself or its input files fix
+_PLAN_LEAVES = ("LocalRelation", "OneRowRelation", "Range")
+
 
 class Connection:
     """PEP-249 Connection bound to a SparkSession + source registry."""
@@ -78,7 +88,15 @@ class Connection:
         self.variables: dict[str, Any] = {}
         self.user = user
         self.memberships = list(memberships or [])
-        self.statistics: dict[str, Any] = {"queries_executed": 0, "statements_executed": 0}
+        self.statistics: dict[str, Any] = {
+            "queries_executed": 0,
+            "statements_executed": 0,
+            "plans_reused": 0,
+        }
+        # semantic hash of an optimized plan -> (plan, output schema and
+        # input-file snapshot, the DataFrame that ran it); see _reuse_plan
+        self._plans: OrderedDict[int, tuple] = OrderedDict()
+        self._plans_lock = threading.Lock()
         self.time_columns = {**DEFAULT_TIME_COLUMNS, **(time_columns or {})}
         self.prepared_statements = {**DEFAULT_PREPARED}
         # ambient files first, explicit constructor args LAST — a
@@ -201,6 +219,32 @@ class Connection:
             base.createOrReplaceTempView(f"__unfiltered_{table}")
             base.filter(predicate).createOrReplaceTempView(table)
 
+    def _reuse_plan(self, df: DataFrame) -> tuple[DataFrame, tuple | None]:
+        """The DataFrame that already ran ``df``'s optimized plan, with the
+        same output schema and over the same input files, on this
+        connection; else ``df`` and the key to remember it under once it
+        has run.  AQE keeps a run DataFrame's materialized shuffle stages,
+        so running it again runs only its result stage."""
+        key = _plan_key(df)
+        if key is None:
+            return df, None
+        digest, plan, snapshot = key
+        with self._plans_lock:
+            hit = self._plans.get(digest)
+            if hit is not None and hit[1] == snapshot and plan.sameResult(hit[0]):
+                if hit[2] is not df:  # a fetch after SET @v finds its own
+                    self.statistics["plans_reused"] += 1
+                return hit[2], None
+        return df, key
+
+    def _remember_plan(self, key: tuple, df: DataFrame) -> None:
+        digest, plan, snapshot = key
+        with self._plans_lock:
+            self._plans.pop(digest, None)
+            self._plans[digest] = (plan, snapshot, df)
+            if len(self._plans) > PLAN_MAP_SIZE:
+                self._plans.popitem(last=False)
+
     def cursor(self) -> "Cursor":
         return Cursor(self)
 
@@ -223,6 +267,7 @@ class Cursor:
         self._table = None  # the statement's result, fetched once
         self._rows: list[tuple] | None = None  # the same rows as tuples
         self._pos = 0  # PEP-249 fetch position in _rows
+        self._plan_checked = False  # _df looked up in the connection's plans
 
     # -- execution ----------------------------------------------------------
 
@@ -408,9 +453,11 @@ class Cursor:
                     f"temporal FOR clause on table '{table}' which has no "
                     f"configured time column (Connection(time_columns={{'{table}': ...}}))"
                 )
-            base = self._conn.registry.resolve(spark, table) if table not in [
-                t.name for t in spark.catalog.listTables()
-            ] else spark.table(table)
+            base = (
+                spark.table(table)
+                if _is_view(spark, table)
+                else self._conn.registry.resolve(spark, table)
+            )
             cond = f"{col} >= {start}"
             if end != "NULL":
                 cond += f" AND {col} < {end}"  # end bound is exclusive
@@ -550,8 +597,23 @@ class Cursor:
     @property
     def df(self) -> DataFrame:
         if self._df is None:
-            raise RuntimeError("no statement executed")
+            raise errors.ProgrammingError("no statement executed")
         return self._df
+
+    def _run(self, action):
+        """``action(df)`` for the statement's DataFrame ``df``: the first
+        run swaps in the DataFrame that already ran the same plan on this
+        connection, if any, and remembers its own once it succeeds."""
+        df, key = self.df, None
+        if not self._plan_checked:
+            self._plan_checked = True
+            df, key = self._conn._reuse_plan(df)
+            self._df = df
+        with errors.boundary():
+            out = action(df)
+        if key is not None:
+            self._conn._remember_plan(key, df)
+        return out
 
     @property
     def description(self) -> list[Description] | None:
@@ -570,8 +632,7 @@ class Cursor:
                 binary = results.binary_type(self._conn.spark)
                 self._rows = results.table_rows(self.arrow(), binary)
             else:
-                with errors.boundary():
-                    self._rows = results.collect_rows(self.df)
+                self._rows = self._run(results.collect_rows)
         return self._rows
 
     @property
@@ -601,13 +662,11 @@ class Cursor:
         """Results as a pyarrow.Table (reference ``execute_to_arrow``): the
         statement's buffered result, so fetching rows too runs it once."""
         if self._table is None:
-            with errors.boundary():
-                self._table = self.df.toArrow()
+            self._table = self._run(lambda df: df.toArrow())
         return self._table
 
     def pandas(self):
-        with errors.boundary():
-            return self.df.toPandas()
+        return self._run(lambda df: df.toPandas())
 
     def close(self) -> None:
         self._df = None
@@ -902,14 +961,51 @@ def _parse_plan_tree(text: str) -> list[tuple[int, str, str]]:
 
 def _is_view(spark: SparkSession, name: str) -> bool:
     try:
-        return any(t.name == name for t in spark.catalog.listTables())
+        return spark.catalog.tableExists(name)
     except Exception:
         return False
 
 
+def _plan_key(df: DataFrame) -> tuple | None:
+    """(semantic hash, optimized plan, snapshot) of ``df``, or None when
+    the plan and its files do not fix its result: the plan is
+    nondeterministic, a leaf is neither a file scan nor rows held in the
+    plan, or an input file is not on the local file system.  The plan
+    carries views, bound parameters, semantic confs and folded
+    current-time literals.  The snapshot carries what the canonical plan
+    drops, the output column names, and file rewrites."""
+    try:
+        plan = df._jdf.queryExecution().optimizedPlan()
+        for p in (plan, *_scala_seq(plan.subqueriesAll())):
+            if not p.deterministic():
+                return None
+            for leaf in _scala_seq(p.collectLeaves()):
+                kind = leaf.getClass().getSimpleName()
+                if kind == "LogicalRelation":
+                    if leaf.relation().getClass().getSimpleName() != "HadoopFsRelation":
+                        return None
+                elif kind not in _PLAN_LEAVES:
+                    return None
+        files = []
+        for uri in df.inputFiles():
+            parsed = urlparse(uri)
+            if parsed.scheme != "file":
+                return None
+            st = os.stat(unquote(parsed.path))
+            files.append((uri, st.st_size, st.st_mtime_ns))
+        return plan.semanticHash(), plan, (df.schema, tuple(sorted(files)))
+    except Exception:  # no key, no reuse: the run itself reports failures
+        return None
+
+
+def _scala_seq(seq):
+    it = seq.iterator()
+    while it.hasNext():
+        yield it.next()
+
+
 def _load_json_file(filename: str) -> dict:
     import json
-    import os
 
     for base in (os.getcwd(), os.path.expanduser("~")):
         path = os.path.join(base, filename)

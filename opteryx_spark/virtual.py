@@ -190,29 +190,58 @@ _SYSTEM_VARIABLES: dict[str, tuple[str, object, str, str]] = {
 }
 
 
-def register_virtual_datasets(spark: SparkSession) -> None:
-    """Register the static virtual relations (once per session)."""
-    spark.createDataFrame(_PLANETS, _PLANET_SCHEMA).createOrReplaceTempView("virtual_planets")
+def local_relation(spark: SparkSession, rows: list[tuple], ddl: str):
+    """``rows`` under the DDL schema ``ddl``, built from an Arrow table so
+    Spark plans it as a ``LocalRelation``: the rows live in the plan, no
+    job runs to read them, and equal rows give equal plans."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import DataType
+
+    schema = DataType.fromDDL(ddl)
+    arrow_schema = to_arrow_schema(schema)
+    columns = list(zip(*rows)) if rows else [()] * len(arrow_schema)
+    table = pa.Table.from_arrays(
+        [pa.array(list(c), type=f.type) for c, f in zip(columns, arrow_schema)],
+        schema=arrow_schema,
+    )
+    return spark.createDataFrame(table, schema)
+
+
+# the static relations served from rows held here: name -> (rows, DDL)
+STATIC_RELATIONS = {
+    "planets": (_PLANETS, _PLANET_SCHEMA),
     # $no_table: one row, one column (reference no_table_data.py:27-32)
-    spark.createDataFrame([(0,)], "`$column` BIGINT").createOrReplaceTempView("virtual_no_table")
+    "no_table": ([(0,)], "`$column` BIGINT"),
+    "stop_words": ([(w,) for w in _STOP_WORDS], "value STRING"),
+}
+
+
+def register_virtual_datasets(spark: SparkSession) -> None:
+    """Register the static virtual relations, once per session.  The
+    marker lives on the session object, as ``register_sql_functions``
+    keeps its own."""
+    if getattr(spark, "_oxs_virtual_registered", False):
+        return
+    for name, (rows, ddl) in STATIC_RELATIONS.items():
+        local_relation(spark, rows, ddl).createOrReplaceTempView(f"virtual_{name}")
     for _name in ("satellites", "astronauts", "missions"):
         _load_packaged(spark, _name).createOrReplaceTempView(f"virtual_{_name}")
-    spark.createDataFrame([(w,) for w in _STOP_WORDS], "value STRING").createOrReplaceTempView(
-        "virtual_stop_words"
-    )
     register_session_state(spark, {}, {})
+    try:
+        spark._oxs_virtual_registered = True
+    except AttributeError:  # exotic session wrappers without __dict__
+        pass
 
 
-def register_session_state(
-    spark: SparkSession,
+def session_state_relations(
     variables: dict,
     statistics: dict,
     user: str | None = None,
     memberships: list[str] | None = None,
-) -> None:
-    """Refresh the session-state relations ``$variables`` / ``$statistics``
-    / ``$user`` (reference ``virtual_datasets/{variables_data,statistics,
-    user}.py``).  Called by the cursor before statements referencing them.
+) -> dict[str, tuple[list[tuple], str]]:
+    """Rows and DDL of ``$variables`` / ``$statistics`` / ``$user``
+    (reference ``virtual_datasets/{variables_data,statistics,user}.py``).
 
     ``$variables`` = the 43 system variables (overlaid with any SET
     values) plus user-defined ``@vars``; ``$statistics`` = 17 runtime
@@ -227,9 +256,6 @@ def register_session_state(
             var_rows.append(
                 (name, str(value), type(value).__name__.upper(), "user", "unrestricted")
             )
-    spark.createDataFrame(
-        var_rows, "name STRING, value STRING, type STRING, owner STRING, visibility STRING"
-    ).createOrReplaceTempView("virtual_variables")
 
     stat_defaults = {
         "queries_executed": 0, "uptime_seconds": 0, "io_wait_seconds": 0,
@@ -241,9 +267,6 @@ def register_session_state(
     }
     merged = {**stat_defaults, **{k: v for k, v in statistics.items() if k in stat_defaults}}
     stat_rows = [(k, str(v)) for k, v in merged.items()]
-    spark.createDataFrame(stat_rows, "key STRING, value STRING").createOrReplaceTempView(
-        "virtual_statistics"
-    )
 
     try:
         username = user or getpass.getuser()
@@ -252,6 +275,24 @@ def register_session_state(
     user_rows = [("name", username, "VARCHAR")] + [
         ("membership", m, "VARCHAR") for m in (memberships or [])
     ]
-    spark.createDataFrame(
-        user_rows, "attribute STRING, value STRING, type STRING"
-    ).createOrReplaceTempView("virtual_user")
+    return {
+        "variables": (
+            var_rows, "name STRING, value STRING, type STRING, owner STRING, visibility STRING"
+        ),
+        "statistics": (stat_rows, "key STRING, value STRING"),
+        "user": (user_rows, "attribute STRING, value STRING, type STRING"),
+    }
+
+
+def register_session_state(
+    spark: SparkSession,
+    variables: dict,
+    statistics: dict,
+    user: str | None = None,
+    memberships: list[str] | None = None,
+) -> None:
+    """Refresh the session-state relations (``session_state_relations``).
+    Called by the cursor before statements referencing them."""
+    relations = session_state_relations(variables, statistics, user, memberships)
+    for name, (rows, ddl) in relations.items():
+        local_relation(spark, rows, ddl).createOrReplaceTempView(f"virtual_{name}")

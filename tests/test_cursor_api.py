@@ -80,6 +80,23 @@ def test_rowcount_and_arrow_reuse_the_fetched_result(conn, spark):
     assert _jobs(spark, "cursor-fetch-reuse", fetch_then_reuse) <= alone
 
 
+@pytest.mark.parametrize("state", ["fresh", "closed"])
+@pytest.mark.parametrize("call", [
+    pytest.param(lambda c: c.fetchall(), id="fetchall"),
+    pytest.param(lambda c: c.fetchone(), id="fetchone"),
+    pytest.param(lambda c: c.rowcount, id="rowcount"),
+])
+def test_result_without_statement_is_programming_error(conn, state, call):
+    """PEP-249: reading a result before execute or after close raises an
+    engine error, not a bare RuntimeError."""
+    cur = conn.cursor()
+    if state == "closed":
+        cur.execute("SELECT 1 AS x").fetchall()
+        cur.close()
+    with pytest.raises(ox.ProgrammingError, match="no statement executed"):
+        call(cur)
+
+
 _BOOM = "SELECT raise_error('boom') AS e"
 
 
@@ -534,14 +551,36 @@ def test_notebook_magic_registration_gated():
     assert "opteryx" in shell.magics_manager.magics["cell"]
 
 
-def test_atq_with_star_projection_falls_back(spark):
+def _atquestion_store(root) -> str:
+    """``flat/atquestion`` under ``root``: 3 columns of JSON lines, where
+    ``dict`` has the key ``list`` in exactly 4 rows and
+    ``nested.level1.key`` exists in 4 rows, one of them an explicit null."""
+    import json
+
+    rows = [
+        {"id": 1, "dict": {"list": [1, 2], "a": 1}, "nested": {"level1": {"key": "v"}}},
+        {"id": 2, "dict": {"list": [3]}, "nested": {"level1": {"key": None}}},
+        {"id": 3, "dict": {"list": [4], "b": "x"}, "nested": {"level1": {"key": "w"}}},
+        {"id": 4, "dict": {"list": [5, 6]}, "nested": {"level1": {"key": "x"}}},
+        {"id": 5, "dict": {"a": 2}, "nested": {"level1": {"other": 1}}},
+        {"id": 6, "dict": {"b": "y"}, "nested": {"level1": {}}},
+        {"id": 7, "dict": {}, "nested": {}},
+        {"id": 8, "dict": {"a": 3, "b": "z"}, "nested": {"level1": {"other": 2}}},
+    ]
+    path = root / "flat" / "atquestion"
+    path.mkdir(parents=True)
+    (path / "atquestion.jsonl").write_text("".join(json.dumps(r) + "\n" for r in rows))
+    return str(root)
+
+
+def test_atq_with_star_projection_falls_back(spark, tmp_path):
     """SELECT * plus @? must not leak __variant into the schema and must
     still execute (string-JSON fallback), and '.*' inside a string
     literal must not disable the variant route."""
     import opteryx_spark as ox
 
     conn = ox.Connection(spark)
-    conn.registry.register_store("atqtest", root="/root/reference/testdata")
+    conn.registry.register_store("atqtest", root=_atquestion_store(tmp_path))
     cur = conn.cursor()
     rows = cur.execute(
         "SELECT * FROM atqtest.flat.atquestion WHERE dict @? 'list'"

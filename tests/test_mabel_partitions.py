@@ -54,14 +54,53 @@ def test_read_partitioned_empty_range_raises(spark, mabel_root):
         mp.read_partitioned(spark, root, dt.date(1999, 1, 1), dt.date(1999, 1, 2))
 
 
-def test_frame_selection_and_hour_segments(spark):
+def _mabel_store(root) -> str:
+    """The reference's ``partitioned/`` layouts under ``root``:
+
+    - ``framed``: 2021-03-28 holds two complete ``as_at`` frames of 100,000
+      rows and a newer incomplete one; 2021-03-29 one complete frame;
+      every frame of 2021-03-30 carries ``frame.ignore``.
+    - ``hourly``: 2024-01-01 has one row in each of two ``by_hour`` hours.
+    - ``mixed``: 2020-02-03 has a ``by_hour`` and a foreign ``by_*`` segment.
+    - ``dated``: one past day only, so today has no partition.
+    """
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    def leaf(*parts, rows=1, markers=()):
+        d = root.joinpath("partitioned", *parts)
+        d.mkdir(parents=True)
+        pq.write_table(pa.table({"id": pa.array(range(rows), pa.int64())}), d / "data.parquet")
+        for marker in markers:
+            (d / marker).touch()
+
+    def day(name, y, m, dd):
+        return (name, f"year_{y:04d}", f"month_{m:02d}", f"day_{dd:02d}")
+
+    complete = ("frame.complete",)
+    leaf(*day("framed", 2021, 3, 28), "as_at_0001", rows=100_000, markers=complete)
+    leaf(*day("framed", 2021, 3, 28), "as_at_0002", rows=100_000, markers=complete)
+    leaf(*day("framed", 2021, 3, 28), "as_at_0003", rows=7)
+    leaf(*day("framed", 2021, 3, 29), "as_at_0001", rows=100_000, markers=complete)
+    leaf(*day("framed", 2021, 3, 30), "as_at_0001", rows=100_000,
+         markers=complete + ("frame.ignore",))
+    leaf(*day("framed", 2021, 3, 30), "as_at_0002", rows=3, markers=("frame.ignore",))
+    leaf(*day("hourly", 2024, 1, 1), "by_hour", "hour=00")
+    leaf(*day("hourly", 2024, 1, 1), "by_hour", "hour=01")
+    leaf(*day("mixed", 2020, 2, 3), "by_hour", "hour=00")
+    leaf(*day("mixed", 2020, 2, 3), "by_minute", "minute=00")
+    leaf(*day("dated", 2020, 1, 1))
+    return str(root)
+
+
+def test_frame_selection_and_hour_segments(spark, tmp_path):
     """Reference fixture layouts: latest complete non-ignored frame wins,
     by_hour segments restrict to the FOR hour, foreign by_* raises."""
     import opteryx_spark as ox
     from opteryx_spark import errors
     from opteryx_spark.sources.registry import register_store
 
-    register_store("reftest", root="/root/reference/testdata")
+    register_store("reftest", root=_mabel_store(tmp_path))
     conn = ox.connect(spark=spark)
     n = conn.cursor().execute(
         "SELECT COUNT(*) AS n FROM reftest.partitioned.framed FOR '2021-03-28'"
