@@ -11,6 +11,7 @@ Arrow table (``df.toArrow()``), which every fetch method, ``rowcount`` and
 
 from __future__ import annotations
 
+import datetime as _dt
 import os
 import threading
 from collections import OrderedDict, namedtuple
@@ -21,10 +22,11 @@ from pyspark.errors import AnalysisException, ParseException
 from pyspark.sql import DataFrame, SparkSession
 
 from opteryx_spark import errors, results, rewriter, sqltext
-from opteryx_spark.session import get_session
+from opteryx_spark.session import get_session, session_now
+from opteryx_spark.sources import mabel_partitions
 from opteryx_spark.sources import registry as _registry_mod
 from opteryx_spark.sources.registry import SourceRegistry, read_any
-from opteryx_spark.virtual import register_virtual_datasets
+from opteryx_spark.virtual import PLANET_DISCOVERY_CUTOFFS, register_virtual_datasets
 
 Description = namedtuple(
     "Description",
@@ -62,8 +64,7 @@ DEFAULT_PREPARED = {
 }
 
 # executed plans a connection keeps for repeated statements, oldest
-# evicted first; each entry pins its DataFrame's shuffle files and
-# broadcast relations until then
+# evicted first; each entry pins its DataFrame's shuffle files until then
 PLAN_MAP_SIZE = 64
 # plan leaves whose rows the plan itself or its input files fix
 _PLAN_LEAVES = ("LocalRelation", "OneRowRelation", "Range")
@@ -205,19 +206,22 @@ class Connection:
                     f"plain name (register_df / createOrReplaceTempView) "
                     f"and filter that"
                 )
-            base = None
             if _is_view(self.spark, f"__unfiltered_{table}"):
                 base = self.spark.table(f"__unfiltered_{table}")
-            elif _is_view(self.spark, table):
-                base = self.spark.table(table)
             else:
                 try:
-                    base = self.registry.resolve(self.spark, table)
+                    base = self._relation(table)
                 except Exception:
                     continue  # source genuinely unknown; retried next execute
             # keep the unfiltered original so re-application is idempotent
             base.createOrReplaceTempView(f"__unfiltered_{table}")
             base.filter(predicate).createOrReplaceTempView(table)
+
+    def _relation(self, table: str) -> DataFrame:
+        """``table`` as a session view, else through the source registry."""
+        if _is_view(self.spark, table):
+            return self.spark.table(table)
+        return self.registry.resolve(self.spark, table)
 
     def _reuse_plan(self, df: DataFrame) -> tuple[DataFrame, tuple | None]:
         """The DataFrame that already ran ``df``'s optimized plan, with the
@@ -238,6 +242,10 @@ class Connection:
         return df, key
 
     def _remember_plan(self, key: tuple, df: DataFrame) -> None:
+        # a run that broadcast a relation is not kept: the entry would pin
+        # the broadcast on the driver heap
+        if "Broadcast" in df._jdf.queryExecution().executedPlan().toString():
+            return
         digest, plan, snapshot = key
         with self._plans_lock:
             self._plans.pop(digest, None)
@@ -320,20 +328,11 @@ class Cursor:
             from opteryx_spark.dialect import _VIRTUAL_COLUMN_ALIASES
 
             raw = cols_m.group(1).strip("'")
-            table = rewriter.rewrite_virtual_datasets(raw)
-            for_m = re.search(r"\bFOR\s+'([^']*)'", stmt, re.IGNORECASE)
-            mroot = self._conn.registry.mabel_root(table) if not table.startswith("$") else None
-            if mroot is not None and for_m:
-                import datetime as _dt
-
-                from opteryx_spark.sources import mabel_partitions as _mp
-
-                s = _dt.datetime.fromisoformat(for_m.group(1))
-                df = _mp.read_for_range(spark, mroot, s, s + _dt.timedelta(days=1))
-            elif _is_view(spark, table):
-                df = spark.table(table)
+            for_m = re.match(r"\s+FOR\s+(.+)", stmt[cols_m.end() :], re.IGNORECASE | re.DOTALL)
+            if for_m:
+                df = self._temporal(spark, raw, for_m.group(1), session_now(spark))
             else:
-                df = self._conn.registry.resolve(spark, table)
+                df = self._conn._relation(rewriter.rewrite_virtual_datasets(raw))
             # alias column mirrors the reference's FlatColumn.aliases surface
             amap = _VIRTUAL_COLUMN_ALIASES.get(raw.lstrip("$"), {})
             rev = {canon: [alias] for alias, canon in amap.items()}
@@ -398,70 +397,20 @@ class Cursor:
         self._conn._refresh_context_views(stmt)
         stmt = self._conn._expand_sysvars(stmt)
         res = rewriter.rewrite(stmt, merged or None)
-        for view, path in res.path_tables.items():
-            import os as _os
-
-            if not _os.path.exists(path) and self._conn.registry._match_store(path):
-                # quoted dataset name ('testdata.planets'): the reference
-                # resolves quoted relations through connectors too
-                self._conn.registry.resolve(spark, path).createOrReplaceTempView(view)
-            else:
-                read_any(spark, path).createOrReplaceTempView(view)
-        sql = self._resolve_store_refs(spark, res.sql)
-        for view, (table, start, end) in res.temporal_filters.items():
-            # each FOR occurrence got its own marker view in the SQL, so a
-            # temporal and a plain reference to one table stay independent
-            if table.startswith("$"):
-                # virtual datasets are static snapshots; $planets additionally
-                # honours discovery history (reference planet_data.py temporal
-                # semantics: fewer planets known before Uranus/Neptune/Pluto)
-                base = spark.table(f"virtual_{table[1:]}")
-                if table == "$planets":
-                    from opteryx_spark.virtual import PLANET_DISCOVERY_CUTOFFS
-
-                    asof = spark.sql(f"SELECT CAST({start} AS TIMESTAMP) AS t").collect()[0][0]
-                    max_id = 9
-                    for cutoff, known in PLANET_DISCOVERY_CUTOFFS:
-                        if asof is not None and asof < cutoff:
-                            max_id = known
-                            break
-                    base = base.filter(f"id <= {max_id}")
-                base.createOrReplaceTempView(view)
-                continue
-            mroot = self._conn.registry.mabel_root(table)
-            if mroot is not None:
-                # date-partitioned store: FOR selects partition *paths*
-                # (reference MabelPartitionScheme), not a column filter
-                import datetime as _dt
-
-                from opteryx_spark.sources import mabel_partitions as _mp
-
-                end_expr = "CAST(NULL AS TIMESTAMP)" if end == "NULL" else f"CAST({end} AS TIMESTAMP)"
-                row = spark.sql(
-                    f"SELECT CAST({start} AS TIMESTAMP) AS s, {end_expr} AS e"
-                ).collect()[0]
-                s = row["s"]
-                e = row["e"] or (
-                    _dt.datetime.now().replace(hour=0, minute=0, second=0, microsecond=0)
-                    + _dt.timedelta(days=1)
-                )
-                _mp.read_for_range(spark, mroot, s, e).createOrReplaceTempView(view)
-                continue
-            col = self._conn.time_columns.get(table)
-            if col is None:
-                raise errors.ProgrammingError(
-                    f"temporal FOR clause on table '{table}' which has no "
-                    f"configured time column (Connection(time_columns={{'{table}': ...}}))"
-                )
-            base = (
-                spark.table(table)
-                if _is_view(spark, table)
-                else self._conn.registry.resolve(spark, table)
-            )
-            cond = f"{col} >= {start}"
-            if end != "NULL":
-                cond += f" AND {col} < {end}"  # end bound is exclusive
-            base.filter(cond).createOrReplaceTempView(view)
+        # the statement's relations, bound by name in spark.sql (_sql)
+        relations = {
+            name: self._conn.registry.resolve(spark, path)
+            # quoted dataset name ('testdata.planets'): the reference
+            # resolves quoted relations through connectors too
+            if not os.path.exists(path) and self._conn.registry._match_store(path)
+            else read_any(spark, path)
+            for name, path in res.path_tables.items()
+        }
+        sql = self._resolve_store_refs(spark, res.sql, relations)
+        if res.temporal_filters:
+            now = session_now(spark)
+            for name, (table, spec) in res.temporal_filters.items():
+                relations[name] = self._temporal(spark, table, spec, now)
         explain_m = re.match(
             r"EXPLAIN(\s+ANALYZE)?(?:\s+FORMAT\s+(\w+))?\s+(.*)",
             sql,
@@ -469,10 +418,10 @@ class Cursor:
         )
         if explain_m:
             return self._explain(
-                spark, explain_m.group(3), bool(explain_m.group(1)), explain_m.group(2)
+                spark, explain_m.group(3), bool(explain_m.group(1)), explain_m.group(2), relations
             )
         try:
-            return _ym_safe(spark.sql(sql))
+            return _ym_safe(_sql(spark, sql, relations))
         except ParseException:
             raise  # no type-dependent alternative for unparsable SQL
         except AnalysisException as exc:
@@ -482,7 +431,7 @@ class Cursor:
                 prev = spark.conf.get("spark.sql.caseSensitive")
                 spark.conf.set("spark.sql.caseSensitive", "true")
                 try:
-                    return _ym_safe(spark.sql(sql))
+                    return _ym_safe(_sql(spark, sql, relations))
                 except Exception:
                     raise exc
                 finally:
@@ -490,19 +439,53 @@ class Cursor:
             alt = _type_fallback(sql, str(exc))
             if alt is not None:
                 try:
-                    return _ym_safe(spark.sql(alt))
+                    return _ym_safe(_sql(spark, alt, relations))
                 except Exception:
                     raise exc  # surface the original analysis error
             raise
 
-    def _explain(self, spark: SparkSession, inner: str, analyze: bool, fmt: str | None):
+    def _temporal(
+        self, spark: SparkSession, table: str, spec: str, now: _dt.datetime
+    ) -> DataFrame:
+        """The rows of ``table`` that ``FOR <spec>`` selects, ``now`` being
+        the statement's time in the session time zone."""
+        start, end = rewriter.for_bounds(spec, now)
+        if table.startswith("$"):
+            # virtual datasets are static snapshots; $planets additionally
+            # honours discovery history (reference planet_data.py temporal
+            # semantics: fewer planets known before Uranus/Neptune/Pluto)
+            base = spark.table(f"virtual_{table[1:]}")
+            if table == "$planets":
+                known = next((n for cutoff, n in PLANET_DISCOVERY_CUTOFFS if start < cutoff), 9)
+                base = base.filter(f"id <= {known}")
+            return base
+        mroot = self._conn.registry.mabel_root(table)
+        if mroot is not None:
+            # date-partitioned store: FOR selects partition *paths*
+            # (reference MabelPartitionScheme), not a column filter
+            end = end or rewriter.for_bounds("TODAY", now)[1]
+            return mabel_partitions.read_for_range(spark, mroot, start, end)
+        col = self._conn.time_columns.get(table)
+        if col is None:
+            raise errors.ProgrammingError(
+                f"temporal FOR clause on table '{table}' which has no "
+                f"configured time column (Connection(time_columns={{'{table}': ...}}))"
+            )
+        cond = f"{col} >= TIMESTAMP '{start}'"
+        if end is not None:
+            cond += f" AND {col} < TIMESTAMP '{end}'"  # end bound is exclusive
+        return self._conn._relation(table).filter(cond)
+
+    def _explain(
+        self, spark: SparkSession, inner: str, analyze: bool, fmt: str | None, relations: dict
+    ):
         """Reference EXPLAIN surface (``managers/execution/serial_engine.py:69``):
         TEXT → (tree, operator, config) rows; ANALYZE adds runtime metric
         columns; MERMAID → one diagram cell; JSON/GRAPHVIZ → unsupported."""
         fmt = (fmt or "TEXT").upper()
         if fmt in ("JSON", "GRAPHVIZ"):
             raise errors.ProgrammingError(f"EXPLAIN FORMAT {fmt} is not supported")
-        plan_df = spark.sql(inner)
+        plan_df = _sql(spark, inner, relations)
         if analyze:
             # execute so runtime metrics exist — through the noop sink,
             # never materializing the result set on the driver
@@ -538,10 +521,10 @@ class Cursor:
             "tree INT, operator STRING, config STRING",
         )
 
-    def _resolve_store_refs(self, spark: SparkSession, sql: str) -> str:
+    def _resolve_store_refs(self, spark: SparkSession, sql: str, relations: dict) -> str:
         """``my_store.table`` references resolve through the source
         registry (reference dataset-prefix connectors,
-        ``opteryx/connectors/__init__.py:96-104``) and become temp views."""
+        ``opteryx/connectors/__init__.py:96-104``) into ``relations``."""
         import re
 
         stores = self._conn.registry.stores
@@ -580,7 +563,7 @@ class Cursor:
                 df = self._conn.registry.resolve(
                     spark, f"{prefix}.{rest}", with_variant=want_variant
                 )
-                df.createOrReplaceTempView(view)
+                relations[view] = df
                 if want_variant and "__variant" in df.columns:
                     variant_views[view] = df.columns
                 return view
@@ -692,6 +675,18 @@ def _ym_safe(df: DataFrame) -> DataFrame:
             for i, f in enumerate(df.schema.fields)
         ]
     )
+
+
+def _sql(spark: SparkSession, sql: str, relations: dict[str, DataFrame]) -> DataFrame:
+    """``spark.sql`` with the statement's relations bound to their marker
+    names.  PySpark registers each under a fresh ``_pyspark_<uuid>`` name and
+    drops it once the statement is analyzed, so concurrent statements never
+    share a name.  Its formatter reads ``{name}``: other braces are doubled."""
+    if relations:
+        sql = sql.replace("{", "{{").replace("}", "}}")
+        names = _re2.compile(r"\b(" + "|".join(map(_re2.escape, relations)) + r")\b")
+        sql = sqltext.map_outside_literals(sql, lambda seg: names.sub(r"{\1}", seg))
+    return spark.sql(sql, **relations)
 
 
 _EQ = _re2.compile("=")

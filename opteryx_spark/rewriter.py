@@ -10,32 +10,34 @@ and optimizes the final statement.
 Handled dialect deltas (SURVEY.md §7.1b):
 - comments + multi-statement split
 - temporal ``FOR <ts>`` / ``FOR DATES BETWEEN a AND b`` / ``FOR DATES
-  SINCE x`` / ``FOR LAST n DAYS`` / ``FOR TODAY|YESTERDAY``
-  (``sql_rewriter.py:50-57,115-120``) → returned as per-table time
-  filters the executor applies to that table's time column
+  SINCE x`` / ``FOR LAST n DAYS`` / ``FOR DATES IN <range>``
+  (``sql_rewriter.py:50-57,115-120``) → per-occurrence relation markers
+  and their specs; ``for_bounds`` resolves a spec to wall-clock bounds
 - JSON operators ``->``, ``->>``, ``@?`` (``binary_operators.py:25-80``)
   → ``get_json_object``
 - array operators ``@>`` (overlap) / ``@>>`` (contains-all)
   (``ops.py:291-379``) → ``arrays_overlap`` / ``forall``
 - ``$dataset`` virtual tables → registered view names
-- quoted path / URL FROM targets → placeholder names the cursor mounts
+- quoted path / URL FROM targets → relation markers the cursor binds
 - ``GENERATE_SERIES(...)`` table function → ``explode(sequence(...))``
 - ``DISTINCT ON (cols)`` → ``row_number()`` window wrapper
 """
 
 from __future__ import annotations
 
+import datetime as dt
 import re
 from dataclasses import dataclass, field
 
-from opteryx_spark import sqltext
+from opteryx_spark import errors, sqltext
 
 
 @dataclass
 class RewriteResult:
     sql: str
-    temporal_filters: dict[str, tuple[str, str, str]] = field(default_factory=dict)
-    path_tables: dict[str, str] = field(default_factory=dict)  # view name -> path
+    # relation markers in ``sql`` -> (table, FOR spec) / quoted path
+    temporal_filters: dict[str, tuple[str, str]] = field(default_factory=dict)
+    path_tables: dict[str, str] = field(default_factory=dict)
 
 
 # Quoted text follows the one lexical model in ``sqltext``.
@@ -97,92 +99,70 @@ def split_statements(sql: str) -> list[str]:
 
 # --- temporal FOR clause ----------------------------------------------------
 
-_FOR_PATTERNS = [
-    # FROM <t> FOR DATES BETWEEN <a> AND <b>
-    (
-        re.compile(
-            r"(FROM|JOIN)\s+([\w.$]+)(\s+(?:AS\s+)?\w+)?\s+FOR\s+DATES\s+BETWEEN\s+"
-            r"('[^']*'|TODAY|YESTERDAY|MONDAY|TUESDAY|WEDNESDAY|THURSDAY|FRIDAY|SATURDAY|SUNDAY|\d{4}-\d{2}-\d{2}" \
-            r")\s+AND\s+('[^']*'|TODAY|YESTERDAY|MONDAY|TUESDAY|WEDNESDAY|THURSDAY|FRIDAY|SATURDAY|SUNDAY|\d{4}-\d{2}-\d{2}" \
-            r")(?P<post>\s+AS\s+\w+)?",
-            re.IGNORECASE,
-        ),
-        "between",
-    ),
-    (
-        re.compile(
-            r"(FROM|JOIN)\s+([\w.$]+)(\s+(?:AS\s+)?\w+)?\s+FOR\s+DATES\s+SINCE\s+"
-            r"('[^']*'|TODAY|YESTERDAY|MONDAY|TUESDAY|WEDNESDAY|THURSDAY|FRIDAY|SATURDAY|SUNDAY|\d{4}-\d{2}-\d{2}" \
-            r")(?P<post>\s+AS\s+\w+)?",
-            re.IGNORECASE,
-        ),
-        "since",
-    ),
-    (
-        re.compile(
-            r"(FROM|JOIN)\s+([\w.$]+)(\s+(?:AS\s+)?\w+)?\s+FOR\s+LAST\s+(\d+)\s+DAYS(?P<post>\s+AS\s+\w+)?",
-            re.IGNORECASE,
-        ),
-        "last_days",
-    ),
-    (
-        re.compile(
-            r"(FROM|JOIN)\s+([\w.$]+)(\s+(?:AS\s+)?\w+)?\s+FOR\s+DATES\s+IN\s+"
-            r"(THIS_MONTH|LAST_MONTH|PREVIOUS_MONTH|THIS_YEAR|LAST_YEAR)(?P<post>\s+AS\s+\w+)?",
-            re.IGNORECASE,
-        ),
-        "named_range",
-    ),
-    (
-        re.compile(
-            r"(FROM|JOIN)\s+([\w.$]+)(\s+(?:AS\s+)?\w+)?\s+FOR\s+"
-            r"('[^']*'|TODAY|YESTERDAY|\d{4}-\d{2}-\d{2}"
-            r"|MONDAY|TUESDAY|WEDNESDAY|THURSDAY|FRIDAY|SATURDAY|SUNDAY)(?P<post>\s+AS\s+\w+)?",
-            re.IGNORECASE,
-        ),
-        "point",
-    ),
-]
-
-_WEEKDAYS = {
-    "MONDAY": "MO", "TUESDAY": "TU", "WEDNESDAY": "WE", "THURSDAY": "TH",
-    "FRIDAY": "FR", "SATURDAY": "SA", "SUNDAY": "SU",
-}
-
-_SUBQ_FOR = re.compile(
-    r"(\)\s*(?:AS\s+)?\w+)\s+FOR\s+('[^']*'|TODAY|YESTERDAY|\d{4}-\d{2}-\d{2}"
-    r"|MONDAY|TUESDAY|WEDNESDAY|THURSDAY|FRIDAY|SATURDAY|SUNDAY)",
+_DAY = dt.timedelta(days=1)
+_WEEKDAYS = ("MONDAY", "TUESDAY", "WEDNESDAY", "THURSDAY", "FRIDAY", "SATURDAY", "SUNDAY")
+# a day or instant: quoted, a bare ISO date, or a day relative to today
+_DATE = rf"(?:'[^']*'|\d{{4}}-\d{{2}}-\d{{2}}|TODAY|YESTERDAY|{'|'.join(_WEEKDAYS)})(?!\w)"
+# what follows FOR (reference ``sql_rewriter.py:50-57,115-120``)
+_SPEC = (
+    rf"DATES\s+BETWEEN\s+(?P<a>{_DATE})\s+AND\s+(?P<b>{_DATE})"
+    rf"|DATES\s+SINCE\s+(?P<since>{_DATE})"
+    r"|LAST\s+(?P<days>\d+)\s+DAYS\b"
+    r"|DATES\s+IN\s+(?P<range>THIS_MONTH|LAST_MONTH|PREVIOUS_MONTH|THIS_YEAR|LAST_YEAR)\b"
+    rf"|(?P<day>{_DATE})"
+)
+_FOR_SPEC = re.compile(_SPEC, re.IGNORECASE)
+# FROM|JOIN <table> [alias] FOR <spec> [AS alias]
+_FOR_TABLE = re.compile(
+    rf"(FROM|JOIN)\s+([\w.$]+)(\s+(?:AS\s+)?\w+)?\s+FOR\s+(?P<spec>{_SPEC})(?P<post>\s+AS\s+\w+)?",
     re.IGNORECASE,
 )
+# FOR on a derived relation: (SELECT ...) [AS] p FOR <spec>
+_FOR_DERIVED = re.compile(rf"(\)\s*(?:AS\s+)?\w+)\s+FOR\s+(?:{_SPEC})", re.IGNORECASE)
 
 
-def _norm_date(tok: str) -> str:
-    up = tok.upper()
-    if up == "TODAY":
-        return "current_date()"
-    if up == "YESTERDAY":
-        return "date_sub(current_date(), 1)"
-    if up in _WEEKDAYS:
-        # the most recent such weekday at or before today
-        return f"next_day(date_sub(current_date(), 7), '{_WEEKDAYS[up]}')"
-    if not tok.startswith("'"):
-        tok = f"'{tok}'"  # unquoted 2022-01-01 form
-    return f"CAST({tok} AS TIMESTAMP)"
+def for_bounds(spec: str, now: dt.datetime) -> tuple[dt.datetime, dt.datetime | None]:
+    """``[start, end)`` that ``FOR <spec>`` selects, as wall-clock datetimes
+    in the zone of ``now`` (the session time zone); ``end`` is None for an
+    open range.  Relative days count from ``now``'s date, and a named day
+    covers the whole day."""
+    m = _FOR_SPEC.fullmatch(spec.strip())
+    if m is None:
+        raise errors.ProgrammingError(f"unsupported temporal clause: FOR {spec}")
+    today = dt.datetime.combine(now.date(), dt.time())
 
+    def day(token: str) -> dt.datetime:
+        word = token.upper()
+        if word == "TODAY":
+            return today
+        if word == "YESTERDAY":
+            return today - _DAY
+        if word in _WEEKDAYS:  # the latest such weekday up to today
+            return today - _DAY * ((today.weekday() - _WEEKDAYS.index(word)) % 7)
+        try:
+            t = dt.datetime.fromisoformat(token.strip("'"))
+        except ValueError:
+            raise errors.ProgrammingError(f"FOR {spec}: {token} is not a date") from None
+        return t.astimezone(now.tzinfo).replace(tzinfo=None) if t.tzinfo else t
 
-def _norm_end_exclusive(tok: str) -> str:
-    """End bound covering the *whole* named day (the reference reads full
-    date partitions): the exclusive start of the following day."""
-    up = tok.upper()
-    if up == "TODAY":
-        return "date_add(current_date(), 1)"
-    if up == "YESTERDAY":
-        return "current_date()"
-    if up in _WEEKDAYS:
-        return f"date_add(next_day(date_sub(current_date(), 7), '{_WEEKDAYS[up]}'), 1)"
-    if not tok.startswith("'"):
-        tok = f"'{tok}'"
-    return f"CAST({tok} AS TIMESTAMP) + INTERVAL 1 DAY"
+    if m["a"]:
+        return day(m["a"]), day(m["b"]) + _DAY
+    if m["since"]:
+        return day(m["since"]), None
+    if m["days"]:
+        return today - _DAY * int(m["days"]), None
+    if m["range"]:
+        month, year = today.replace(day=1), today.replace(month=1, day=1)
+        last_month = ((month - _DAY).replace(day=1), month)
+        return {
+            "THIS_MONTH": (month, today + _DAY),
+            "LAST_MONTH": last_month,
+            "PREVIOUS_MONTH": last_month,
+            "THIS_YEAR": (year, today + _DAY),
+            "LAST_YEAR": (year.replace(year=year.year - 1), year),
+        }[m["range"].upper()]
+    start = day(m["day"])
+    return start, start + _DAY
 
 
 def _find_top_level(sql: str, word_pattern: str, start: int = 0) -> tuple[int, int]:
@@ -209,55 +189,31 @@ def _find_top_level(sql: str, word_pattern: str, start: int = 0) -> tuple[int, i
     return -1, -1
 
 
-def extract_temporal(sql: str) -> tuple[str, dict[str, tuple[str, str, str]]]:
-    """Strip ``FOR ...`` temporal clauses; return per-*occurrence* marker
-    views mapping to (table, start_inclusive, end_exclusive) filter
-    expressions (Spark SQL fragments; end is "NULL" for open-ended
-    ranges).  Marker-per-occurrence keeps a temporal and a plain
-    reference to the same table in one query independent."""
-    filters: dict[str, tuple[str, str, str]] = {}
+def extract_temporal(sql: str) -> tuple[str, dict[str, tuple[str, str]]]:
+    """Strip ``FOR ...`` temporal clauses; return per-*occurrence* markers
+    mapping to (table, spec), where ``for_bounds(spec, now)`` gives the
+    range.  Marker-per-occurrence keeps a temporal and a plain reference
+    to the same table in one query independent."""
+    refs: dict[str, tuple[str, str]] = {}
 
-    def handle(kind):
-        def sub(m):
-            kw, table = m.group(1), m.group(2)
-            alias = m.group(3) or m.group("post") or ""
-            marker = f"__temporal_{len(filters)}_" + re.sub(r"\W", "_", table)
-            if kind == "between":
-                bounds = (_norm_date(m.group(4)), _norm_end_exclusive(m.group(5)))
-            elif kind == "since":
-                bounds = (_norm_date(m.group(4)), "NULL")
-            elif kind == "last_days":
-                bounds = (f"date_sub(current_date(), {m.group(4)})", "NULL")
-            elif kind == "named_range":
-                token = m.group(4).upper()
-                month = "date_trunc('month', current_date())"
-                year = "date_trunc('year', current_date())"
-                bounds = {
-                    "THIS_MONTH": (month, "date_add(current_date(), 1)"),
-                    "LAST_MONTH": (f"add_months({month}, -1)", month),
-                    "PREVIOUS_MONTH": (f"add_months({month}, -1)", month),
-                    "THIS_YEAR": (year, "date_add(current_date(), 1)"),
-                    "LAST_YEAR": (f"add_months({year}, -12)", year),
-                }[token]
-            else:  # point-in-time: the full named day
-                bounds = (_norm_date(m.group(4)), _norm_end_exclusive(m.group(4)))
-            filters[marker] = (table, *bounds)
-            if not alias:
-                # unqualified references keep resolving under the name the
-                # rest of the statement uses post-rewrite
-                name = f"virtual_{table[1:]}" if table.startswith("$") else table.split(".")[-1]
-                alias = f" AS {name}"
-            return f"{kw} {marker}{alias}"
+    def sub(m):
+        kw, table = m.group(1), m.group(2)
+        alias = m.group(3) or m.group("post") or ""
+        marker = f"__temporal_{len(refs)}_" + re.sub(r"\W", "_", table)
+        refs[marker] = (table, m.group("spec"))
+        if not alias:
+            # unqualified references keep resolving under the name the
+            # rest of the statement uses post-rewrite
+            name = f"virtual_{table[1:]}" if table.startswith("$") else table.split(".")[-1]
+            alias = f" AS {name}"
+        return f"{kw} {marker}{alias}"
 
-        return sub
-
-    for pat, kind in _FOR_PATTERNS:
-        sql = sqltext.sub_outside_literals(pat, handle(kind), sql)
+    sql = sqltext.sub_outside_literals(_FOR_TABLE, sub, sql)
     # FOR on a derived relation ((SELECT ...) AS p FOR '...'): the inner
     # references resolve their own snapshots; with snapshot-consistent
     # (static) virtual data the outer clause is an identity filter
-    sql = sqltext.sub_outside_literals(_SUBQ_FOR, lambda m: m.group(1), sql)
-    return sql, filters
+    sql = sqltext.sub_outside_literals(_FOR_DERIVED, lambda m: m.group(1), sql)
+    return sql, refs
 
 
 # --- operator rewrites ------------------------------------------------------
@@ -551,7 +507,7 @@ def rewrite_generate_series(sql: str) -> str:
 
 
 def extract_path_tables(sql: str) -> tuple[str, dict[str, str]]:
-    """``FROM 'path/file.parquet'`` / ``FROM 's3://...'`` → named views."""
+    """``FROM 'path/file.parquet'`` / ``FROM 's3://...'`` → relation markers."""
     paths: dict[str, str] = {}
 
     def sub(m):

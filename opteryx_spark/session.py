@@ -20,7 +20,9 @@ data-size-gated by Spark itself.
 
 from __future__ import annotations
 
+import datetime as dt
 import os
+from zoneinfo import ZoneInfo
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -56,6 +58,15 @@ _BUILDER_CONF = {
     # the bench's one-line JSON artifact and made BENCH_r04 unparseable
     "spark.ui.showConsoleProgress": "false",
 }
+# the part of _BUILDER_CONF that tune_session applies to a session it did not build
+_RUNTIME_CONF = (
+    "spark.sql.session.timeZone",
+    "spark.sql.adaptive.enabled",
+    "spark.sql.groupByOrdinal",
+    "spark.sql.orderByOrdinal",
+    "spark.sql.ansi.enabled",
+    "spark.sql.legacy.parquet.nanosAsLong",
+)
 
 
 def default_parallelism() -> int:
@@ -110,17 +121,20 @@ def tune_session(spark: SparkSession) -> SparkSession:
     runtime-mutable settings can be applied here (builder-only settings
     like codegen flags are left alone).
     """
-    for k, v in {
-        "spark.sql.session.timeZone": "UTC",
-        "spark.sql.adaptive.enabled": "true",
-        "spark.sql.groupByOrdinal": "true",
-        "spark.sql.orderByOrdinal": "true",
-        "spark.sql.ansi.enabled": "false",
-        # read parquet TIMESTAMP(NANOS) as long; load_table converts to µs
-        "spark.sql.legacy.parquet.nanosAsLong": "true",
-    }.items():
+    for k in _RUNTIME_CONF:
         try:
-            spark.conf.set(k, v)
+            spark.conf.set(k, _BUILDER_CONF[k])
         except Exception:  # pragma: no cover - immutable conf on some builds
             pass
     return spark
+
+
+def session_now(spark: SparkSession) -> dt.datetime:
+    """The current time in the session time zone, which is the zone Spark
+    reads wall-clock timestamp literals in."""
+    tz = spark.conf.get("spark.sql.session.timeZone")
+    try:
+        zone = ZoneInfo(tz)
+    except (KeyError, ValueError):  # a fixed offset: +05:30, Z
+        zone = dt.datetime.strptime(tz, "%z").tzinfo
+    return dt.datetime.now(zone)

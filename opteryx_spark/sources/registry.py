@@ -25,7 +25,8 @@ from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 
-from opteryx_spark import errors
+from opteryx_spark import errors, rewriter
+from opteryx_spark.session import session_now
 
 # extension → (spark format, default options)
 _FORMAT_BY_EXT: dict[str, tuple[str, dict[str, str]]] = {
@@ -421,14 +422,10 @@ class SourceRegistry:
                 # date-partitioned store referenced without FOR: the
                 # reference reads today's partitions only and raises
                 # EmptyDatasetError when there are none
-                import datetime as _dt
-
                 from opteryx_spark.sources import mabel_partitions as _mp
 
-                today = _dt.datetime.now()
-                return _mp.read_for_range(
-                    spark, path, today, today + _dt.timedelta(days=1)
-                )
+                bounds = rewriter.for_bounds("TODAY", session_now(spark))
+                return _mp.read_for_range(spark, path, *bounds)
             if (
                 with_variant
                 and (

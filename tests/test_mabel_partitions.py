@@ -2,12 +2,30 @@
 
 from __future__ import annotations
 
+import contextlib
 import datetime as dt
 import os
+import time
 
 import pytest
 
 from opteryx_spark.sources import mabel_partitions as mp
+
+
+@contextlib.contextmanager
+def local_time_zone(name: str):
+    """The process's local time zone set to ``name`` (``TZ`` + tzset)."""
+    old = os.environ.get("TZ")
+    os.environ["TZ"] = name
+    time.tzset()
+    try:
+        yield
+    finally:
+        if old is None:
+            del os.environ["TZ"]
+        else:
+            os.environ["TZ"] = old
+        time.tzset()
 
 
 @pytest.fixture(scope="module")
@@ -63,6 +81,8 @@ def _mabel_store(root) -> str:
     - ``hourly``: 2024-01-01 has one row in each of two ``by_hour`` hours.
     - ``mixed``: 2020-02-03 has a ``by_hour`` and a foreign ``by_*`` segment.
     - ``dated``: one past day only, so today has no partition.
+    - ``today``: today (in the session time zone, UTC) has one row in each
+      of two ``by_hour`` hours.
     """
     import pyarrow as pa
     import pyarrow.parquet as pq
@@ -90,18 +110,46 @@ def _mabel_store(root) -> str:
     leaf(*day("mixed", 2020, 2, 3), "by_hour", "hour=00")
     leaf(*day("mixed", 2020, 2, 3), "by_minute", "minute=00")
     leaf(*day("dated", 2020, 1, 1))
+    today = dt.datetime.now(dt.timezone.utc).date()
+    leaf(*day("today", today.year, today.month, today.day), "by_hour", "hour=00")
+    leaf(*day("today", today.year, today.month, today.day), "by_hour", "hour=01")
     return str(root)
+
+
+def _reftest(spark, tmp_path):
+    import opteryx_spark as ox
+    from opteryx_spark.sources.registry import register_store
+
+    register_store("reftest", root=_mabel_store(tmp_path))
+    return ox.connect(spark=spark)
 
 
 def test_frame_selection_and_hour_segments(spark, tmp_path):
     """Reference fixture layouts: latest complete non-ignored frame wins,
     by_hour segments restrict to the FOR hour, foreign by_* raises."""
-    import opteryx_spark as ox
-    from opteryx_spark import errors
-    from opteryx_spark.sources.registry import register_store
+    _frame_selection(_reftest(spark, tmp_path))
 
-    register_store("reftest", root=_mabel_store(tmp_path))
-    conn = ox.connect(spark=spark)
+
+def test_frame_selection_in_new_york_time(spark, tmp_path):
+    """The same statements with the process in New York time: FOR names
+    wall-clock days of the session time zone, whatever the process's."""
+    conn = _reftest(spark, tmp_path)
+    with local_time_zone("America/New_York"):
+        _frame_selection(conn)
+
+
+def test_unqualified_reference_reads_today(spark, tmp_path):
+    """A Mabel dataset named without FOR reads what FOR TODAY reads: every
+    hour of today, not only the current one."""
+    conn = _reftest(spark, tmp_path)
+    sql = "SELECT COUNT(*) AS n FROM reftest.partitioned.today"
+    for_today = conn.cursor().execute(sql + " FOR TODAY").fetchone()[0]
+    assert conn.cursor().execute(sql).fetchone()[0] == for_today == 2
+
+
+def _frame_selection(conn):
+    from opteryx_spark import errors
+
     n = conn.cursor().execute(
         "SELECT COUNT(*) AS n FROM reftest.partitioned.framed FOR '2021-03-28'"
     ).fetchone()[0]

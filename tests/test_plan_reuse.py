@@ -87,6 +87,22 @@ def test_map_is_bounded_first_in_first_out(conn, monkeypatch):
 # -- misses -------------------------------------------------------------------
 
 
+def test_broadcast_join_is_not_remembered(conn):
+    """A run that broadcast a relation would pin it on the driver heap."""
+    sql = (
+        "SELECT n_name, COUNT(*) AS n FROM customer JOIN nation "
+        "ON c_nationkey = n_nationkey GROUP BY 1 ORDER BY 1"
+    )
+    cur = conn.cursor().execute(sql)
+    rows = cur.fetchall()
+    assert "BroadcastHashJoin" in cur.df._jdf.queryExecution().executedPlan().toString()
+    assert _rows(conn, sql) == rows
+    assert _reused(conn) == 0 and not conn._plans
+    # a single-table statement still hits
+    assert _rows(conn, GROUPED) == _rows(conn, GROUPED)
+    assert _reused(conn) == 1 and len(conn._plans) == 1
+
+
 def test_rewritten_file_misses(conn, tmp_path):
     path = tmp_path / "t.parquet"
     sql = f"SELECT SUM(x) FROM '{path}'"

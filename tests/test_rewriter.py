@@ -2,7 +2,12 @@
 
 from __future__ import annotations
 
+import datetime as dt
+
 from opteryx_spark import rewriter
+
+# a fixed statement time in the session time zone: Wednesday 2024-03-13
+NOW = dt.datetime(2024, 3, 13, 15, 30, tzinfo=dt.timezone.utc)
 
 
 def test_strip_comments():
@@ -28,22 +33,28 @@ def test_temporal_between():
         "SELECT * FROM events FOR DATES BETWEEN '2024-01-01' AND '2024-02-01' WHERE x=1"
     )
     assert "FOR" not in sql
-    (table, start, end), = filters.values()
+    (table, spec), = filters.values()
     assert table == "events"
-    assert start == "CAST('2024-01-01' AS TIMESTAMP)"
+    start, end = rewriter.for_bounds(spec, NOW)
+    assert start == dt.datetime(2024, 1, 1)
     # end bound covers the whole named day (exclusive start of next day)
-    assert end == "CAST('2024-02-01' AS TIMESTAMP) + INTERVAL 1 DAY"
+    assert end == dt.datetime(2024, 2, 2)
 
 
 def test_temporal_point_and_last_days():
     sql, f1 = rewriter.extract_temporal("SELECT * FROM events FOR '2024-01-05'")
-    (t1, s1, e1), = f1.values()
-    assert (t1, s1) == ("events", "CAST('2024-01-05' AS TIMESTAMP)")
-    assert e1 == "CAST('2024-01-05' AS TIMESTAMP) + INTERVAL 1 DAY"
+    (t1, s1), = f1.values()
+    assert t1 == "events"
+    assert rewriter.for_bounds(s1, NOW) == (dt.datetime(2024, 1, 5), dt.datetime(2024, 1, 6))
+    # relative forms count whole days back from the statement's date
     sql, f2 = rewriter.extract_temporal("SELECT * FROM events FOR LAST 7 DAYS")
-    assert "date_sub" in next(iter(f2.values()))[1]
+    (t2, s2), = f2.values()
+    assert t2 == "events"
+    assert rewriter.for_bounds(s2, NOW) == (dt.datetime(2024, 3, 6), None)
     sql, f3 = rewriter.extract_temporal("SELECT * FROM events FOR TODAY")
-    assert next(iter(f3.values()))[1] == "current_date()"
+    (t3, s3), = f3.values()
+    assert t3 == "events"
+    assert rewriter.for_bounds(s3, NOW) == (dt.datetime(2024, 3, 13), dt.datetime(2024, 3, 14))
 
 
 def test_json_operators():
@@ -117,7 +128,7 @@ def test_full_rewrite_pipeline():
     )
     assert "get_json_object" in res.sql
     assert "x = 7" in res.sql
-    assert any(t == "events" for t, _, _ in res.temporal_filters.values())
+    assert any(t == "events" for t, _ in res.temporal_filters.values())
 
 
 def test_temporal_on_join_clause():
@@ -125,7 +136,7 @@ def test_temporal_on_join_clause():
         "SELECT * FROM orders o JOIN events FOR LAST 7 DAYS ON o.k = events.k"
     )
     assert "FOR LAST" not in sql
-    assert any(t == "events" for t, _, _ in filters.values())
+    assert any(t == "events" for t, _ in filters.values())
 
 
 def test_dollar_not_rewritten_in_literals():
@@ -197,7 +208,7 @@ def test_temporal_and_plain_reference_stay_independent():
         "SELECT * FROM events FOR '2024-01-05' e JOIN events x ON e.k = x.k"
     )
     # only the FOR-qualified occurrence is rewritten to a marker view
-    (marker, (table, _, _)), = filters.items()
+    (marker, (table, _)), = filters.items()
     assert table == "events" and marker in sql
     assert " JOIN events x" in sql
 
